@@ -3264,24 +3264,33 @@ object DuckDialect {
         // collected values. Estimates, refusal thresholds and the
         // probe-failure pass-through contract are unchanged; the gate
         // stays paid per statement, as documented.
-        val est =
+        val recorded = scala.collection.mutable.ArrayBuffer.empty[String]
+        val vals: Option[Map[Int, Double]] =
           try {
-            val recorded = scala.collection.mutable.ArrayBuffer.empty[String]
             chainPairsAndBound(spark, p, { q => recorded += q; 0.0 })
-            if (recorded.isEmpty) 0.0
+            if (recorded.isEmpty) None
             else {
               val fused = recorded.zipWithIndex.map { case (q, i) =>
                 s"SELECT $i AS __pi, * FROM (${rewrite(q)}) __gp$i"
               }.mkString(" UNION ALL ")
-              val vals = spark.sql(fused).collect().map { r =>
+              Some(spark.sql(fused).collect().map { r =>
                 r.getInt(0) -> (if (r.isNullAt(1)) 0.0 else r.getDouble(1))
-              }.toMap
-              var i = -1
-              chainPairsAndBound(spark, p,
-                { _ => i += 1; vals.getOrElse(i, 0.0) })._1
+              }.toMap)
             }
           }
-          catch { case scala.util.control.NonFatal(_) => 0.0 }
+          catch { case scala.util.control.NonFatal(_) => None }
+        // The replay runs outside the pass-through: a walk that asks for
+        // a probe the recording did not make, or stops short of the
+        // recorded ones, is a bug in the walk, not a probe failure, and
+        // must not read as a zero-pair estimate.
+        val est = vals.fold(0.0) { vs =>
+          var i = -1
+          val e = chainPairsAndBound(spark, p, { _ => i += 1; vs(i) })._1
+          if (i + 1 != recorded.size) throw new IllegalStateException(
+            s"ASOF guard replay consumed ${i + 1} probe values, the " +
+              s"recording made ${recorded.size}")
+          e
+        }
         if (est > maxPairs)
           throw new IllegalArgumentException(
             f"ASOF JOIN chain refused at this scale: a step of the " +

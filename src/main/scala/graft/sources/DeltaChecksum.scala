@@ -27,9 +27,12 @@ import org.apache.spark.sql.SparkSession
   * their commits ([[DeltaMaintenance.cleanupLog]]).
   *
   * At 100 TB the verify is free (two longs compared against totals the
-  * replay already accumulated); the write costs one snapshot of the
-  * just-committed version — checkpoint + tail, the same bounded work
-  * any reader pays. Disable writes with
+  * replay already accumulated). The write costs one snapshot of the
+  * just-committed version: a log listing plus the commits after the
+  * snapshot [[DeltaLog]] last replayed for the table, which for a writer
+  * is its own pre-commit read, so one commit JSON. Only a cold cache
+  * (first touch of the table, a stamp mismatch) pays checkpoint + tail,
+  * the same bounded work any reader pays. Disable writes with
   * `spark.graft.delta.writeChecksum=false`.
   */
 object DeltaChecksum {

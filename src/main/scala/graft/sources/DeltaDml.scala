@@ -26,7 +26,7 @@ object DeltaDml {
     // delta.enableDeletionVectors=true switches DELETE to merge-on-read
     // (positions to a sidecar, no data rewrite) — see [[DeltaDv]].
     if (DeltaDv.enabled(snap0.configuration))
-      DeltaDv.delete(spark, tablePath, condition)
+      DeltaDv.delete(spark, tablePath, snap0, condition)
     else rewrite(spark, tablePath, condition, df => df.filter(not(condition)),
       operation = "DELETE", snapHint = Some(snap0),
       cdcOf = hit => hit.filter(condition)
@@ -47,7 +47,7 @@ object DeltaDml {
     val snap0 = DeltaLog.snapshot(spark, tablePath)
     DeltaLog.checkAppendOnly(snap0, "UPDATE")
     if (DeltaDv.enabled(snap0.configuration))
-      return DeltaDv.update(spark, tablePath, condition, assignments)
+      return DeltaDv.update(spark, tablePath, snap0, condition, assignments)
     val byName = assignments.toMap
     // Generated columns not explicitly assigned are RECOMPUTED on the
     // hit rows from their recorded expression, evaluated AFTER the
@@ -173,7 +173,9 @@ object DeltaDml {
     DeltaLog.checkWritable(snap)
     if (matchedUpdate.nonEmpty || matchedDelete.nonEmpty)
       DeltaLog.checkAppendOnly(snap, "MERGE with matched clauses")
-    val target = DeltaLog.read(spark, tablePath)
+    // the insert anti-join reads the SAME version the removes are
+    // decided against
+    val target = DeltaLog.scanFiles(spark, snap, snap.filePaths)
 
     val uriToRel: Map[String, String] =
       snap.files.map { a =>

@@ -190,10 +190,11 @@ object DeltaDv {
   }
 
   /** The merge-on-read DELETE. Called by [[DeltaDml.delete]] when the
-    * table property opts in. */
+    * table property opts in, with the snapshot that decision was made
+    * against (one version for the whole statement). */
   private[sources] def delete(spark: SparkSession, tablePath: String,
+      snap: DeltaLog.Snapshot,
       condition: org.apache.spark.sql.Column): DmlResult = {
-    val snap = DeltaLog.snapshot(spark, tablePath)
     DeltaLog.checkWritable(snap)
     if (snap.files.isEmpty) return DmlResult(snap.version, 0, 0L)
 
@@ -222,11 +223,12 @@ object DeltaDv {
     * out of their files and the UPDATED versions append as new files —
     * cost proportional to updated ROWS, not hit files (a one-row update
     * in a 1 GB file writes a one-row file plus a one-position sidecar).
-    * Called by [[DeltaDml.update]] when the table property opts in. */
+    * Called by [[DeltaDml.update]] when the table property opts in,
+    * with the snapshot that decision was made against. */
   private[sources] def update(spark: SparkSession, tablePath: String,
+      snap: DeltaLog.Snapshot,
       condition: org.apache.spark.sql.Column,
       assignments: Seq[(String, org.apache.spark.sql.Column)]): DmlResult = {
-    val snap = DeltaLog.snapshot(spark, tablePath)
     DeltaLog.checkWritable(snap)
     if (snap.files.isEmpty) return DmlResult(snap.version, 0, 0L)
 

@@ -4,7 +4,7 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
@@ -31,6 +31,20 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * rejected rather than misread. Partitioned tables are supported via
   * hive-style file layout (`col=val/part-….parquet`), which is what
   * [[DeltaWrite]] and Spark's own `partitionBy` produce.
+  *
+  * Snapshots are incremental, as in Delta's own client: a JVM-wide LRU
+  * of `SnapshotCacheSize` (64) entries maps each table's qualified log
+  * directory to the newest snapshot replayed from it, stamped with the
+  * (length, modification time) of that version's commit JSON as the
+  * log listing reports it. A later [[snapshot]] whose listing still
+  * shows that stamp and every commit from there to its target applies
+  * only those commits on top of the cached state; anything else (time
+  * travel below the cached version, a stamp mismatch from a table
+  * recreated at the same path, the cached commit cleaned away, a gap in
+  * the listed commits) replays cold from the newest checkpoint. The
+  * cache only replaces work; it is not a conflict check. Every call
+  * still lists the log first, and every returned snapshot still passes
+  * the reader-feature gate and the version-checksum tripwire.
   */
 object DeltaLog {
 
@@ -305,24 +319,26 @@ object DeltaLog {
         throw new IllegalStateException(s"no Delta commits under $tablePath"))
   }
 
-  /** List the log: commit JSONs by version, plus COMPLETE checkpoints by
-    * version. A multi-part checkpoint (`<v>.checkpoint.<i>.<n>.parquet`)
-    * is trusted only when all n distinct parts are present — a reader
-    * racing the part-rename publish (or landing after a crash mid-write)
-    * must not bootstrap from a partial live-file set: replay starts at
-    * v+1, so missing adds would be silent durable data loss, not an
-    * error. Incomplete checkpoints are simply invisible; replay falls
+  /** List the log: commit JSONs by version (their listed status, whose
+    * length and modification time stamp the snapshot cache), plus
+    * COMPLETE checkpoints by version. A multi-part checkpoint
+    * (`<v>.checkpoint.<i>.<n>.parquet`) is trusted only when all n
+    * distinct parts are present — a reader racing the part-rename
+    * publish (or landing after a crash mid-write) must not bootstrap
+    * from a partial live-file set: replay starts at v+1, so missing adds
+    * would be silent durable data loss, not an error. Incomplete checkpoints are simply invisible; replay falls
     * back to the next older complete checkpoint or the full commit log. */
   private[sources] def listLog(spark: SparkSession, tablePath: String)
-      : (FileSystem, Map[Long, Path], Map[Long, Seq[Path]],
+      : (FileSystem, Map[Long, FileStatus], Map[Long, Seq[Path]],
          Map[(Long, Long), Path]) = {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(dir))
       throw new IllegalArgumentException(s"not a Delta table (no _delta_log): $tablePath")
-    val entries = fs.listStatus(dir).map(_.getPath)
-    val commits = entries.flatMap(p => p.getName match {
-      case VersionRe(v) => Some(v.toLong -> p)
+    val statuses = fs.listStatus(dir)
+    val entries = statuses.map(_.getPath)
+    val commits = statuses.flatMap(st => st.getPath.getName match {
+      case VersionRe(v) => Some(v.toLong -> st)
       case _ => None
     }).toMap
     // log-compaction files, from the SAME listing (LIST is a metered
@@ -411,10 +427,10 @@ object DeltaLog {
     val times: Map[Long, Long] =
       (checkpoints.map { case (v, ps) =>
         v -> ps.map(p => fs.getFileStatus(p).getModificationTime).max
-      } ++ commits.map { case (v, p) =>  // commit mtime wins over checkpoint
-        v -> fs.getFileStatus(p).getModificationTime
-      } ++ commits.flatMap { case (v, p) => // in-commit timestamp wins over all
-        readIct(fs, p).map(v -> _)
+      } ++ commits.map { case (v, st) =>  // commit mtime wins over checkpoint
+        v -> st.getModificationTime
+      } ++ commits.flatMap { case (v, st) => // in-commit timestamp wins over all
+        readIct(fs, st.getPath).map(v -> _)
       }).toMap
     val at = times.filter(_._2 <= ts.getTime).keys.maxOption
     at.getOrElse(throw new IllegalArgumentException(
@@ -465,7 +481,24 @@ object DeltaLog {
     if (!fs.exists(p)) None else readIct(fs, p)
   }
 
-  /** Replay the log to `versionAsOf` (default: latest). */
+  /** Entries of the snapshot cache (see the object doc). */
+  private val SnapshotCacheSize = 64
+
+  /** (length, modification time) of a commit JSON, as listed. */
+  private type Stamp = (Long, Long)
+
+  /** Qualified log directory → newest snapshot replayed from it and
+    * the stamp of its version's commit JSON; access-ordered, so the
+    * least recently used table is evicted first. Guarded by itself. */
+  private val snapshotCache =
+    new java.util.LinkedHashMap[String, (Snapshot, Stamp)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, (Snapshot, Stamp)]): Boolean =
+        size() > SnapshotCacheSize
+    }
+
+  /** Replay the log to `versionAsOf` (default: latest), incrementally
+    * from the cached snapshot of this log when it is still valid. */
   def snapshot(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): Snapshot = {
     val (fs, commits, checkpoints, compacted) = listLog(spark, tablePath)
@@ -477,6 +510,39 @@ object DeltaLog {
     val target = versionAsOf.getOrElse(latest)
     require(target <= latest, s"version $target > latest $latest for $tablePath")
 
+    val key = fs.makeQualified(logDir(tablePath)).toString
+    def stampOf(v: Long): Option[Stamp] =
+      commits.get(v).map(st => (st.getLen, st.getModificationTime))
+    def valid(entry: (Snapshot, Stamp)): Boolean =
+      stampOf(entry._1.version).contains(entry._2)
+    val seed = snapshotCache.synchronized(Option(snapshotCache.get(key)))
+      .collect { case e @ (s, _) if s.version <= target && valid(e) &&
+        (s.version + 1 to target).forall(commits.contains) => s }
+    val snap = seed match {
+      case Some(s) if s.version == target => s.copy(tablePath = tablePath)
+      case _ => replay(spark, fs, tablePath, target, seed, commits,
+        checkpoints, compacted)
+    }
+    checkReaderFeatures(snap.protocol, tablePath)
+    // version-checksum tripwire: replayed totals must match the crc the
+    // committer recorded for this version, when one exists
+    DeltaChecksum.verify(spark, snap)
+    // keep the newest valid snapshot: time travel never evicts it
+    stampOf(target).foreach { st => snapshotCache.synchronized {
+      if (!Option(snapshotCache.get(key))
+          .exists(e => e._1.version > target && valid(e)))
+        snapshotCache.put(key, (snap, st))
+    }}
+    snap
+  }
+
+  /** Replay `target`'s state: on top of `seed` (a cached snapshot whose
+    * later commits up to `target` are all listed) when given, else from
+    * the newest checkpoint at or before `target`, else from version 0. */
+  private def replay(spark: SparkSession, fs: FileSystem, tablePath: String,
+      target: Long, seed: Option[Snapshot], commits: Map[Long, FileStatus],
+      checkpoints: Map[Long, Seq[Path]],
+      compacted: Map[(Long, Long), Path]): Snapshot = {
     val live = mutable.LinkedHashMap[String, AddEntry]()
     val txns = mutable.Map[String, Long]()
     val domains = mutable.LinkedHashMap[String, String]()
@@ -485,6 +551,15 @@ object DeltaLog {
     var config: Map[String, String] = Map.empty
     var mdId: Option[String] = None
     var protocolInfo: TableProtocol = TableProtocol()
+    seed.foreach { s =>
+      s.files.foreach(a => live(a.path) = a)
+      txns ++= s.txns
+      domains ++= s.domainMetadata
+      partCols = s.partitionColumns
+      config = s.configuration
+      mdId = s.metaDataId
+      protocolInfo = s.protocol
+    }
 
     // One JSON action line (commit, compacted-log, or V2 JSON-manifest
     // form) applied to the accumulating state. `sidecarSink` collects
@@ -558,10 +633,11 @@ object DeltaLog {
       if (sc != null) sidecarSink.foreach(_ += sc.get("path").asText())
     }
 
-    // Start from the newest checkpoint at-or-before the target: its rows
-    // are the complete live state at that version (removes in it are
-    // vacuum tombstones, not pending deletes).
-    val ckptVersion = checkpoints.keys.filter(_ <= target).maxOption
+    // Without a seed, start from the newest checkpoint at-or-before the
+    // target: its rows are the complete live state at that version
+    // (removes in it are vacuum tombstones, not pending deletes).
+    val ckptVersion =
+      if (seed.isDefined) None else checkpoints.keys.filter(_ <= target).maxOption
     ckptVersion.foreach { v =>
       def processAdd(a: Row): Unit = {
         val path = a.getAs[String]("path")
@@ -671,7 +747,7 @@ object DeltaLog {
       }
     }
 
-    val from = ckptVersion.map(_ + 1).getOrElse(0L)
+    val from = seed.map(_.version).orElse(ckptVersion).map(_ + 1).getOrElse(0L)
     // Log-compaction files (`<s>.<e>.compacted.json`, protocol-optional)
     // hold the action reconciliation of their whole range in commit-JSON
     // form. Replay prefers the LONGEST compacted file COVERING the
@@ -699,23 +775,20 @@ object DeltaLog {
         case None =>
           replayFiles += commits.getOrElse(cursor,
             throw new IllegalStateException(
-              s"missing Delta commit $cursor under $tablePath"))
+              s"missing Delta commit $cursor under $tablePath")).getPath
           cursor += 1
       }
     }
     replayFiles.foreach(commit => withLogLines(fs, commit)(
       _.foreach(line => processNode(mapper.readTree(line)))))
 
-    require(schemaString != null, s"no metaData action in log of $tablePath")
-    checkReaderFeatures(protocolInfo, tablePath)
-    val snap = Snapshot(target,
-      DataType.fromJson(schemaString).asInstanceOf[StructType],
-      partCols, live.values.toSeq, tablePath, txns.toMap, config, mdId,
-      protocolInfo, domains.toMap)
-    // version-checksum tripwire: replayed totals must match the crc the
-    // committer recorded for this version, when one exists
-    DeltaChecksum.verify(spark, snap)
-    snap
+    require(schemaString != null || seed.isDefined,
+      s"no metaData action in log of $tablePath")
+    val schema = Option(schemaString)
+      .map(DataType.fromJson(_).asInstanceOf[StructType])
+      .getOrElse(seed.get.schema)
+    Snapshot(target, schema, partCols, live.values.toSeq, tablePath,
+      txns.toMap, config, mdId, protocolInfo, domains.toMap)
   }
 
   /** Read a Delta table as a DataFrame (optionally time-traveled). The

@@ -558,7 +558,7 @@ object DeltaMaintenance {
       val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
       val acc = scala.collection.mutable.Map[String, Long]()
       commits.values.foreach { c =>
-        DeltaLog.withLogLines(lfs, c)(_.foreach { line =>
+        DeltaLog.withLogLines(lfs, c.getPath)(_.foreach { line =>
           val rm = mapper.readTree(line).get("remove")
           if (rm != null) {
             val p = fs.makeQualified(new Path(tablePath,

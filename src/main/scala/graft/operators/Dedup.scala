@@ -1275,19 +1275,14 @@ object Dedup {
           .select(col("a"), col("b"), col("pa"), col("pb"),
             greatest(length(col("pa")), length(col("pb"))).cast("long")
               .as("maxlen"))
-          // r16 cheap pre-gates (guide §1.2 per-task work, VERDICT r15
-          // item 4) — both value-identical by the DP's own contract:
-          //   - equality: near-dup prefixes are often BYTE-IDENTICAL
-          //     (dist 0) — one memcmp replaces the whole banded DP;
-          //   - length difference: dist ≥ |len(pa)−len(pb)|, so a pair
-          //     whose length gap exceeds the band can only return -1 —
-          //     skip the DP and emit the -1 directly (the banded
-          //     builtin early-exits on this too; the explicit predicate
-          //     keeps the gate visible in the plan and saves the call).
+          // r16 cheap pre-gate (guide §1.2 per-task work, VERDICT r15
+          // item 4), value-identical by the DP's own contract:
+          // near-dup prefixes are often BYTE-IDENTICAL (dist 0) — one
+          // memcmp replaces the whole banded DP. A length gap beyond the
+          // band needs no gate of its own: the distance is at least the
+          // gap, so the banded builtin returns -1 there anyway.
           .select(col("a"), col("b"), col("pa"), col("pb"), col("maxlen"),
             when(col("pa") === col("pb"), lit(0))
-              .when(abs(length(col("pa")) - length(col("pb"))) >
-                (col("maxlen") / lit(4)).cast("int"), lit(-1))
               .otherwise(call_function("levenshtein", col("pa"), col("pb"),
                 (col("maxlen") / lit(4)).cast("int"))).as("lev3"))
           .select(col("a"), col("b"),

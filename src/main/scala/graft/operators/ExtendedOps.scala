@@ -191,10 +191,12 @@ object ExtendedOps {
       |GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")
 
   // q171 ASOF JOIN statement: the self-asof "previous document in my
-  // source" shape — bridged to an equi+range join with a synthesized
-  // per-left-row id and a row_number()=1 pick (one shuffle on the equi
-  // key; the range side is tie-free on the unique doc_id, so the pick
-  // is deterministic). CAST(l.doc_id) keeps d BIGINT in both engines.
+  // source" shape — a one-member chain (DuckDialect.asofChainExpand):
+  // an equi+range join with a synthesized per-left-row id and a
+  // row_number()=1 pick (one shuffle on the equi key; the range side is
+  // tie-free on the unique doc_id, so the pick is deterministic), gated
+  // by the exact equi-group pair probe. CAST(r.doc_id) keeps the picked
+  // columns BIGINT in both engines.
   private val AsofSql: String =
     """SELECT l.doc_id AS d, CAST(r.doc_id AS BIGINT) AS prev_doc,
       |CAST(r.n_chars AS BIGINT) AS prev_chars
@@ -206,8 +208,8 @@ object ExtendedOps {
   // q196 ASOF multi-join CHAIN (r14, VERDICT r13 item 3): q171's
   // tie-free self-asof extended one step — "previous document in my
   // source, then the previous of THAT" — with the second join
-  // referencing the FIRST pick's alias (the chain property the
-  // single-join bridge could not scope) and spelled ASOF LEFT with the
+  // referencing the FIRST pick's alias (the chain property: later ONs
+  // see every earlier alias) and spelled ASOF LEFT with the
   // inequality flipped (q.doc_id < p.doc_id) to exercise side
   // normalization and null-extension. Each step bridges to a nested
   // equi+range row_number pick over a schema-prefixed flattening
@@ -309,13 +311,13 @@ object ExtendedOps {
       .stripMargin.replace("\n", " ")
 
   // q203 NESTED asof (r15 third pass): the wrap-then-aggregate shape —
-  // an ASOF join inside a DERIVED TABLE with a GROUP BY outside. The
-  // session-aware pre-pass (DuckDialect.expandNestedAsof) expands the
-  // subquery body before the outer statement parses; previously this
-  // died on a raw Spark parse error (the chain bridge sees only
-  // top-level shapes and the textual single bridge anchors at the
-  // statement's FROM). doc_id unique ⇒ the pick is tie-free; the
-  // oracle runs the identical text natively.
+  // an ASOF join inside a DERIVED TABLE with a GROUP BY outside.
+  // DuckDialect.expandAsof expands parenthesized SELECT/WITH groups
+  // deepest-first through the same chain expansion (and scale guard)
+  // as a top-level statement, so the subquery body arrives expanded;
+  // the pick sits inside its own derived table, so the outer aggregate
+  // never meets the row_number. doc_id unique ⇒ the pick is tie-free;
+  // the oracle runs the identical text natively.
   private val AsofNestedSql: String =
     """SELECT s.source, CAST(COUNT(*) AS BIGINT) AS n,
       |CAST(SUM(s.prev) AS BIGINT) AS sum_prev

@@ -4466,7 +4466,7 @@ object DuckDialect {
     * user-facing SQL entry point accepts the reference's dialect.
     *
     * Before the first attempt the [[graft.functions.DuckCompat]] names
-    * register into the session (idempotent map-puts): the constructs a
+    * register into the session once: the constructs a
     * TEXT rewrite cannot bridge — type-ambiguous `len`, `list_sum`/
     * `list_avg`/`list_aggregate`, 3-arg `date_diff`, 2-arg
     * `array_length`, non-literal `regexp_full_match` patterns — resolve

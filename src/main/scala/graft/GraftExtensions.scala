@@ -7,9 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions._
 
-/** Session-extension entry point: registers every graft native
-  * expression at session build time, so a user enables the whole
-  * library with
+/** Session-extension entry point and the ONE table of graft SQL
+  * function names. A user enables them with
   *
   * {{{
   *   SparkSession.builder()
@@ -17,11 +16,10 @@ import graft.functions._
   *     // or .withExtensions(new GraftExtensions)
   * }}}
   *
-  * and the functions resolve from plain SQL (`SELECT graft_cosine(a,b)`)
-  * in every session of that context — the idiomatic alternative to the
-  * per-session `X.register(spark)` calls the operator modules use
-  * internally (kept for test ergonomics; both routes build the same
-  * expressions).
+  * and these names resolve from plain SQL (`SELECT graft_cosine(a,b)`)
+  * in every session of that context. The DataFrame route needs no
+  * registration: each Column helper in `graft.functions` builds its
+  * expression directly, the same nodes these builders produce.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

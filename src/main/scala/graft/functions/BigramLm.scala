@@ -2,12 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -87,8 +87,6 @@ case class BigramLmBits(child: Expression, model: Expression)
 }
 
 object BigramLmBits {
-  private val FnName = "graft_bigram_lm_bits"
-
   /** Decoded model: `words` sorted by UTF8 binary order (class index =
     * position; '#unk' = index v), context counts `cu` (length v+1),
     * transition counts as sorted sparse int keys u·(v+1)+v', and the
@@ -167,10 +165,6 @@ object BigramLmBits {
     new Model(words, cu, keys, counts, smooth)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => BigramLmBits(exprs.head, exprs(1)), "scala_udf")
-
   def bigramLmBits(words: Column, model: Column): Column =
-    call_function(FnName, words, model)
+    column(BigramLmBits(expression(words), expression(model)))
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import java.io.ByteArrayInputStream
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.util.sketch.BloomFilter
 
@@ -74,15 +74,8 @@ case class BloomContains(left: Expression, right: Expression)
 }
 
 object BloomContains {
-  private val FnName = "graft_bloom_contains"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => BloomContains(exprs.head, exprs(1)), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def bloomContains(hash: Column, filterBytes: Column): Column =
-    call_function(FnName, hash, filterBytes)
+    column(BloomContains(expression(hash), expression(filterBytes)))
 
   /** Serialize a driver-side sketch for embedding as a binary literal. */
   def serialize(bf: BloomFilter): Array[Byte] = {

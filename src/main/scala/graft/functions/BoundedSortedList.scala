@@ -2,7 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -146,18 +147,8 @@ object BoundedSortedList {
     }
   }
 
-  private val FnName = "graft_bounded_sorted_list"
-
   /** Aggregate Column: the `cap` smallest distinct values of `c`,
-    * ascending. Requires [[register]] on the session. */
+    * ascending. */
   def boundedSortedList(c: Column, cap: Int): Column =
-    org.apache.spark.sql.functions.call_function(FnName, c,
-      org.apache.spark.sql.functions.lit(cap))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => BoundedSortedList(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "scala_udf")
+    column(BoundedSortedList(expression(c), cap).toAggregateExpression())
 }

@@ -2,14 +2,14 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -160,20 +160,11 @@ case class TopBigramsByCount(
 }
 
 object TopBigramsByCount {
-  private val FnName = "graft_top_bigrams_by_count"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => TopBigramsByCount(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "scala_udf")
-
   /** Aggregate Column: the k packed bigrams with the largest corpus
     * counts, ties to the smaller packed key (≡ the binary-smaller
-    * bigram string). Requires [[register]] on the session. */
+    * bigram string). */
   def topBigrams(text: Column, k: Int): Column =
-    call_function(FnName, text, org.apache.spark.sql.functions.lit(k))
+    column(TopBigramsByCount(expression(text), k).toAggregateExpression())
 }
 
 /** Per-document (total, in-model) bigram counts against a FIXED packed
@@ -229,13 +220,6 @@ case class BigramModelScore(left: Expression, right: Expression)
 }
 
 object BigramModelScore {
-  private val FnName = "graft_bigram_model_score"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => BigramModelScore(exprs.head, exprs(1)), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def score(text: Column, packedModel: Column): Column =
-    call_function(FnName, text, packedModel)
+    column(BigramModelScore(expression(text), expression(packedModel)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedLit}
 import org.apache.spark.sql.types._
 
 /** Cosine similarity of one vector against a BOUNDED literal matrix —
@@ -93,19 +93,6 @@ case class CosineAll(child: Expression, matrix: Seq[Seq[Double]])
 }
 
 object CosineAll {
-  private val FnName = "graft_cosine_all"
-
-  /** Decode an `array<array<double>>` literal (evaluated at function
-    * registration, like WordShingles' n) into matrix rows — shared by
-    * every panel primitive so their literal contracts stay in lockstep. */
-  private[functions] def decodeMatrix(e: Expression): IndexedSeq[IndexedSeq[Double]] = {
-    val m = e.eval().asInstanceOf[ArrayData]
-    (0 until m.numElements()).map { i =>
-      val r = m.getArray(i)
-      (0 until r.numElements()).map(r.getDouble)
-    }
-  }
-
   /** Row norms in CosineSim's index-order summation. */
   private[functions] def normsOf(rows: Array[Array[Double]]): Array[Double] =
     rows.map { r =>
@@ -114,14 +101,8 @@ object CosineAll {
       math.sqrt(nb)
     }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => CosineAll(exprs.head, decodeMatrix(exprs(1))),
-      "built-in")
-
-  /** Column API: requires register(spark) once per session. The matrix
-    * rides along as an array-of-array literal (driver-bounded model
-    * metadata, like the IVF centroid literals). */
+  /** The matrix is a constructor parameter (driver-bounded model
+    * metadata, like the IVF centroid cache). */
   def cosineAll(vec: Column, matrix: Seq[Seq[Double]]): Column =
-    call_function(FnName, vec, typedLit(matrix))
+    column(CosineAll(expression(vec), matrix))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native cosine similarity over two `array<float>`/`array<double>`
@@ -112,12 +112,6 @@ case class CosineSim(left: Expression, right: Expression)
 }
 
 object CosineSim {
-  private val FnName = "graft_cosine"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => CosineSim(exprs.head, exprs(1)), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def cosineSim(a: Column, b: Column): Column = call_function(FnName, a, b)
+  def cosineSim(a: Column, b: Column): Column =
+    column(CosineSim(expression(a), expression(b)))
 }

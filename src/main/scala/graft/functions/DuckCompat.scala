@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.{FunctionRegistry, TypeCheckResult}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -796,14 +796,31 @@ object DuckCompat {
     n
   }
 
-  /** Idempotent per-session registration of the DuckDB-compat names.
+  /** Function registries that already hold these names. Keyed by
+    * registry, not by JVM: the table-function builders close over their
+    * session, and a cloned session gets a registry of its own. Weak, so
+    * a dropped session's registry can be collected. */
+  private val registered =
+    new java.util.WeakHashMap[FunctionRegistry, java.lang.Boolean]()
+
+  /** Idempotent per-session registration of the DuckDB-compat names:
+    * the first call on a session puts them, later calls do nothing (a
+    * re-put would log "replaced a previously registered function" for
+    * every name, on every statement).
     * NOTE: `len` SHADOWS a Spark builtin alias inside the session —
     * deliberately: it keeps Spark's semantics for strings (widened to
     * DuckDB's BIGINT) and gains DuckDB's for arrays. Applied only on the
     * dialect-tolerant surfaces ([[graft.DuckDialect.sql]] → CLI/REPL/
     * DeltaScanner) — operator-module sessions never see these. */
-  def register(spark: SparkSession): Unit = {
+  def register(spark: SparkSession): Unit = registered.synchronized {
     val reg = spark.sessionState.functionRegistry
+    if (!registered.containsKey(reg)) {
+      registerInto(spark, reg)
+      registered.put(reg, java.lang.Boolean.TRUE)
+    }
+  }
+
+  private def registerInto(spark: SparkSession, reg: FunctionRegistry): Unit = {
     def put(name: String)(b: Seq[Expression] => Expression): Unit =
       reg.createOrReplaceTempFunction(name, b, "built-in")
     def arity(name: String, n: Int, es: Seq[Expression]): Unit =

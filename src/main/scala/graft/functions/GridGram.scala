@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Per-row integer-grid moment vector for exact distributed covariance —
@@ -169,27 +169,11 @@ case class GridResidual(child: Expression, model: Seq[Long])
 }
 
 object GridResidual {
-  private val FnName = "graft_grid_residual"
-
-  private def decodeModel(e: Expression): Seq[Long] = {
-    val m = e.eval().asInstanceOf[ArrayData]
-    (0 until m.numElements()).map(m.getLong)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => GridResidual(exprs.head, decodeModel(exprs(1))),
-      "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def gridResidual(vec: Column, model: Seq[Long]): Column =
-    call_function(FnName, vec,
-      org.apache.spark.sql.functions.typedLit(model))
+    column(GridResidual(expression(vec), model))
 }
 
 object GridGram {
-  private val FnName = "graft_grid_gram"
-
   /** The 2²⁰ quantization grid (shared with the q182 oracle SQL). */
   val Scale: Long = 1L << 20
 
@@ -201,10 +185,5 @@ object GridGram {
     if (y >= 0) math.floor(y + 0.5).toLong else math.ceil(y - 0.5).toLong
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => GridGram(exprs.head), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def gridGram(vec: Column): Column = call_function(FnName, vec)
+  def gridGram(vec: Column): Column = column(GridGram(expression(vec)))
 }

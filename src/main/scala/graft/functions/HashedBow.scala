@@ -3,12 +3,12 @@ package graft.functions
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -131,15 +131,8 @@ case class HashedBowGram(left: Expression, right: Expression)
 }
 
 object HashedBowGram {
-  private val FnName = "graft_bow_gram"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => HashedBowGram(exprs.head, exprs(1)), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def bowGram(text: Column, y: Column): Column =
-    call_function(FnName, text, y)
+    column(HashedBowGram(expression(text), expression(y)))
 }
 
 /** The APPLY half (q189 and the streaming scorer): dot the row's clipped
@@ -185,20 +178,6 @@ case class HashedBowScore(child: Expression, model: Seq[Long])
 }
 
 object HashedBowScore {
-  private val FnName = "graft_bow_score"
-
-  private def decodeModel(e: Expression): Seq[Long] = {
-    val m = e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
-    (0 until m.numElements()).map(m.getLong)
-  }
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => HashedBowScore(exprs.head, decodeModel(exprs(1))),
-      "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def bowScore(text: Column, model: Seq[Long]): Column =
-    call_function(FnName, text,
-      org.apache.spark.sql.functions.typedLit(model))
+    column(HashedBowScore(expression(text), model))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnaryExpression, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Multi-table random-hyperplane LSH over an `array<float|double>`
@@ -142,12 +142,5 @@ object HyperplaneLsh {
     ((((h % m) + m) % m) - 1000000L).toDouble / 1000000.0
   }
 
-  private val FnName = "graft_hplsh"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => HyperplaneLsh(exprs.head), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def hplsh(v: Column): Column = call_function(FnName, v)
+  def hplsh(v: Column): Column = column(HyperplaneLsh(expression(v)))
 }

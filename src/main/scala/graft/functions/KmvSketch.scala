@@ -3,7 +3,7 @@ package graft.functions
 import java.nio.ByteBuffer
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, XxHash64}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -101,17 +101,7 @@ case class KmvSketch(
 }
 
 object KmvSketch {
-  /** Aggregate Column: the k smallest xxhash64 values of `c`'s values.
-    * Requires [[register]] on the session (call_function route, like
-    * the scalar expressions). */
+  /** Aggregate Column: the k smallest xxhash64 values of `c`'s values. */
   def kmv(c: Column, k: Int): Column =
-    org.apache.spark.sql.functions.call_function("graft_kmv", c,
-      org.apache.spark.sql.functions.lit(k))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_kmv",
-      exprs => KmvSketch(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "scala_udf")
+    column(KmvSketch(expression(c), k).toAggregateExpression())
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** 128-permutation MinHash signature over an `array<bigint>` of element
@@ -66,12 +66,5 @@ object MinHashSig {
   val CoefB: Array[Long] =
     (0 until NumPerm).map(i => (69069L * i + 362437L) % P).toArray
 
-  private val FnName = "graft_minhash_sig"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => MinHashSig(exprs.head), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def minhashSig(hashes: Column): Column = call_function(FnName, hashes)
+  def minhashSig(hashes: Column): Column = column(MinHashSig(expression(hashes)))
 }

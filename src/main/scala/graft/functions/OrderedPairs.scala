@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType, StructField, StructType}
 
 /** All ordered pairs (a, b), a-index < b-index, of a long array — the
@@ -102,17 +102,9 @@ case class OrderedPairs(child: Expression, withSelf: Boolean = false)
 }
 
 object OrderedPairs {
-  private val FnName = "graft_ordered_pairs"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => OrderedPairs(exprs.head,
-        exprs.length > 1 && exprs(1).eval() == true), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def orderedPairs(ids: Column): Column = call_function(FnName, ids)
+  def orderedPairs(ids: Column): Column = column(OrderedPairs(expression(ids)))
 
   /** Pairs PLUS one (d, d) self-row per element (see class doc). */
   def orderedPairsWithSelf(ids: Column): Column =
-    call_function(FnName, ids, org.apache.spark.sql.functions.lit(true))
+    column(OrderedPairs(expression(ids), withSelf = true))
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, typedLit}
 import org.apache.spark.sql.types._
 
 /** Per-anchor nearest-neighbor as ONE aggregate pass: for a bounded
@@ -192,20 +192,10 @@ object PanelTop1 {
   case class State(cos: Array[Double], n: Array[Long], nl: Array[Long],
       hit: Array[Boolean])
 
-  private val FnName = "graft_panel_top1"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => {
-        val idArr = exprs(3).eval().asInstanceOf[ArrayData]
-        val qIds = (0 until idArr.numElements()).map(idArr.getLong)
-        PanelTop1(exprs(0), exprs(1), exprs(2), qIds,
-          CosineAll.decodeMatrix(exprs(4))).toAggregateExpression()
-      }, "scala_udf")
-
   /** Aggregate Column: per-panel-position best-neighbor label over the
-    * aggregated rows. Requires [[register]] once per session. */
+    * aggregated rows. */
   def panelTop1(vec: Column, id: Column, label: Column,
       qIds: Seq[Long], matrix: Seq[Seq[Double]]): Column =
-    call_function(FnName, vec, id, label, typedLit(qIds), typedLit(matrix))
+    column(PanelTop1(expression(vec), expression(id), expression(label),
+      qIds, matrix).toAggregateExpression())
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Product quantization (PQ) primitives for ANN search — the classic
@@ -172,30 +172,10 @@ object ProductQuant {
       copy(left = newLeft, right = newRight)
   }
 
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_pq_encode",
-      exprs => PqEncode(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int], exprs(3).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_table",
-      exprs => PqAdcTable(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int], exprs(3).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_pq_score",
-      exprs => PqScore(exprs(0), exprs(1),
-        exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-  }
-
-  /** Column APIs (register(spark) once per session first). */
   def pqEncode(vec: Column, codebook: Column, m: Int, k: Int): Column =
-    call_function("graft_pq_encode", vec, codebook,
-      org.apache.spark.sql.functions.lit(m), org.apache.spark.sql.functions.lit(k))
+    column(PqEncode(expression(vec), expression(codebook), m, k))
   def pqAdcTable(vec: Column, codebook: Column, m: Int, k: Int): Column =
-    call_function("graft_pq_table", vec, codebook,
-      org.apache.spark.sql.functions.lit(m), org.apache.spark.sql.functions.lit(k))
+    column(PqAdcTable(expression(vec), expression(codebook), m, k))
   def pqScore(codes: Column, table: Column, k: Int): Column =
-    call_function("graft_pq_score", codes, table,
-      org.apache.spark.sql.functions.lit(k))
+    column(PqScore(expression(codes), expression(table), k))
 }

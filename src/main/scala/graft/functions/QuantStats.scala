@@ -1,12 +1,12 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Fused per-vector int8-quantization statistics for q128: one pass over
@@ -128,12 +128,5 @@ case class Int8QuantStats(child: Expression) extends UnaryExpression {
 }
 
 object Int8QuantStats {
-  private val FnName = "graft_int8_stats"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => Int8QuantStats(exprs.head), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def int8Stats(a: Column): Column = call_function(FnName, a)
+  def int8Stats(a: Column): Column = column(Int8QuantStats(expression(a)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, LongType, MapType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -64,16 +64,8 @@ case class WordShingles(child: Expression, n: Int)
 }
 
 object WordShingles {
-  private val FnName = "graft_shingles"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => WordShingles(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def wordShingles(text: Column, n: Int): Column =
-    call_function(FnName, text, lit(n))
+    column(WordShingles(expression(text), n))
 }
 
 /** Distinct word-n-gram shingle HASHES of a document — the fusion of
@@ -156,16 +148,8 @@ case class WordShingleHashes(child: Expression, n: Int)
 }
 
 object WordShingleHashes {
-  private val FnName = "graft_shingle_hashes"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => WordShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def shingleHashes(text: Column, n: Int): Column =
-    call_function(FnName, text, lit(n))
+    column(WordShingleHashes(expression(text), n))
 }
 
 /** ALL consecutive character n-grams of `lower(trim(text))`, duplicates
@@ -237,16 +221,8 @@ private[functions] object CharWalk {
 }
 
 object CharNgrams {
-  private val FnName = "graft_char_ngrams"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => CharNgrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def charNgrams(text: Column, n: Int): Column =
-    call_function(FnName, text, lit(n))
+    column(CharNgrams(expression(text), n))
 }
 
 /** Per-document character-n-gram HISTOGRAM (ngram → occurrence count)
@@ -299,16 +275,8 @@ case class CharNgramCounts(child: Expression, n: Int)
 }
 
 object CharNgramCounts {
-  private val FnName = "graft_char_ngram_counts"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => CharNgramCounts(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def charNgramCounts(text: Column, n: Int): Column =
-    call_function(FnName, text, lit(n))
+    column(CharNgramCounts(expression(text), n))
 }
 
 /** Per-POSITION word n-gram window keys of a document, in one compiled
@@ -385,16 +353,8 @@ case class WindowKeyHashes(child: Expression, n: Int)
 }
 
 object WindowKeyHashes {
-  private val FnName = "graft_window_md5"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => WindowKeyHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def windowKeyHashes(text: Column, n: Int): Column =
-    call_function(FnName, text, lit(n))
+    column(WindowKeyHashes(expression(text), n))
 }
 
 /** [[WindowKeyHashes]] emitting the RAW 16-byte md5 digests instead of
@@ -448,14 +408,6 @@ case class WindowKeyDigests(child: Expression, n: Int)
 }
 
 object WindowKeyDigests {
-  private val FnName = "graft_window_md5_raw"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => WindowKeyDigests(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
   def windowKeyDigests(text: Column, n: Int): Column =
-    call_function(FnName, text, lit(n))
+    column(WindowKeyDigests(expression(text), n))
 }

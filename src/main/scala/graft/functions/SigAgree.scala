@@ -1,11 +1,11 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Native MinHash signature-agreement count over two `array<bigint>`
@@ -76,12 +76,6 @@ case class SigAgree(left: Expression, right: Expression)
 }
 
 object SigAgree {
-  private val FnName = "graft_sig_agree"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => SigAgree(exprs.head, exprs(1)), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def sigAgree(a: Column, b: Column): Column = call_function(FnName, a, b)
+  def sigAgree(a: Column, b: Column): Column =
+    column(SigAgree(expression(a), expression(b)))
 }

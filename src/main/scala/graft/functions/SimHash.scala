@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** 64-bit SimHash over an `array<bigint>` of per-token hashes.
@@ -68,14 +68,6 @@ case class SimHash64(child: Expression)
 }
 
 object SimHash64 {
-  private val FnName = "graft_simhash64"
-
-  /** Idempotently register the expression in the session's function
-    * registry so it is usable from both the Column API and raw SQL. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => SimHash64(exprs.head), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def simhash64(tokenHashes: Column): Column = call_function(FnName, tokenHashes)
+  def simhash64(tokenHashes: Column): Column =
+    column(SimHash64(expression(tokenHashes)))
 }

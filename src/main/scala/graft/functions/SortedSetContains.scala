@@ -2,11 +2,11 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** EXACT membership test against a plan-embedded sorted long array:
@@ -64,8 +64,6 @@ case class SortedLongsContain(left: Expression, right: Expression)
 }
 
 object SortedLongsContain {
-  private val FnName = "graft_sorted_contains"
-
   /** Big-endian bytes of the DISTINCT values, sorted ascending. */
   def serialize(values: Array[Long]): Array[Byte] = {
     val distinct = values.distinct
@@ -80,12 +78,6 @@ object SortedLongsContain {
     Array.fill(bytes.length / 8)(bb.getLong)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => SortedLongsContain(exprs.head, exprs(1)),
-      "scala_udf")
-
   def sortedContains(key: Column, bytes: Column): Column =
-    call_function(FnName, key, bytes)
+    column(SortedLongsContain(expression(key), expression(bytes)))
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -130,18 +131,9 @@ object TopKIdsByScore {
     }
   }
 
-  private val FnName = "graft_topk_ids"
-
   /** Aggregate Column: ids of the top-`k` rows by (score DESC, id ASC),
-    * returned id-ASC. Requires [[register]] on the session. */
+    * returned id-ASC. */
   def topkIds(score: Column, id: Column, k: Int): Column =
-    org.apache.spark.sql.functions.call_function(FnName, score, id,
-      org.apache.spark.sql.functions.lit(k))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => TopKIdsByScore(exprs.head, exprs(1),
-        exprs(2).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "scala_udf")
+    column(TopKIdsByScore(expression(score), expression(id), k)
+      .toAggregateExpression())
 }

@@ -2,7 +2,8 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
@@ -44,8 +45,8 @@ case class TopKRowsByScore(
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[TopKRowsByScore.Buf] {
 
-  /** Analysis-time typing (ADVICE r14): registration goes through
-    * `call_function` with no coercion, so without a declared check a
+  /** Analysis-time typing (ADVICE r14): the node declares no input
+    * types, so no coercion applies, and without a declared check a
     * mistyped caller (int score, string id) died with a
     * ClassCastException inside aggregation. Mistyped calls now fail
     * at analysis with the expected signature spelled out. */
@@ -183,19 +184,10 @@ object TopKRowsByScore {
     }
   }
 
-  private val FnName = "graft_topk_rows"
-
   /** Aggregate Column: the top-`k` rows by (score DESC, id ASC) as a
-    * rank-ordered array<struct<score,id,p1,p2>>. Requires [[register]]. */
+    * rank-ordered array<struct<score,id,p1,p2>>. */
   def topkRows(score: Column, id: Column, p1: Column, p2: Column,
       k: Int): Column =
-    org.apache.spark.sql.functions.call_function(FnName, score, id, p1, p2,
-      org.apache.spark.sql.functions.lit(k))
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => TopKRowsByScore(exprs.head, exprs(1), exprs(2), exprs(3),
-        exprs(4).eval().asInstanceOf[Number].intValue()).toAggregateExpression(),
-      "scala_udf")
+    column(TopKRowsByScore(expression(score), expression(id),
+      expression(p1), expression(p2), k).toAggregateExpression())
 }

@@ -44,6 +44,6 @@ object VectorFunctions {
   def cosineDeclarative(a: Column, b: Column): Column =
     dot(a, b) / (sqrt(norm2(a)) * sqrt(norm2(b)))
 
-  /** Fast path: native codegen'd cosine (register per session). */
+  /** Fast path: native codegen'd cosine. */
   def cosine(a: Column, b: Column): Column = CosineSim.cosineSim(a, b)
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Total unigram SURPRISE of a word array under a plan-embedded model —
@@ -81,8 +81,6 @@ case class VocabSurprise(child: Expression, model: Expression)
 }
 
 object VocabSurprise {
-  private val FnName = "graft_vocab_surprise"
-
   /** floor(log2(x)) for x > 0 — the q179 bit-length form. */
   def flog2(x: Long): Long = 63L - java.lang.Long.numberOfLeadingZeros(x)
 
@@ -124,12 +122,6 @@ object VocabSurprise {
     (hashes, sbits, oov)
   }
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName,
-      exprs => VocabSurprise(exprs.head, exprs(1)),
-      "scala_udf")
-
   def vocabSurprise(words: Column, model: Column): Column =
-    call_function(FnName, words, model)
+    column(VocabSurprise(expression(words), expression(model)))
 }

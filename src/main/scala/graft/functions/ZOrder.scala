@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 
 /** Morton (Z-order) interleave of two integer keys: bit i of the result
@@ -76,12 +76,6 @@ object ZOrder {
     spread((a & 0xFFFFFFFFL) ^ 0x80000000L) |
       (spread((b & 0xFFFFFFFFL) ^ 0x80000000L) << 1)
 
-  private val FnName = "graft_zorder"
-
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      FnName, exprs => ZOrder(exprs.head, exprs(1)), "built-in")
-
-  /** Column API: requires register(spark) once per session. */
-  def zorder(a: Column, b: Column): Column = call_function(FnName, a, b)
+  def zorder(a: Column, b: Column): Column =
+    column(ZOrder(expression(a), expression(b)))
 }

@@ -58,7 +58,6 @@ object Dedup {
     * exactly C(n,2) in one compiled pass. Callers bound the group size
     * (df / bucket caps), so the quadratic expansion is capped per group. */
   private def pairExpand(grouped: DataFrame): DataFrame = {
-    graft.functions.OrderedPairs.register(grouped.sparkSession)
     grouped.select(
       inline(graft.functions.OrderedPairs.orderedPairs(col("ids"))))
   }
@@ -100,9 +99,6 @@ object Dedup {
     * not the raw corpus, so df caps and Jaccard denominators are computed
     * on the filtered population (the oracle mirrors this). */
   private[graft] def jaccardPairsOf(s: SparkSession, docsDf: DataFrame): DataFrame = {
-    graft.functions.WordShingleHashes.register(s)
-    graft.functions.BoundedSortedList.register(s)
-    graft.functions.OrderedPairs.register(s)
     val sh = docsDf.select(col("doc_id"),
       explode(graft.functions.WordShingleHashes
         .shingleHashes(col("text"), 3)).as("s"))
@@ -156,8 +152,6 @@ object Dedup {
     * benchmark's 700 s outlier). Per-document work is local (no shuffle)
     * and the output is a fixed ~1 KB signature regardless of doc size. */
   def signatures(d: DataFrame): DataFrame = {
-    graft.functions.MinHashSig.register(d.sparkSession)
-    graft.functions.WordShingleHashes.register(d.sparkSession)
     val hs = graft.functions.WordShingleHashes.shingleHashes(col("text"), 3)
     d.select(col("doc_id"), hs.as("hs"))
       .filter(size(col("hs")) > 0)
@@ -185,7 +179,6 @@ object Dedup {
     * materialize that whole corpus as one aggregation buffer before the
     * size filter could drop it. */
   def lshCandidates(sig: DataFrame): DataFrame = {
-    graft.functions.BoundedSortedList.register(sig.sparkSession)
     val buckets = bandRows(sig).groupBy("band", "bh")
       .agg(graft.functions.BoundedSortedList
         .boundedSortedList(col("doc_id"), MaxBandBucket + 1).as("ids"))
@@ -206,7 +199,6 @@ object Dedup {
     * collapse-first form shuffled every candidate WITH both 64-float
     * vectors (~30× the bytes) just to avoid cheap recompute. */
   private[graft] def semanticPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val assigned = Similarity.clusterAssign(s, d, trainIters = 2).persistTracked()
     val x = assigned.select(col("cid"), col("vec_id").as("a"),
       col("v").as("va"))
@@ -225,7 +217,6 @@ object Dedup {
     * join); persist the fixed-size sketch (~1 KB/doc) instead of
     * recomputing the shingle pipeline 3×. */
   private[graft] def minhashLshPairs(s: SparkSession, d: String): DataFrame = {
-    graft.functions.SigAgree.register(s)
     val sig = signatures(docs(s, d)).persistTracked()
     val cand = lshCandidates(sig)
     cand
@@ -256,9 +247,6 @@ object Dedup {
     * the expanded pairs by two doc_id joins (the q45 cardinality-join
     * shape) rather than riding the bucket lists. */
   private[graft] def simhashPairs(s: SparkSession, d: String): DataFrame = {
-    SimHash64.register(s)
-    graft.functions.BoundedSortedList.register(s)
-    graft.functions.OrderedPairs.register(s)
     // persistTracked: f feeds the segment-bucket pass AND both pair
     // re-attach joins — unpersisted, the tokenize+SimHash scan runs
     // three times (VERDICT r10 item 8; the q178/q168 shared-frame
@@ -382,7 +370,6 @@ object Dedup {
 
   private[graft] def exactEmbeddingPairs(s: SparkSession, d: String,
       vectorCap: Int = MaxExactPairVectors): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = emb(s, d)
     val probed = e.select("vec_id").limit(vectorCap + 1).count()
     if (probed > vectorCap)
@@ -542,7 +529,6 @@ object Dedup {
     // integer scores make the tie-break oracle-stable.
     GraftQuery("q191_dedup_cluster_best",
       (s, d) => {
-        graft.functions.HashedBowScore.register(s)
         val w = TextAnalysis.bowModel(s, d).map(_._3)
         // r16 (guide §1.2 — don't compute what you throw away): the old
         // form scored EVERY corpus document and joined the scores to
@@ -597,9 +583,6 @@ object Dedup {
         // (self) AND mixed-pair intersections (the jaccardPairsOf r9
         // fold), and the two cardinality joins probe the same frame
         // (ReuseExchange). Values identical; one corpus pass.
-        graft.functions.WordShingleHashes.register(s)
-        graft.functions.BoundedSortedList.register(s)
-        graft.functions.OrderedPairs.register(s)
         val sh = docs(s, d).select(col("doc_id"),
           explode(graft.functions.WordShingleHashes
             .shingleHashes(col("text"), 3)).as("s"))
@@ -759,7 +742,6 @@ object Dedup {
     GraftQuery("q178_repeated_spans",
       (s, d) => {
         import org.apache.spark.sql.expressions.Window
-        graft.functions.WindowKeyDigests.register(s)
         val w = docs(s, d)
           .select(col("doc_id"), posexplode(
             graft.functions.WindowKeyDigests.windowKeyDigests(col("text"), 10)))
@@ -794,7 +776,6 @@ object Dedup {
 
     GraftQuery("q101_dup_passages",
       (s, d) => {
-        graft.functions.WordShingleHashes.register(s)
         // r14 (the q144/q178 shape): per-shingle df comes from ONE
         // s-keyed count-over-window ([[WindowCount]] — same spill-backed
         // tradeoff and twoPhase escape hatch), and BOTH per-doc figures

@@ -88,7 +88,6 @@ object EvalMetrics {
     GraftQuery("q137_auc",
       (s, d) => {
         import s.implicits._
-        CosineAll.register(s)
         val fine = emb(s, d)
           .select((col("label") === 0).cast("long").as("pos"),
             floor((scoreCol + 1.0d) * lit(LevelScale)).cast("long").as("lvl"))
@@ -143,7 +142,6 @@ object EvalMetrics {
     // and accuracy/confidence/|gap| are mirrored double chains.
     GraftQuery("q138_calibration",
       (s, d) => {
-        CosineAll.register(s)
         val prob = (scoreCol + 1.0d) / 2.0d
         emb(s, d)
           .select((col("label") === 0).cast("long").as("pos"),
@@ -175,7 +173,6 @@ object EvalMetrics {
     // streams once, no join; the confusion matrix is ≤|labels|² rows.
     GraftQuery("q139_class_metrics",
       (s, d) => {
-        CosineAll.register(s)
         val e = emb(s, d)
         val protos = e.groupBy("label").agg(min("vec_id").as("pid"))
           .select("pid").as("p")
@@ -325,7 +322,6 @@ object EvalMetrics {
     // through DECIMAL(38,0).
     GraftQuery("q143_cluster_quality",
       (s, d) => {
-        CosineAll.register(s)
         val cents = emb(s, d)
           .select(col("label").cast("long").as("label"),
             posexplode(col("embedding")).as(Seq("pos", "v")))
@@ -403,7 +399,6 @@ object EvalMetrics {
     // oracle doubles as the 64-bit collision check, exactly as q45.
     GraftQuery("q144_split_contamination",
       (s, d) => {
-        graft.functions.WordShingleHashes.register(s)
         val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
         val split = when(h2 < "cd", "train").when(h2 < "e6", "val")
           .otherwise("test")
@@ -519,7 +514,6 @@ object EvalMetrics {
     // discipline), so accumulation order cannot matter.
     GraftQuery("q146_brier",
       (s, d) => {
-        CosineAll.register(s)
         val prob = (scoreCol + 1.0d) / 2.0d
         val err = prob - (col("label") === 0).cast("double")
         emb(s, d)

@@ -122,7 +122,6 @@ object Similarity {
     * panel is a bounded collect (QueryCount rows), scored in-row against
     * the whole corpus via the native CosineAll matrix loop. */
   private[graft] def bruteTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineAll.register(s)
     val panel = emb(s, d).filter(col("vec_id") < QueryCount)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -146,8 +145,6 @@ object Similarity {
     * (native multi-table expression, fused codegen over a constant
     * matrix), deduplicated before the exact rerank. */
   private[graft] def lshTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.HyperplaneLsh.register(s)
     val sigs = emb(s, d)
       .select(col("vec_id"), col("embedding"),
         posexplode(graft.functions.HyperplaneLsh.hplsh(col("embedding"))))
@@ -168,8 +165,6 @@ object Similarity {
     * broadcast-literal codebook, ADC-scored candidates, exact rerank.
     * The codebook collect is K=16 seed vectors — metadata, not data. */
   private[graft] def pqTopK(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.ProductQuant.register(s)
     import graft.functions.ProductQuant.{pqAdcTable, pqEncode, pqScore}
     val M = 8; val K = 16; val Cand = 60
     val e = emb(s, d)
@@ -335,8 +330,6 @@ object Similarity {
     }
 
   private def rrfFused(s: SparkSession, d: String): DataFrame = {
-    graft.functions.CosineSim.register(s)
-    graft.functions.TopKRowsByScore.register(s)
     val terms = TextAnalysis.QueryTerms
     val wideSchema = org.apache.spark.sql.types.StructType.fromDDL(
       "doc_id BIGINT, r_lex BIGINT, r_dense BIGINT, cos DOUBLE, " +
@@ -471,7 +464,6 @@ object Similarity {
     // condition before any cosine is scored.
     GraftQuery("q116_hard_negatives",
       (s, d) => {
-        graft.functions.CosineAll.register(s)
         val panel = emb(s, d).filter(col("vec_id") < QueryCount)
           .select(col("vec_id"), col("label").cast("long"),
             col("embedding").cast("array<double>"))
@@ -526,7 +518,6 @@ object Similarity {
     // probe's exp 2.06 was the pre-cap anchors-∝-corpus form).
     GraftQuery("q118_knn_label_eval",
       (s, d) => {
-        graft.functions.PanelTop1.register(s)
         // anchor panel to the driver in deterministic vec_id order:
         // ≤ AnchorCap/10 × d doubles, bounded by construction
         val panel = emb(s, d)
@@ -672,7 +663,6 @@ object Similarity {
     // ascending — the oracle's (cos DESC, bench_id) order.
     GraftQuery("q122_semantic_decontamination",
       (s, d) => {
-        graft.functions.CosineAll.register(s)
         val isBench =
           pmod(col("vec_id"), lit(25)) === 7 && col("vec_id") < BenchCap
         val panel = emb(s, d).filter(isBench)
@@ -729,7 +719,6 @@ object Similarity {
     // decimal partials, never element rows.
     GraftQuery("q128_int8_quant",
       (s, d) => {
-        graft.functions.Int8QuantStats.register(s)
         emb(s, d)
           .select(col("label"),
             graft.functions.Int8QuantStats.int8Stats(col("embedding"))
@@ -972,7 +961,6 @@ object Similarity {
     // table, and a mean would reintroduce unordered double summation.
     GraftQuery("q136_retrieval_eval",
       (s, d) => {
-        graft.functions.CosineAll.register(s)
         import org.apache.spark.sql.expressions.Window
         val panel = emb(s, d).filter(col("vec_id") < 16)
           .select(col("vec_id"), col("label").cast("long"),
@@ -1125,8 +1113,6 @@ object Similarity {
     // same class as the panel collect above it.
     GraftQuery("q159_dim_truncation_recall",
       (s, d) => {
-        graft.functions.CosineAll.register(s)
-        graft.functions.TopKIdsByScore.register(s)
         val panel = emb(s, d).filter(col("vec_id") < QueryCount)
           .select(col("vec_id"), col("embedding").cast("array<double>"))
           .collect().map(r => (r.getLong(0), r.getSeq[Double](1)))
@@ -1262,7 +1248,6 @@ object Similarity {
     // truncation.
     GraftQuery("q183_abtt_transform",
       (s, d) => {
-        graft.functions.GridResidual.register(s)
         val model = gridPc1Model(s, d)
         val v = model.map(_._4.map(_.bigInteger.longValueExact()).toSeq)
           .getOrElse(Seq.empty)
@@ -1287,7 +1272,6 @@ object Similarity {
   private[graft] def gridPc1Model(s: SparkSession, d: String)
       : Option[(Int, BigInt, Array[BigInt], Array[BigInt])] = {
     import org.apache.spark.sql.types.DecimalType
-    graft.functions.GridGram.register(s)
     val moments = emb(s, d)
       .select(posexplode(
         graft.functions.GridGram.gridGram(col("embedding")))
@@ -1414,7 +1398,6 @@ object Similarity {
     * Lloyd's iterations improve. */
   private[graft] def ivfStats(s: SparkSession, d: String,
       trainIters: Int): (Double, Double) = {
-    graft.functions.CosineSim.register(s)
     import s.implicits._
     val K = 16
     val e = emb(s, d)
@@ -1467,7 +1450,6 @@ object Similarity {
     * rung if that one-off ever dominates. */
   private[graft] def clusterAssign(s: SparkSession, d: String,
       trainIters: Int, K: Int = -1, probes: Int = 3): DataFrame = {
-    graft.functions.CosineSim.register(s)
     val e = emb(s, d)
     val k =
       if (K > 0) K
@@ -1558,7 +1540,6 @@ object Similarity {
     * gate). */
   private[graft] def ivfQuery(s: SparkSession, d: String,
       trainIters: Int, nProbe: Int = 3): DataFrame = {
-    graft.functions.CosineSim.register(s)
     import s.implicits._
     val K = 16; val NProbe = nProbe
     val e = emb(s, d)

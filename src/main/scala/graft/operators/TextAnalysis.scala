@@ -23,7 +23,6 @@ object TextAnalysis {
   /** q121's operational sketch frame: per-source 256-value KMV word
     * synopses compared pairwise — (sa, sb, jaccard_est). */
   private[graft] def vocabOverlapSketch(s: SparkSession, d: String): DataFrame = {
-    graft.functions.KmvSketch.register(s)
     val k = 256
     val sk = docs(s, d)
       .select(col("source"),
@@ -228,6 +227,18 @@ object TextAnalysis {
   private val bm25StatsCache =
     scala.collection.concurrent.TrieMap.empty[(String, Long), Bm25Stats]
 
+  /** Explicit byte bound on a decontamination panel's exact shingle
+    * set before it becomes a plan literal (ADVICE r11): 8 B/shingle,
+    * 16 MiB ≈ a 2M-shingle suite. With the panels' id cap (mod-97 ∧ <
+    * [[BenchCap]]) this is a BACKSTOP, not the primary bound. */
+  private[graft] def boundedPanelSet(query: String, panel: Array[Long]): Array[Long] = {
+    require(panel.length.toLong * 8 <= (16L << 20),
+      s"$query: exact-probe set literal is ${panel.length.toLong * 8} " +
+        "bytes (> 16 MiB) — the decontamination panel is no longer " +
+        "eval-suite-bounded; keep the exact side to a fixed panel")
+    panel
+  }
+
   /** q168's decontamination-panel shingle set, per corpus dir — the
     * same versioned-eval-suite class, bounded BY CONSTRUCTION (r15):
     * the panel docs are id-capped (mod-97 ∧ < [[BenchCap]], ≤207 docs
@@ -411,7 +422,6 @@ object TextAnalysis {
     // constants.
     GraftQuery("q177_gopher_rules",
       (s, d) => {
-        graft.functions.GopherStats.register(s)
         def bool2l(c: org.apache.spark.sql.Column) = c.cast("long")
         docs(s, d).select(col("doc_id"),
             graft.functions.GopherStats.gopherStats(col("text")).as("g"))
@@ -953,8 +963,6 @@ object TextAnalysis {
     // corpus-side shingle pass disappears).
     GraftQuery("q104_ngram_decontamination",
       (s, d) => {
-        graft.functions.WordShingleHashes.register(s)
-        graft.functions.SortedLongsContain.register(s)
         // bounded collect (≤207 bench docs by construction — the q156
         // panel-class exception); empty panel ⇒ nothing is contaminated
         val panel: Array[Long] = docs(s, d)
@@ -964,7 +972,7 @@ object TextAnalysis {
             .shingleHashes(col("text"), 5)).as("s"))
           .distinct().collect().map(_.getLong(0))
         val benchSet = lit(graft.functions.SortedLongsContain
-          .serialize(panel))
+          .serialize(boundedPanelSet("q104", panel)))
         docs(s, d).filter(pmod(col("doc_id"), lit(97)) =!= 0)
           .select(col("doc_id"),
             explode(graft.functions.WordShingleHashes
@@ -1295,8 +1303,6 @@ object TextAnalysis {
     // Document text never shuffles; nothing persists across the passes.
     GraftQuery("q123_char_bigram_quality",
       (s, d) => {
-        graft.functions.TopBigramsByCount.register(s)
-        graft.functions.BigramModelScore.register(s)
         val model: Seq[Long] = docs(s, d)
           .agg(graft.functions.TopBigramsByCount
             .topBigrams(col("text"), 100).as("ks"))
@@ -1374,7 +1380,6 @@ object TextAnalysis {
     // carries ≤ 20 rows per partition at any corpus size.
     GraftQuery("q126_bm25_search",
       (s, d) => {
-        graft.functions.TopKRowsByScore.register(s)
         val src = docs(s, d)
         val st = bm25DocStats(s, d)
         val outSchema = org.apache.spark.sql.types.StructType.fromDDL(
@@ -1636,9 +1641,6 @@ object TextAnalysis {
     // eval-suite boundedness class, both collected once).
     GraftQuery("q168_bloom_decontamination",
       (s, d) => {
-        graft.functions.WordShingleHashes.register(s)
-        graft.functions.BloomContains.register(s)
-        graft.functions.SortedLongsContain.register(s)
         // ONE bounded collect feeds BOTH probe literals (r13): the
         // driver-built Bloom is bit-identical to the old
         // df.stat.bloomFilter (see panelBloomBytesOf), and the former
@@ -1660,18 +1662,10 @@ object TextAnalysis {
             .select(explode(graft.functions.WordShingleHashes
               .shingleHashes(col("text"), 5)).as("h"))
             .distinct().collect().map(_.getLong(0)) // panel-bounded
-          // Explicit byte bound on the set literal (ADVICE r11; moved
-          // INSIDE the cache build r15 — a panel that fails the bound
-          // must refuse WITHOUT staying pinned in driver memory): with
-          // the id cap above this is a true BACKSTOP, not the primary
-          // bound. The Bloom bits are fixed-size but this exact set is
-          // 8 B/panel-shingle (16 MiB ≈ a 2M-shingle suite).
-          require(p.length * 8 <= (16 << 20),
-            s"q168: exact-probe set literal is ${p.length * 8} bytes " +
-              "(> 16 MiB) — the decontamination panel is no longer " +
-              "eval-suite-bounded; keep the exact side to a fixed panel " +
-              "or rely on the Bloom probe alone")
-          p
+          // The bound sits INSIDE the cache build (r15): a panel that
+          // fails it must refuse WITHOUT staying pinned in driver memory.
+          // The Bloom bits are fixed-size; this exact set is not.
+          boundedPanelSet("q168", p)
         }
         val bytes = panelBloomBytesOf(panel)
         val exactBytes = graft.functions.SortedLongsContain.serialize(panel)
@@ -2052,7 +2046,6 @@ object TextAnalysis {
     // (score_grid ≥ 2¹⁹ — exact integer compare in both engines).
     GraftQuery("q189_quality_classifier_apply",
       (s, d) => {
-        graft.functions.HashedBowScore.register(s)
         val w = bowModel(s, d).map(_._3)
         val t = coalesce(lower(col("text")), lit(""))
         docs(s, d)
@@ -2096,7 +2089,6 @@ object TextAnalysis {
     // bench_detail's first_build_wall, which carries the train cost.
     GraftQuery("q192_classifier_holdout",
       (s, d) => {
-        graft.functions.HashedBowScore.register(s)
         val h2 = substring(md5(col("doc_id").cast("string")), 1, 2)
         // trained on the SPLIT, not the corpus — its own stamped
         // per-dir cache (r15 opt; the full-corpus q188 model lives in
@@ -2311,8 +2303,6 @@ object TextAnalysis {
   private[graft] def bowModelOf(docsDf: DataFrame)
       : IndexedSeq[(Long, Long, Long)] = {
     import org.apache.spark.sql.types.DecimalType
-    val s = docsDf.sparkSession
-    graft.functions.HashedBowGram.register(s)
     val dDim = graft.functions.HashedBow.Dims // 65: bias + 64 buckets
     val zDim = dDim + 1                       // + the label
     val t = coalesce(lower(col("text")), lit(""))

@@ -499,7 +499,6 @@ object DeltaMaintenance {
     DeltaLog.checkWritable(snap) // clustering rewrites data files too
     require(snap.partitionColumns.isEmpty,
       "z-order clustering applies within unpartitioned tables here")
-    graft.functions.ZOrder.register(spark)
     val df = DeltaLog.read(spark, tablePath)
     val relaid = df
       .repartitionByRange(numFiles, graft.functions.ZOrder.zorder(

@@ -37,7 +37,6 @@ object AbttScoreStream {
     * res_norm2), q183's columns without its output sort (a stream has
     * no total order). */
   def scored(vecs: DataFrame, model: Seq[Long]): DataFrame = {
-    graft.functions.GridResidual.register(vecs.sparkSession)
     vecs
       .select(col("vec_id"), graft.functions.GridResidual
         .gridResidual(col("embedding"), model).as("t"))

@@ -39,7 +39,6 @@ object BigramPerplexityStream {
     * on both; twin equality leans on it) → (doc_id, n_pairs, bits,
     * mean_bits). Docs with < 2 tokens score (0, 0, 0.0). */
   def scored(docs: DataFrame, model: Array[Byte]): DataFrame = {
-    graft.functions.BigramLmBits.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         graft.functions.BigramLmBits

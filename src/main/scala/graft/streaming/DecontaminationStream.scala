@@ -24,8 +24,6 @@ object DecontaminationStream {
     * works on both, which is what the spec's twin-equality leans on) →
     * (doc_id, source, flagged). */
   def flagged(docs: DataFrame, bloomBytes: Array[Byte]): DataFrame = {
-    graft.functions.WordShingleHashes.register(docs.sparkSession)
-    graft.functions.BloomContains.register(docs.sparkSession)
     docs.select(col("doc_id"), col("source"),
       exists(
         graft.functions.WordShingleHashes.shingleHashes(col("text"), 5),

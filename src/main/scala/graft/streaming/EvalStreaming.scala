@@ -26,8 +26,7 @@ object EvalStreaming {
 
   /** Running ROC level table (lvl, p, n) — q137's fine frame as a
     * streaming aggregation (use Complete output mode; the table is the
-    * state). Caller registers [[graft.functions.CosineAll]] on the
-    * session (done by [[graft.operators.EvalMetrics]] queries too). */
+    * state). */
   def scoreLevels(emb: DataFrame): DataFrame =
     emb.select((col("label") === 0).cast("long").as("pos"),
         floor((EvalMetrics.scoreCol + 1.0d) * lit(EvalMetrics.LevelScale))

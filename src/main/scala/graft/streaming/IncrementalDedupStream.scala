@@ -36,7 +36,6 @@ object IncrementalDedupStream {
   final case class CorpusIndex(inverted: DataFrame, card: DataFrame)
 
   def buildIndex(corpus: DataFrame, maxDf: Int = 20): CorpusIndex = {
-    graft.functions.WordShingleHashes.register(corpus.sparkSession)
     val sh = corpus.select(col("doc_id"),
       explode(graft.functions.WordShingleHashes
         .shingleHashes(col("text"), 3)).as("s"))
@@ -53,7 +52,6 @@ object IncrementalDedupStream {
     * smallest old id) as (doc_id, match_id, shared_shingles, jaccard). */
   def matchBatch(index: CorpusIndex, batch: DataFrame,
       minJaccard: Double = 0.1): DataFrame = {
-    graft.functions.WordShingleHashes.register(batch.sparkSession)
     val bs = batch.select(col("doc_id").as("n"),
       explode(graft.functions.WordShingleHashes
         .shingleHashes(col("text"), 3)).as("s"))

@@ -34,7 +34,6 @@ object QualityScoreStream {
     * on both; twin equality leans on it) → q189's columns
     * (doc_id, score_grid, pred, label, correct), unordered. */
   def scored(docs: DataFrame, weights: Seq[Long]): DataFrame = {
-    graft.functions.HashedBowScore.register(docs.sparkSession)
     val t = coalesce(lower(col("text")), lit(""))
     docs
       .select(col("doc_id"),

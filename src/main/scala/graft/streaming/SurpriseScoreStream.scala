@@ -56,7 +56,6 @@ object SurpriseScoreStream {
     * on both; twin equality leans on it) → (doc_id, n_tok, surprise,
     * mean_surprise). Docs with no tokens score (0, 0, 0.0). */
   def scored(docs: DataFrame, model: Array[Byte]): DataFrame = {
-    graft.functions.VocabSurprise.register(docs.sparkSession)
     docs
       .select(col("doc_id"), words(col("text")).as("ws"))
       .select(col("doc_id"),

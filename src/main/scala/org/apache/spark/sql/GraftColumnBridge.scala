@@ -5,8 +5,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 /** Bridge to `private[sql]` Column internals (Spark 4's Connect-unified
   * Column is a lazy ColumnNode tree with no public `.expr`). Standard
   * extension-library pattern: one object in the sql package, nothing
-  * else lives here. Used by graft's data-skipping predicate translation
-  * (graft.sources.DataSkipping).
+  * else lives here. Used by every Column helper in `graft.functions`
+  * (`column(X(expression(c)))` — `expression` stays unresolved until the
+  * session analyzes the plan, so no helper binds to a session) and by
+  * graft's data-skipping predicate translation (graft.sources.DataSkipping).
   */
 object GraftColumnBridge {
 

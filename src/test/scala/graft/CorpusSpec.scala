@@ -424,8 +424,6 @@ class CorpusSpec extends AnyFunSuite {
   test("WordShingleHashes ≡ transform(WordShingles, xxhash64) bit-exactly " +
     "over the corpus (the r7 fused shingle-hash loop changes nothing)") {
     import graft.functions.{WordShingleHashes, WordShingles}
-    WordShingles.register(spark)
-    WordShingleHashes.register(spark)
     for (n <- Seq(1, 3, 5)) {
       val mismatch = Tables.load(spark, sf, "documents")
         .select(col("doc_id"),
@@ -454,7 +452,6 @@ class CorpusSpec extends AnyFunSuite {
     // candidate pairs (not q45's df-filtered variant — minhash signatures
     // sketch the complete set). Sketch theory: stderr ≈ 1/√128 ≈ 0.09.
     import graft.functions.WordShingles
-    WordShingles.register(spark)
     val est = graft.operators.Dedup.minhashLshPairs(spark, sf)
       .select(col("a"), col("b"), col("est_jaccard"))
     val sh = Tables.load(spark, sf, "documents").select(col("doc_id"),
@@ -489,7 +486,6 @@ class CorpusSpec extends AnyFunSuite {
     // completeness: at sf0.001 every bucket is far below the 256 cap, so
     // the pigeonhole guarantee must hold exactly — brute-force all pairs
     // with hamming ≤ 3 over the same fingerprints and compare sets
-    SimHash64.register(spark)
     val fps = Tables.load(spark, sf, "documents")
       .select(col("doc_id"), SimHash64.simhash64(
         graft.functions.TextFunctions.tokenHashes(
@@ -528,7 +524,6 @@ class CorpusSpec extends AnyFunSuite {
   test("two CosineSim calls in one projection stay codegen-compatible " +
     "and match the declarative form") {
     import graft.functions.{CosineSim, VectorFunctions}
-    CosineSim.register(spark)
     val e = Tables.load(spark, sf, "embeddings").limit(50)
     val x = e.select(col("embedding").as("v"),
       org.apache.spark.sql.functions.reverse(col("embedding")).as("w"))
@@ -547,7 +542,6 @@ class CorpusSpec extends AnyFunSuite {
   test("Int8QuantStats matches the declarative explode form bit-exactly " +
     "(incl. negative values and round ties), and nulls the zero vector") {
     import graft.functions.Int8QuantStats
-    Int8QuantStats.register(spark)
     val fp = lit(1125899906842624.0) // 2^50
     // real corpus vectors + adversarial rows: negatives, a value sitting
     // exactly on a round() tie (x = m/254 → x/s = 0.5), and a zero vector
@@ -585,8 +579,6 @@ class CorpusSpec extends AnyFunSuite {
 
   test("CosineAll scores a panel bit-identically to per-pair CosineSim") {
     import graft.functions.{CosineAll, CosineSim}
-    CosineAll.register(spark)
-    CosineSim.register(spark)
     val e = Tables.load(spark, sf, "embeddings")
     val panel = e.filter(col("vec_id") < 5)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
@@ -612,8 +604,6 @@ class CorpusSpec extends AnyFunSuite {
 
   test("PanelTop1 matches the pairwise max_by top-1 (labels, bit-exact)") {
     import graft.functions.{CosineAll, PanelTop1}
-    PanelTop1.register(spark)
-    CosineAll.register(spark)
     val e = Tables.load(spark, sf, "embeddings")
     val panel = e.filter(pmod(col("vec_id"), lit(10)) === 0)
       .select(col("vec_id"), col("label").cast("long"),
@@ -645,7 +635,6 @@ class CorpusSpec extends AnyFunSuite {
 
   test("SimHash64 of a single token hash is that hash") {
     import graft.functions.SimHash64
-    SimHash64.register(spark)
     val h = -6574323520724709867L
     val out = spark.range(1)
       .select(SimHash64.simhash64(typedlit(Seq(h))).as("s"))
@@ -760,8 +749,6 @@ class CorpusSpec extends AnyFunSuite {
   test("CharNgrams: all positions, normalized, codepoint-indexed; " +
     "CharNgramCounts is its exact histogram") {
     import spark.implicits._
-    graft.functions.CharNgrams.register(spark)
-    graft.functions.CharNgramCounts.register(spark)
     import graft.functions.CharNgrams.charNgrams
     import graft.functions.CharNgramCounts.charNgramCounts
     val out = Seq("  AbC ", "x", "", "héllo").toDF("t")

@@ -27,7 +27,6 @@ class DecontaminationStreamSpec extends AnyFunSuite {
 
   test("streaming bloom flags across micro-batches equal the batch " +
     "flags, with ZERO stateful operators in the plan") {
-    graft.functions.WordShingleHashes.register(spark)
     val all = Tables.load(spark, sf, "documents")
       .select("doc_id", "source", "text")
     // panel: the q91/q104/q168 1-in-97 eval sample

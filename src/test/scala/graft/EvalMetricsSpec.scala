@@ -33,12 +33,11 @@ class EvalMetricsSpec extends AnyFunSuite {
 
     // quadratic reference: score every vector against the same probe via
     // the same expression, then count concordant/tied pairs directly
-    graft.functions.CosineAll.register(spark)
     val lvl = Tables.load(spark, sf, "embeddings").select(
       (col("label") === 0).cast("int").as("pos"),
-      floor((element_at(call_function("graft_cosine_all", col("embedding"),
-        typedLit(Seq((0 until 64).map(i =>
-          (((i * 2654435761L) & 0xFFL) - 128L) / 256.0)))), 1)
+      floor((element_at(graft.functions.CosineAll.cosineAll(col("embedding"),
+        Seq((0 until 64).map(i =>
+          (((i * 2654435761L) & 0xFFL) - 128L) / 256.0))), 1)
         + 1.0d) * lit(4194304.0d)).cast("long").as("lvl"))
       .collect().map(r => (r.getInt(0), r.getLong(1)))
     val posL = lvl.filter(_._1 == 1).map(_._2)
@@ -179,14 +178,13 @@ class EvalMetricsSpec extends AnyFunSuite {
     val (n, brier) = (r.getLong(0), r.getDouble(1))
     assert(n == Tables.load(spark, sf, "embeddings").count())
     assert(brier >= 0.0 && brier <= 1.0)
-    graft.functions.CosineAll.register(spark)
     val proto = (0 until 64).map(i => (((i * 2654435761L) & 0xFFL) - 128L) / 256.0)
     val terms = Tables.load(spark, sf, "embeddings").select(
-      floor((((element_at(call_function("graft_cosine_all",
-        col("embedding"), typedLit(Seq(proto))), 1) + 1.0d) / 2.0d
+      floor((((element_at(graft.functions.CosineAll.cosineAll(
+        col("embedding"), Seq(proto)), 1) + 1.0d) / 2.0d
         - (col("label") === 0).cast("double"))
-        * ((element_at(call_function("graft_cosine_all",
-          col("embedding"), typedLit(Seq(proto))), 1) + 1.0d) / 2.0d
+        * ((element_at(graft.functions.CosineAll.cosineAll(
+          col("embedding"), Seq(proto)), 1) + 1.0d) / 2.0d
           - (col("label") === 0).cast("double"))
         * lit(1073741824.0d)) + 0.5d).cast("long"))
       .collect().map(_.getLong(0))

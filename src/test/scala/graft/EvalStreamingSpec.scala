@@ -34,7 +34,6 @@ class EvalStreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.CosineAll.register(spark)
     val in = MemoryStream[EmbRow]
     val q = EvalStreaming.scoreLevels(in.toDF()).writeStream
       .outputMode("complete").format("memory").queryName("auc_levels").start()
@@ -54,7 +53,6 @@ class EvalStreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     import spark.implicits._
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.functions.CosineAll.register(spark)
     val in = MemoryStream[EmbRow]
     val q = EvalStreaming.calibrationBins(in.toDF()).writeStream
       .outputMode("complete").format("memory").queryName("cal_bins").start()

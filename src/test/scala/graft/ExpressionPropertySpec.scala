@@ -37,7 +37,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
 
   test("OrderedPairs ≡ naive C(n,2) expansion over random id arrays") {
     import spark.implicits._
-    graft.functions.OrderedPairs.register(spark)
     val gen = Gen.chooseNum(0, 25).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(-1000000L, 1000000L)))
     (1 to 40).foreach { i =>
@@ -65,7 +64,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
   test("OrderedPairs withSelf: pairs plus one marked (d, d) row per " +
     "element — the q45 single-shuffle cardinality fold's contract") {
     import spark.implicits._
-    graft.functions.OrderedPairs.register(spark)
     val gen = Gen.chooseNum(0, 25).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(-1000000L, 1000000L)))
     (1 to 25).foreach { i =>
@@ -89,7 +87,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
   test("BoundedSortedList ≡ sort_array(collect_list) below the cap; " +
     "saturates AT the cap above it; partition-invariant merge") {
     import spark.implicits._
-    graft.functions.BoundedSortedList.register(spark)
     val gen = Gen.chooseNum(0, 60).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(-1000000L, 1000000L)))
     (1 to 25).foreach { i =>
@@ -121,7 +118,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
 
   test("MinHash: sig(A ∪ B) = elementwise min(sig(A), sig(B))") {
     import spark.implicits._
-    graft.functions.MinHashSig.register(spark)
     val gen = Gen.chooseNum(1, 60).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(Long.MinValue / 2, Long.MaxValue / 2)))
     def sig(hs: Seq[Long]): Seq[Long] =
@@ -140,7 +136,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
   test("KMV sketch is partition-invariant: 1 vs 7 partitions, shuffled " +
     "input order — identical sketch") {
     import spark.implicits._
-    graft.functions.KmvSketch.register(spark)
     val gen = Gen.listOfN(5000, Gen.chooseNum(0L, 800L)) // heavy dups
     (1 to 5).foreach { i =>
       val vs = sample(gen, 4000L + i)
@@ -158,8 +153,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
   test("CosineAll row k is bit-equal to pairwise CosineSim against " +
     "matrix row k") {
     import spark.implicits._
-    graft.functions.CosineAll.register(spark)
-    graft.functions.CosineSim.register(spark)
     val vecGen = Gen.listOfN(16, Gen.chooseNum(-100, 100).map(_ / 16.0))
     (1 to 15).foreach { i =>
       val v = sample(vecGen, 5000L + i)
@@ -195,7 +188,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
   test("GridGram ≡ naive toGrid products over random float vectors, " +
     "and its moment sums are partition-invariant") {
     import spark.implicits._
-    graft.functions.GridGram.register(spark)
     val vecGen = Gen.chooseNum(1, 12).flatMap(d =>
       Gen.listOfN(d, Gen.chooseNum(-2.0, 2.0).map(_.toFloat)))
     (1 to 5).foreach { i =>
@@ -244,7 +236,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
     "serialization round-trips through the expression, and the flag " +
     "is partition-count invariant (q168's superset contract)") {
     import spark.implicits._
-    graft.functions.BloomContains.register(spark)
     val gen = Gen.chooseNum(1, 300).flatMap(n =>
       Gen.listOfN(n, Gen.chooseNum(Long.MinValue, Long.MaxValue)))
     (1 to 20).foreach { i =>
@@ -356,7 +347,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
     "false positives, no false negatives (the Bloom sibling's missing " +
     "half), duplicate-tolerant serialize") {
     import spark.implicits._
-    graft.functions.SortedLongsContain.register(spark)
     val gen = for {
       n <- Gen.chooseNum(0, 400)
       members <- Gen.listOfN(n, Gen.chooseNum(-100000L, 100000L))
@@ -381,7 +371,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
   test("TopKIdsByScore ≡ ROW_NUMBER()<=k window over random scored rows, " +
     "and is partition-invariant (map-side partial merge cannot change it)") {
     import spark.implicits._
-    graft.functions.TopKIdsByScore.register(spark)
     // scores drawn from a SMALL grid so ties are common — the
     // (score DESC, id ASC) tie-break is the claim under test; ids unique
     // per group (the caller contract)
@@ -412,9 +401,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
       "and BigramModelScore's [total, common] equals the histogram sums " +
       "(the q123 r13 contract, incl. pack-order ≡ UTF8-binary-order)") {
     import spark.implicits._
-    graft.functions.CharNgramCounts.register(spark)
-    graft.functions.TopBigramsByCount.register(spark)
-    graft.functions.BigramModelScore.register(spark)
     import graft.functions.CharNgramCounts.charNgramCounts
     def unpack(p: Long): String =
       new String(Character.toChars((p >> 21).toInt)) +
@@ -461,7 +447,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
       "random text (bullets, ellipses, hashes, tabs, unicode, stops — " +
       "the q177 r13 contract)") {
     import spark.implicits._
-    graft.functions.GopherStats.register(spark)
     val tokenGen = Gen.frequency(
       5 -> Gen.alphaStr.map(_.take(8)),
       2 -> Gen.oneOf(graft.functions.GopherStats.Stops),
@@ -511,7 +496,6 @@ class ExpressionPropertySpec extends AnyFunSuite {
   test("SigAgree ≡ size(filter(zip_with(a,b,===),id)) over ragged/null " +
       "random signature arrays (the q46 est_jaccard contract)") {
     import spark.implicits._
-    graft.functions.SigAgree.register(spark)
     // Ragged lengths and null elements exercise the zip_with padding
     // semantics (pad-null → === null → filtered); values drawn from a
     // SMALL domain so equal positions actually occur.

@@ -55,7 +55,6 @@ class HashedBowSpec extends AnyFunSuite {
 
   test("gram emits [z, z_i*z_j row-major upper] — brute-force equality") {
     import spark.implicits._
-    HashedBowGram.register(spark)
     val text = "the quick brown fox the lazy dog the end"
     val y = 1L
     val got = Seq((text, y)).toDF("t", "y")
@@ -73,7 +72,6 @@ class HashedBowSpec extends AnyFunSuite {
 
   test("score is the literal-model dot product; null text scores null") {
     import spark.implicits._
-    HashedBowScore.register(spark)
     val w = (0 until HashedBow.Dims).map(i => (i * 7 - 50).toLong)
     val text = "alpha beta beta gamma"
     val got = Seq(Some(text), None).toDF("t")
@@ -88,8 +86,6 @@ class HashedBowSpec extends AnyFunSuite {
   test("property: 200 seeded random texts — gram equals the brute-force " +
     "moment vector of features(), score equals the hand dot product") {
     import spark.implicits._
-    HashedBowGram.register(spark)
-    HashedBowScore.register(spark)
     val rnd = new scala.util.Random(188)
     val alphabets = Seq("abcdefgh", "the a of to in", "αβγδ", "日本語漢字",
       "x1 y2 z3 !?", "  ", "ÄÖÜäöü", "mixed 语言 text")
@@ -123,7 +119,6 @@ class HashedBowSpec extends AnyFunSuite {
   test("model shorter than Dims scores the missing tail as zero " +
     "(the empty-corpus degenerate)") {
     import spark.implicits._
-    HashedBowScore.register(spark)
     val got = Seq("anything here").toDF("t")
       .select(HashedBowScore.bowScore(col("t"), Seq.empty[Long]).as("s"))
       .collect()(0).getLong(0)

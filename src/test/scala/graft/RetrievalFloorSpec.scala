@@ -37,7 +37,6 @@ class RetrievalFloorSpec extends AnyFunSuite {
 
   test("TopKRowsByScore == ORDER BY score DESC, id LIMIT k (ties, NaN, " +
     "null-skip) across partition merges") {
-    TopKRowsByScore.register(spark)
     import spark.implicits._
     // ties at 2.0 (ids 7, 3 — id ASC breaks), a NaN (ranks FIRST under
     // DESC like Spark's orderBy), a null score (skipped entirely)

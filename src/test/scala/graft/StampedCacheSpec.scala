@@ -128,7 +128,6 @@ class StampedCacheSpec extends AnyFunSuite {
   }
 
   test("TopKRowsByScore rejects mistyped calls at analysis") {
-    graft.functions.TopKRowsByScore.register(spark)
     import spark.implicits._
     val df = Seq(("x", 1L)).toDF("s", "id")
     val err = intercept[org.apache.spark.sql.AnalysisException] {

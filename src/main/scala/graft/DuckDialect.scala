@@ -55,6 +55,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[guidance]].
   */
 object DuckDialect {
+  import Lex.{matchClose, splitTop, topComma, topKeyword, topKeywordAll}
 
   /** DuckDB name → Spark name, applied at call sites only. Every pair is
     * semantics-preserving for the argument forms both engines accept. */
@@ -127,8 +128,10 @@ object DuckDialect {
     "unnest" -> "explode")
 
   /** Rewrite DuckDB-dialect SQL to Spark SQL. A pure text function — no
-    * session needed; quoted regions are handled by a real scan (never
-    * regex over the whole string), comments pass through untouched.
+    * session needed; quoted spans come from [[Lex]] (never regex over
+    * the whole string). Comments are blanked first ([[Lex.blankComments]]),
+    * so no bridge ever sees one; a text the rewrite leaves otherwise
+    * unchanged comes back as given, comments included.
     * Statement-level clauses Spark lacks (QUALIFY, DISTINCT ON) bridge
     * first; the char-scan then rewrites expression-level duckisms over
     * the restructured text (so a bridged statement's predicate/keys can
@@ -136,52 +139,23 @@ object DuckDialect {
     * text-bridged here: it needs live schemas and a scale guard, so
     * only [[sql]] expands it (see the chain Scaladoc). */
   def rewrite(sql0: String): String = {
+    val clean = Lex.blankComments(sql0)
+    val out = rewriteClean(clean)
+    if (out == clean) sql0 else out
+  }
+
+  private def rewriteClean(clean: String): String = {
     val sql = bridgeDistinctOn(bridgeQualify(
       bridgeUnpivot(bridgeSampleRowsDeep(
-        bridgeCommaLateralSeries(sql0)))))
+        bridgeCommaLateralSeries(clean)))))
     val n = sql.length
     val sb = new StringBuilder(n + 16)
     var i = 0
     while (i < n) {
       val c = sql.charAt(i)
-      if (c == '\'') { // string literal: double the backslashes, keep ''
-        sb.append('\''); i += 1
-        var closed = false
-        while (i < n && !closed) {
-          sql.charAt(i) match {
-            case '\'' if i + 1 < n && sql.charAt(i + 1) == '\'' =>
-              sb.append("''"); i += 2
-            case '\'' => sb.append('\''); i += 1; closed = true
-            case '\\' => sb.append("\\\\"); i += 1
-            case ch => sb.append(ch); i += 1
-          }
-        }
-      } else if (c == '"') { // identifier (DuckDB strings are never "")
-        sb.append('`'); i += 1
-        var closed = false
-        while (i < n && !closed) {
-          sql.charAt(i) match {
-            case '"' if i + 1 < n && sql.charAt(i + 1) == '"' =>
-              sb.append('"'); i += 2
-            case '"' => sb.append('`'); i += 1; closed = true
-            case ch => sb.append(ch); i += 1
-          }
-        }
-      } else if (c == '`') {
-        // backtick identifier (emitted by the pre-bridges, e.g. the
-        // rendered-expression unnest column names — r14): verbatim, or
-        // the scan would rewrite duckisms INSIDE the quoted name
-        sb.append('`'); i += 1
-        while (i < n && sql.charAt(i) != '`') { sb.append(sql.charAt(i)); i += 1 }
-        if (i < n) { sb.append('`'); i += 1 }
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val e = sql.indexOf('\n', i) // line comment: verbatim
-        val end = if (e < 0) n else e + 1
-        sb.append(sql.substring(i, end)); i = end
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2) // block comment: verbatim
-        val end = if (e < 0) n else e + 2
-        sb.append(sql.substring(i, end)); i = end
+      val q = Lex.skip(sql, i)
+      if (q > i) { // quoted span: literal or identifier, in Spark's spelling
+        sb.append(Lex.toSpark(sql, i, q)); i = q
       } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '/') {
         // integer division — DuckDB's `//` TRUNCATES toward zero
         // (-7 // 2 = -3, verified), exactly Spark's `div`
@@ -207,7 +181,7 @@ object DuckDialect {
         !(Character.isLetterOrDigit(p) || p == '_' || p == ')' ||
           p == ']' || p == '\'' || p == '"' || p == '`')
       })) {
-        val handled = scanMatch(sql, i).flatMap { after =>
+        val handled = matchClose(sql, i).flatMap { after =>
           val inner = sql.substring(i + 1, after - 1)
           val f = topKeyword(inner, "for")
           if (f < 0) {
@@ -260,7 +234,7 @@ object DuckDialect {
         // also accepted — {a: 1} ≡ {'a': 1}, verified) → named_struct.
         // Spark parses no '{' expression, so an entry this parse cannot
         // bind leaves the text untouched → guidance.
-        val handled = scanMatch(sql, i).flatMap { after =>
+        val handled = matchClose(sql, i).flatMap { after =>
           splitTop(sql.substring(i + 1, after - 1)).flatMap { parts =>
             val kvs = parts.map(structEntry)
             if (kvs.isEmpty || kvs.exists(_.isEmpty)) None
@@ -396,7 +370,7 @@ object DuckDialect {
           // names re-emit backticked, Spark's quoting); anything else
           // falls through to guidance. The replacement exprs rewrite
           // recursively.
-          val handled = scanCall(sql, j).flatMap { case (after, _) =>
+          val handled = matchClose(sql, j).flatMap { after =>
             splitTop(sql.substring(j + 1, after - 1)).flatMap { args =>
               val parsed = args.map { a =>
                 val t = a.trim
@@ -407,11 +381,8 @@ object DuckDialect {
                   // escapes to " and double embedded backticks — an
                   // ident containing a backtick must not produce an
                   // unbalanced Spark ident.
-                  val n =
-                    if (raw.startsWith("\""))
-                      "`" + raw.substring(1, raw.length - 1)
-                        .replace("\"\"", "\"").replace("`", "``") + "`"
-                    else raw
+                  val n = Lex.quotedIdent(raw)
+                    .fold(raw)(v => "`" + v.replace("`", "``") + "`")
                   (t.substring(0, mm.start), n)
                 }
               }
@@ -443,7 +414,7 @@ object DuckDialect {
               // DECIMAL(18,3)). A spelling outside the map passes
               // through untouched — Spark-native types need nothing,
               // engine-specific ones (hugeint, …) fail loudly there.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 val body = sql.substring(j + 1, after - 1)
                 topKeywordAll(body, "as").lastOption.flatMap { asAt =>
                   val ty = body.substring(asAt + 2).trim
@@ -463,10 +434,10 @@ object DuckDialect {
                 i = after
               }
             case "string_agg" | "group_concat" =>
-              scanCall(sql, j).map { case (after, topComma) =>
-                sb.append("listagg(")
-                  .append(rewrite(sql.substring(j + 1, after - 1)))
-                if (!topComma) sb.append(", ','")
+              matchClose(sql, j).map { after =>
+                val args = sql.substring(j + 1, after - 1)
+                sb.append("listagg(").append(rewrite(args))
+                if (!topComma(args)) sb.append(", ','")
                 sb.append(')')
                 i = after
               }
@@ -479,7 +450,7 @@ object DuckDialect {
               // rewrite flattens each `ident = expr` argument into a
               // ('ident', expr) literal pair that DuckCompat's builder
               // re-pairs (values and bracket lists rewrite recursively).
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1)).map { args =>
                   val OptRe =
                     """(?s)^\s*([A-Za-z_][A-Za-z_0-9]*)\s*=\s*(?!=)(.*)$""".r
@@ -493,7 +464,7 @@ object DuckDialect {
                 }
               }
             case "list_distinct" =>
-              scanCall(sql, j).map { case (after, _) =>
+              matchClose(sql, j).map { after =>
                 sb.append("array_distinct(filter(")
                   .append(rewrite(sql.substring(j + 1, after - 1)))
                   .append(", _graft_e -> _graft_e IS NOT NULL))")
@@ -507,7 +478,7 @@ object DuckDialect {
               // so the text form must stand without the session natives).
               // The list argument is duplicated textually — the size()
               // probe is cheap next to any real list expression.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1))
                   .filter(_.length == 2).map { args =>
                     val x = rewrite(args(0)).trim
@@ -528,7 +499,7 @@ object DuckDialect {
               // DuckDB: the COUNT of distinct non-NULL elements
               // (verified: list_unique([1,1,2,NULL,NULL]) = 2, [] = 0)
               // — a BIGINT, not a list
-              scanCall(sql, j).map { case (after, _) =>
+              matchClose(sql, j).map { after =>
                 sb.append("CAST(size(array_distinct(filter(")
                   .append(rewrite(sql.substring(j + 1, after - 1)))
                   .append(", _graft_e -> _graft_e IS NOT NULL))) AS BIGINT)")
@@ -537,7 +508,8 @@ object DuckDialect {
             case "array_length" =>
               // 1-arg form only — the 2-arg (list, dim) form has no
               // Spark twin and falls through untouched into guidance
-              scanCall(sql, j).collect { case (after, false) =>
+              matchClose(sql, j).filterNot(a => topComma(sql.substring(j + 1, a - 1)))
+                .map { after =>
                 sb.append("array_size(")
                   .append(rewrite(sql.substring(j + 1, after - 1)))
                   .append(')')
@@ -548,7 +520,7 @@ object DuckDialect {
               // JDK twins (strftime accepts either arg order — the format
               // is whichever literal contains a '%'); non-literal or
               // unsupported-code formats fall through into guidance.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1))
                   .filter(_.length == 2).flatMap { args =>
                     val li = args.indexWhere(a =>
@@ -583,7 +555,7 @@ object DuckDialect {
               // would make Spark's slice throw) and recomputes the
               // inclusive-end length against the clamped start, floored
               // at 0 so an end still past the head yields [] not an error.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1))
                   .filter(_.length == 3).flatMap { args =>
                     (intLit(args(1)), intLit(args(2))) match {
@@ -611,7 +583,7 @@ object DuckDialect {
             case "struct_pack" =>
               // struct_pack(k := v, …) → named_struct('k', v, …); every
               // top-level arg must be an `ident := expr` pair.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1)).flatMap { args =>
                   val pairs = args.map { a =>
                     val at = a.indexOf(":=")
@@ -649,7 +621,7 @@ object DuckDialect {
               // both give ['h','é','l','l','o'] / [''] on '' / NULL
               // propagation), so it bridges as-is (r12). Non-literal
               // separators fall to guidance.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1))
                   .filter(_.length == 2).flatMap { args =>
                     bareLiteral(args(1)).map { sep =>
@@ -668,7 +640,7 @@ object DuckDialect {
               // is (array, element) — a plain rename would silently swap
               // them, so this path swaps them back (verified equal:
               // list_prepend(0,[1,2]) = array_prepend([1,2],0) = [0,1,2])
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1))
                   .filter(_.length == 2).map { args =>
                     sb.append("array_prepend(")
@@ -685,7 +657,7 @@ object DuckDialect {
               // DuckDB's regexp_full_match('ab\n','ab') is false (both
               // verified) — \z admits no trailing terminator. Literal
               // patterns only (the wrap must happen inside the literal).
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1))
                   .filter(_.length == 2).flatMap { args =>
                     bareLiteral(args(1)).map { pat =>
@@ -702,7 +674,7 @@ object DuckDialect {
               // both engines ("smallest value with cume_dist ≥ p") —
               // the one divergence is TYPE: Spark's percentile_disc
               // returns DOUBLE where DuckDB preserves the input type.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1)).flatMap { args =>
                   if (args.length < 1 || args.length > 2) None
                   else Some {
@@ -727,7 +699,7 @@ object DuckDialect {
               // unit before any registered function could catch it. The
               // 2-arg Spark form and unmapped parts (century/decade/…)
               // pass through untouched (the 2-arg one is valid Spark).
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1))
                   .filter(_.length == 3).flatMap { args =>
                     bareLiteral(args(0))
@@ -756,7 +728,7 @@ object DuckDialect {
               // its TVF form matches Spark's native range() and passes
               // through untouched; the scalar list form has no Spark
               // twin → guidance.
-              scanCall(sql, j).flatMap { case (after, _) =>
+              matchClose(sql, j).flatMap { after =>
                 splitTop(sql.substring(j + 1, after - 1)).flatMap { args =>
                   val inner = args.map(a => rewrite(a).trim)
                   if (inner.isEmpty || inner.length > 3 ||
@@ -778,7 +750,8 @@ object DuckDialect {
               // epoch(ts) returns FRACTIONAL seconds in DuckDB (verified:
               // epoch(… 11:59:44.123456) = 1627991984.123456), so the
               // bridge goes through unix_micros, not unix_timestamp.
-              scanCall(sql, j).collect { case (after, false) =>
+              matchClose(sql, j).filterNot(a => topComma(sql.substring(j + 1, a - 1)))
+                .map { after =>
                 sb.append("(unix_micros(")
                   .append(rewrite(sql.substring(j + 1, after - 1)).trim)
                   .append(") / 1e6)") // 1e6 is a DOUBLE literal in Spark —
@@ -828,80 +801,199 @@ object DuckDialect {
     * after the chain. None when `start` is not at an identifier. */
   private def parseIdentChain(sql: String, start: Int)
       : Option[(String, Int)] = {
-    val n = sql.length
     val out = new StringBuilder
     var i = start
-    def one(): Boolean =
-      if (i < n && sql.charAt(i) == '"') {
-        i += 1; out.append('`')
-        while (i < n && sql.charAt(i) != '"') { out.append(sql.charAt(i)); i += 1 }
-        if (i >= n) false else { i += 1; out.append('`'); true }
-      } else if (i < n && (Character.isLetter(sql.charAt(i)) ||
-        sql.charAt(i) == '_')) {
-        while (i < n && (Character.isLetterOrDigit(sql.charAt(i)) ||
-          sql.charAt(i) == '_')) { out.append(sql.charAt(i)); i += 1 }
-        true
-      } else false
+    def one(): Boolean = Lex.readQuotedIdent(sql, i) match {
+      case Some((name, end)) => out.append('`').append(name).append('`'); i = end; true
+      case None if i < sql.length && (Character.isLetter(sql.charAt(i)) ||
+          sql.charAt(i) == '_') =>
+        val w = readWord(sql, i); out.append(w); i += w.length; true
+      case None => false
+    }
     if (!one()) return None
-    while (i < n && sql.charAt(i) == '.') {
+    while (i < sql.length && sql.charAt(i) == '.') {
       out.append('.'); i += 1
       if (!one()) return None
     }
     Some((out.toString, i))
   }
 
-  /** Split an argument list on TOP-LEVEL commas (parens, brackets and
-    * both quote kinds respected). None on unbalanced text. */
-  private def splitTop(s: String): Option[Seq[String]] = {
-    val n = s.length
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      s.charAt(i) match {
-        case '\'' =>
-          cur.append('\''); i += 1
-          var closed = false
-          while (i < n && !closed) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') { cur.append("''"); i += 2 }
-              else { cur.append('\''); closed = true; i += 1 }
-            } else { cur.append(s.charAt(i)); i += 1 }
-          }
-          if (!closed) return None
-        case '"' =>
-          cur.append('"'); i += 1
-          while (i < n && s.charAt(i) != '"') { cur.append(s.charAt(i)); i += 1 }
-          if (i >= n) return None
-          cur.append('"'); i += 1
-        case c @ ('(' | '[' | '{') => depth += 1; cur.append(c); i += 1
-        case c @ (')' | ']' | '}') => depth -= 1; cur.append(c); i += 1
-        case ',' if depth == 0 => parts += cur.toString; cur.setLength(0); i += 1
-        case c => cur.append(c); i += 1
+  /** DuckDB's lexical rules, decided in ONE place: quoted spans — '…'
+    * literals with '' escapes, "…" identifiers with "" escapes, `…`
+    * identifiers — and comments, `--` to the end of the line and
+    * `/* … */`. Every scan in this file takes its span bounds from here;
+    * no other code scans for a quote or comment character. Comments are
+    * blanked once on entry ([[rewrite]], [[sqlNoCompat]]), so the scans
+    * below never meet one. */
+  private object Lex {
+    private def isQuote(c: Char): Boolean = c == '\'' || c == '"' || c == '`'
+
+    /** Index just past the quoted span opening at `i` (a doubled quote
+      * inside is an escape), `i` itself when no quote opens there, -1
+      * when the span never closes. */
+    private def spanEnd(s: String, i: Int): Int = {
+      val q = s.charAt(i)
+      if (!isQuote(q)) return i
+      var k = i + 1
+      while (k < s.length) {
+        if (s.charAt(k) != q) k += 1
+        else if (k + 1 < s.length && s.charAt(k + 1) == q) k += 2
+        else return k + 1
       }
+      -1
     }
-    if (depth != 0) None
-    else { parts += cur.toString; Some(parts.toSeq) }
+
+    /** [[spanEnd]] with an unclosed span running to the end of `s`. */
+    def skip(s: String, i: Int): Int = {
+      val e = spanEnd(s, i)
+      if (e < 0) s.length else e
+    }
+
+    /** `s` with every comment replaced by one space (a line comment
+      * keeps its newline); quoted spans stay verbatim. */
+    def blankComments(s: String): String =
+      if (s.indexOf("--") < 0 && s.indexOf("/*") < 0) s else blank(s, spans = false)
+
+    /** `s` with every quoted span replaced by one space. */
+    def blankQuoted(s: String): String = blank(s, spans = true)
+
+    private def blank(s: String, spans: Boolean): String = {
+      val sb = new StringBuilder(s.length)
+      var i = 0
+      while (i < s.length) {
+        val e = skip(s, i)
+        if (e > i) { if (spans) sb.append(' ') else sb.append(s.substring(i, e)); i = e }
+        else if (!spans && s.startsWith("--", i)) {
+          val nl = s.indexOf('\n', i)
+          sb.append(' '); i = if (nl < 0) s.length else nl
+        } else if (!spans && s.startsWith("/*", i)) {
+          val close = s.indexOf("*/", i + 2)
+          sb.append(' '); i = if (close < 0) s.length else close + 2
+        } else { sb.append(s.charAt(i)); i += 1 }
+      }
+      sb.toString
+    }
+
+    /** The span s[i, e) in Spark's spelling: a DuckDB literal doubles its
+      * backslashes (DuckDB literals are escape-free, Spark's default
+      * literals process C escapes), a "double-quoted" identifier becomes
+      * a backtick one with its "" escapes collapsed, and a backtick span
+      * stays verbatim (it is already Spark's; the pre-bridges emit them).
+      * An unclosed span converts without a closing quote. */
+    def toSpark(s: String, i: Int, e: Int): String = s.charAt(i) match {
+      case '\'' => s.substring(i, e).replace("\\", "\\\\")
+      case '"' =>
+        val closed = spanEnd(s, i) == e
+        "`" + s.substring(i + 1, if (closed) e - 1 else e)
+          .replace("\"\"", "\"") + (if (closed) "`" else "")
+      case _ => s.substring(i, e)
+    }
+
+    private def read(s: String, i: Int, q: Char): Option[(String, Int)] =
+      if (i >= s.length || s.charAt(i) != q) None
+      else spanEnd(s, i) match {
+        case -1 => None
+        case e => Some((s.substring(i + 1, e - 1).replace(s"$q$q", q.toString), e))
+      }
+
+    /** The unescaped value of the closed '…' literal at `i` and the index
+      * after it. */
+    def readLiteral(s: String, i: Int): Option[(String, Int)] = read(s, i, '\'')
+
+    /** The unescaped name of the closed "…" identifier at `i` and the
+      * index after it. */
+    def readQuotedIdent(s: String, i: Int): Option[(String, Int)] = read(s, i, '"')
+
+    /** Some(value) when `t` is exactly one '…' literal. */
+    def literal(t: String): Option[String] =
+      readLiteral(t, 0).collect { case (v, e) if e == t.length => v }
+
+    /** Some(name) when `t` is exactly one "…" identifier. */
+    def quotedIdent(t: String): Option[String] =
+      readQuotedIdent(t, 0).collect { case (v, e) if e == t.length => v }
+
+    /** Walks `s` from `from` past every quoted span, calling `visit(i,
+      * depth)` at each other position; `depth` counts the (, [ and {
+      * brackets open around the char at i (a bracket reports the depth
+      * outside it). `visit` returns the next index to visit (a bracket's
+      * next index must be i + 1); s.length stops. The final depth, or None
+      * when a quoted span never closes. */
+    def walk(s: String, from: Int = 0)(visit: (Int, Int) => Int): Option[Int] = {
+      var i = from
+      var d = 0
+      while (i < s.length) {
+        val e = spanEnd(s, i)
+        if (e < 0) return None
+        if (e > i) i = e
+        else s.charAt(i) match {
+          case '(' | '[' | '{' => i = visit(i, d); d += 1
+          case ')' | ']' | '}' => d -= 1; i = visit(i, d)
+          case _ => i = visit(i, d)
+        }
+      }
+      Some(d)
+    }
+
+    /** [[walk]] over the words (a letter or '_', then letters, digits and
+      * '_') outside quoted spans: `visit(start, depth)` returns true to
+      * stop. */
+    def words(s: String, from: Int = 0)(visit: (Int, Int) => Boolean): Unit =
+      walk(s, from) { (i, d) =>
+        val c = s.charAt(i)
+        if (!(Character.isLetter(c) || c == '_')) i + 1
+        else if (visit(i, d)) s.length
+        else i + readWord(s, i).length
+      }
+
+    /** Index just past the bracket closing the `(`/`[`/`{` at `open` (all
+      * three kinds count toward one nesting depth, so `[f({'a': 1})]`
+      * matches); None when unbalanced or a quoted span never closes. */
+    def matchClose(s: String, open: Int): Option[Int] = {
+      var end = -1
+      walk(s, open) { (i, d) =>
+        if (d == 0 && i > open) { end = i + 1; s.length } else i + 1
+      }
+      if (end < 0) None else Some(end)
+    }
+
+    /** `s` split on its TOP-LEVEL commas; None on unbalanced text. */
+    def splitTop(s: String): Option[Seq[String]] = {
+      val cuts = scala.collection.mutable.ArrayBuffer(-1)
+      val depth = walk(s) { (i, d) =>
+        if (d == 0 && s.charAt(i) == ',') cuts += i
+        i + 1
+      }
+      if (!depth.contains(0)) None
+      else Some((cuts :+ s.length).sliding(2).map(c => s.substring(c(0) + 1, c(1))).toSeq)
+    }
+
+    /** True when `s` has a top-level comma (a call with more than one
+      * argument). */
+    def topComma(s: String): Boolean = splitTop(s).exists(_.length > 1)
+
+    /** Start indexes of the TOP-LEVEL occurrences of word `kw` (word-
+      * bounded, case-insensitive, outside quotes and brackets), in one
+      * pass. */
+    def topKeywordAll(s: String, kw: String): Seq[Int] =
+      topKeywords(s, kw, all = true)
+
+    private def topKeywords(s: String, kw: String, all: Boolean): Seq[Int] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Int]
+      words(s) { (i, d) =>
+        if (d == 0 && readWord(s, i).equalsIgnoreCase(kw)) out += i
+        out.nonEmpty && !all
+      }
+      out.toSeq
+    }
+
+    /** The first top-level occurrence of word `kw` in `s`, or -1. */
+    def topKeyword(s: String, kw: String): Int =
+      topKeywords(s, kw, all = false).headOption.getOrElse(-1)
   }
 
   /** Some(unescaped value) when the trimmed arg is exactly one
-    * single-quoted literal (interior quotes '' only). */
-  private def bareLiteral(arg: String): Option[String] = {
-    val t = arg.trim
-    if (t.length < 2 || t.head != '\'' || t.last != '\'') return None
-    val inner = t.substring(1, t.length - 1)
-    val out = new StringBuilder
-    var i = 0
-    while (i < inner.length) {
-      if (inner.charAt(i) == '\'') {
-        if (i + 1 < inner.length && inner.charAt(i + 1) == '\'') {
-          out.append('\''); i += 2
-        } else return None // a bare quote ⇒ not ONE literal
-      } else { out.append(inner.charAt(i)); i += 1 }
-    }
-    Some(out.toString)
-  }
+    * single-quoted literal. */
+  private def bareLiteral(arg: String): Option[String] = Lex.literal(arg.trim)
 
   private def intLit(arg: String): Option[Long] = {
     val t = arg.trim
@@ -962,144 +1054,21 @@ object DuckDialect {
     Some(out.toString)
   }
 
-  /** Scan from the '(' at `open` to its MATCHING ')' (quoted regions
-    * skipped): `(indexAfterCloseParen, sawTopLevelComma)`, or None when
-    * unbalanced — callers then fall back to the plain rename. */
-  private def scanCall(sql: String, open: Int): Option[(Int, Boolean)] = {
-    val n = sql.length
-    var i = open + 1
-    var depth = 1
-    var topComma = false
-    while (i < n && depth > 0) {
-      sql.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var closed = false
-          while (i < n && !closed) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else { closed = true; i += 1 }
-            } else i += 1
-          }
-        case '"' =>
-          i += 1
-          while (i < n && sql.charAt(i) != '"') i += 1
-          if (i < n) i += 1
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' => depth -= 1; i += 1
-        case ',' if depth == 1 => topComma = true; i += 1
-        case _ => i += 1
-      }
-    }
-    if (depth == 0) Some((i, topComma)) else None
-  }
-
-  /** Index just past the close matching the `[`/`{`/`(` at `open`
-    * (quote-aware; all three bracket kinds count toward one nesting
-    * depth, so mixed nesting like `[f({'a': 1})]` scans correctly).
-    * None when unbalanced. */
-  private def scanMatch(sql: String, open: Int): Option[Int] = {
-    val n = sql.length
-    var i = open
-    var depth = 0
-    while (i < n) {
-      sql.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var closed = false
-          while (i < n && !closed) {
-            if (sql.charAt(i) == '\'') {
-              if (i + 1 < n && sql.charAt(i + 1) == '\'') i += 2
-              else { closed = true; i += 1 }
-            } else i += 1
-          }
-          if (!closed) return None
-        case '"' =>
-          i += 1
-          while (i < n && sql.charAt(i) != '"') i += 1
-          if (i >= n) return None
-          i += 1
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' =>
-          depth -= 1; i += 1
-          if (depth == 0) return Some(i)
-        case _ => i += 1
-      }
-    }
-    None
-  }
-
-  /** Start index of the first TOP-LEVEL occurrence of word `kw` in `s`
-    * (word-bounded, case-insensitive, outside quotes and brackets), or
-    * -1. Used to spot the `FOR`/`IN`/`IF` of a list comprehension. */
-  private def topKeyword(s: String, kw: String): Int = {
-    val n = s.length
-    var i = 0
-    var depth = 0
-    while (i < n) {
-      s.charAt(i) match {
-        case '\'' =>
-          i += 1
-          var closed = false
-          while (i < n && !closed) {
-            if (s.charAt(i) == '\'') {
-              if (i + 1 < n && s.charAt(i + 1) == '\'') i += 2
-              else { closed = true; i += 1 }
-            } else i += 1
-          }
-        case '"' =>
-          i += 1
-          while (i < n && s.charAt(i) != '"') i += 1
-          if (i < n) i += 1
-        // comments never carry clause keywords (a commented-out
-        // `-- qualify` must not trigger a statement bridge)
-        case '-' if i + 1 < n && s.charAt(i + 1) == '-' =>
-          val e = s.indexOf('\n', i)
-          i = if (e < 0) n else e + 1
-        case '/' if i + 1 < n && s.charAt(i + 1) == '*' =>
-          val e = s.indexOf("*/", i + 2)
-          i = if (e < 0) n else e + 2
-        case '(' | '[' | '{' => depth += 1; i += 1
-        case ')' | ']' | '}' => depth -= 1; i += 1
-        case c if Character.isLetter(c) || c == '_' =>
-          val start = i
-          while (i < n && (Character.isLetterOrDigit(s.charAt(i)) ||
-            s.charAt(i) == '_')) i += 1
-          if (depth == 0 && s.substring(start, i)
-            .equalsIgnoreCase(kw)) return start
-        case _ => i += 1
-      }
-    }
-    -1
-  }
-
   /** `Some((key, valueText))` when the trimmed part is a struct-literal
     * entry: a single-quoted or bare-identifier key, then `:` (not `::`),
     * then the value expression. */
   private def structEntry(part: String): Option[(String, String)] = {
     val t = part.trim
-    if (t.isEmpty) return None
-    var i = 0
-    val key = new StringBuilder
-    if (t.head == '\'') {
-      i = 1
-      var closed = false
-      while (i < t.length && !closed) {
-        if (t.charAt(i) == '\'') {
-          if (i + 1 < t.length && t.charAt(i + 1) == '\'') {
-            key.append('\''); i += 2
-          } else { closed = true; i += 1 }
-        } else { key.append(t.charAt(i)); i += 1 }
-      }
-      if (!closed) return None
-    } else if (Character.isLetter(t.head) || t.head == '_') {
-      while (i < t.length && (Character.isLetterOrDigit(t.charAt(i)) ||
-        t.charAt(i) == '_')) { key.append(t.charAt(i)); i += 1 }
-    } else return None
+    val (key, end) = Lex.readLiteral(t, 0).orElse {
+      val w = if (t.nonEmpty && (Character.isLetter(t.head) || t.head == '_'))
+        readWord(t, 0) else ""
+      if (w.isEmpty) None else Some((w, w.length))
+    }.getOrElse(return None)
+    var i = end
     while (i < t.length && Character.isWhitespace(t.charAt(i))) i += 1
     if (i >= t.length || t.charAt(i) != ':' ||
       (i + 1 < t.length && t.charAt(i + 1) == ':')) return None
-    Some((key.toString, t.substring(i + 1)))
+    Some((key, t.substring(i + 1)))
   }
 
   /** The identifier/keyword word starting at `at` (empty when none). */
@@ -1125,19 +1094,12 @@ object DuckDialect {
     * counts only when NOT directly after `*` (that one is the star
     * modifier, Spark's own spelling of DuckDB's EXCLUDE). */
   private def hasTopSetOp(sql: String): Boolean = {
-    if (topKeyword(sql, "union") >= 0 ||
-      topKeyword(sql, "intersect") >= 0) return true
-    var off = 0
-    while (off < sql.length) {
-      val r = topKeyword(sql.substring(off), "except")
-      if (r < 0) return false
-      val at = off + r
-      var k = at - 1
-      while (k >= 0 && Character.isWhitespace(sql.charAt(k))) k -= 1
-      if (k < 0 || sql.charAt(k) != '*') return true
-      off = at + 6
-    }
-    false
+    topKeyword(sql, "union") >= 0 || topKeyword(sql, "intersect") >= 0 ||
+      topKeywordAll(sql, "except").exists { at =>
+        var k = at - 1
+        while (k >= 0 && Character.isWhitespace(sql.charAt(k))) k -= 1
+        k < 0 || sql.charAt(k) != '*'
+      }
   }
 
   /** Index in `s` where the statement's trailing clauses (top-level
@@ -1255,54 +1217,33 @@ object DuckDialect {
       (if (outerTail.isEmpty) "" else " " + outerTail)
   }
 
-  /** Start indexes of every TOP-LEVEL occurrence of word `kw`. */
-  private def topKeywordAll(s: String, kw: String): Seq[Int] = {
-    var out = Seq.empty[Int]
-    var off = 0
-    while (off <= s.length) {
-      val r = topKeyword(s.substring(off), kw)
-      if (r < 0) return out
-      out :+= off + r
-      off = off + r + kw.length
+  /** `s` with the inner text of each top-level `(…)` group replaced by
+    * `f(inner)`; quoted spans pass verbatim, and from a group that never
+    * closes the rest of `s` does too. */
+  private def mapGroups(s: String)(f: String => String): String = {
+    val sb = new StringBuilder(s.length + 16)
+    var i = 0
+    while (i < s.length) {
+      val q = Lex.skip(s, i)
+      if (q > i) { sb.append(s.substring(i, q)); i = q }
+      else if (s.charAt(i) == '(') matchClose(s, i) match {
+        case Some(after) =>
+          sb.append('(').append(f(s.substring(i + 1, after - 1))).append(')')
+          i = after
+        case None => sb.append(s.substring(i)); i = s.length
+      } else { sb.append(s.charAt(i)); i += 1 }
     }
-    out
+    sb.toString
   }
 
   /** [[bridgeSampleRows]] applied at EVERY nesting depth: the top-level
     * statement first, then each parenthesized segment recursively (a
     * sampled subquery — `SELECT count(*) FROM (SELECT * FROM t USING
-    * SAMPLE 7 ROWS)` — is the common aggregate-contract shape). Quoted
-    * regions are skipped by the same scan the rest of the shim uses. */
+    * SAMPLE 7 ROWS)` — is the common aggregate-contract shape). */
   private def bridgeSampleRowsDeep(sql: String): String = {
     val top = bridgeSampleRows(sql)
-    if (topKeywordAll(top, "using").isEmpty &&
-      !top.toLowerCase(java.util.Locale.ROOT).contains("using")) return top
-    val n = top.length
-    val sb = new StringBuilder(n + 16)
-    var i = 0
-    while (i < n) top.charAt(i) match {
-      case '\'' =>
-        sb.append('\''); i += 1
-        var closed = false
-        while (i < n && !closed) {
-          top.charAt(i) match {
-            case '\'' if i + 1 < n && top.charAt(i + 1) == '\'' =>
-              sb.append("''"); i += 2
-            case '\'' => sb.append('\''); closed = true; i += 1
-            case ch => sb.append(ch); i += 1
-          }
-        }
-      case '(' => scanCall(top, i) match {
-        case Some((after, _)) =>
-          sb.append('(')
-            .append(bridgeSampleRowsDeep(top.substring(i + 1, after - 1)))
-            .append(')')
-          i = after
-        case None => sb.append(top.substring(i)); i = n
-      }
-      case ch => sb.append(ch); i += 1
-    }
-    sb.toString
+    if (!top.toLowerCase(java.util.Locale.ROOT).contains("using")) top
+    else mapGroups(top)(bridgeSampleRowsDeep)
   }
 
   /** DuckDB's `USING SAMPLE n [ROWS]` — a RANDOM RESERVOIR of exactly
@@ -1394,8 +1335,9 @@ object DuckDialect {
     var j = f + 4
     while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
     val rel = parseIdentChain(sql, j) match {
-      case Some((ident, after)) => j = after; ident
-      case None => return sql
+      // `FROM USING SAMPLE …` reads USING itself as the relation: no bridge
+      case Some((ident, after)) if after <= usingAt => j = after; ident
+      case _ => return sql
     }
     while (j < sql.length && Character.isWhitespace(sql.charAt(j))) j += 1
     var alias = rel.split('.').last
@@ -1508,7 +1450,7 @@ object DuckDialect {
     * real correlated usage writes the unnest form) have no comma twin
     * in Spark; the twin is `LATERAL VIEW explode(sequence(…)) g AS i`.
     *
-    * A quote/comment-aware scan tracks a per-paren-depth in-FROM flag
+    * A quote-aware scan tracks a per-paren-depth in-FROM flag
     * and rewrites ONLY FROM-clause commas whose right-hand item is a
     * series call; every other comma (select lists, call arguments,
     * plain comma joins) passes through untouched. Trailing items emit
@@ -1569,7 +1511,7 @@ object DuckDialect {
       if (!isSeries && !isUnnest) return None
       val po = skipWs(j + w.length)
       if (po >= n || sql.charAt(po) != '(') return None
-      val (after, _) = scanCall(sql, po).getOrElse(return None)
+      val after = matchClose(sql, po).getOrElse(return None)
       val inner = sql.substring(po + 1, after - 1)
       val core =
         if (isUnnest) {
@@ -1597,7 +1539,7 @@ object DuckDialect {
         tbl = aw
         var k2 = skipWs(k + aw.length)
         if (k2 < n && sql.charAt(k2) == '(') {
-          val (ca, _) = scanCall(sql, k2).getOrElse(return None)
+          val ca = matchClose(sql, k2).getOrElse(return None)
           val cols = splitTop(sql.substring(k2 + 1, ca - 1))
             .getOrElse(return None).map(_.trim)
           // one BARE column name only — a series yields one column
@@ -1674,56 +1616,26 @@ object DuckDialect {
     // accepts `…, gs(…) LEFT JOIN v ON …`), and moving the series past
     // an outer join changes the null-extension side — refuse those to
     // guidance rather than risk a silently different shape
+    val joinWords = Set("join", "inner", "left", "right", "full", "cross",
+      "natural", "lateral", "asof")
     def noJoinAhead(from: Int): Boolean = {
-      var k = from
-      var depth = 0
-      while (k < n) {
+      var ok = true
+      Lex.walk(sql, from) { (k, d) =>
         val c = sql.charAt(k)
-        if (c == '\'') { k += 1
-          while (k < n && sql.charAt(k) != '\'') k += 1
-          k += 1
-        } else if (c == '"') { k += 1
-          while (k < n && sql.charAt(k) != '"') k += 1
-          k += 1
-        } else if (c == '(') { depth += 1; k += 1 }
-        else if (c == ')') { if (depth == 0) return true; depth -= 1; k += 1 }
-        else if (c == ';' && depth == 0) return true
-        else if ((Character.isLetter(c) || c == '_') && depth == 0) {
+        if (d < 0 || (c == ';' && d == 0)) n
+        else if (d == 0 && (Character.isLetter(c) || c == '_')) {
           val w = readWord(sql, k).toLowerCase(java.util.Locale.ROOT)
-          if (enders(w)) return true
-          if (w == "join" || w == "inner" || w == "left" || w == "right"
-            || w == "full" || w == "cross" || w == "natural" ||
-            w == "lateral" || w == "asof") return false
-          k += w.length
-        } else k += 1
+          ok = !joinWords(w)
+          if (enders(w) || !ok) n else k + w.length
+        } else k + 1
       }
-      true
+      ok
     }
     while (i < n) {
       val c = sql.charAt(i)
-      if (c == '\'') { // string literal: verbatim (incl. '' escapes)
-        sb.append(c); i += 1
-        var closed = false
-        while (i < n && !closed) {
-          if (sql.charAt(i) == '\'') {
-            if (i + 1 < n && sql.charAt(i + 1) == '\'') {
-              sb.append("''"); i += 2
-            } else { sb.append('\''); i += 1; closed = true }
-          } else { sb.append(sql.charAt(i)); i += 1 }
-        }
-      } else if (c == '"') { // quoted ident: verbatim
-        sb.append(c); i += 1
-        while (i < n && sql.charAt(i) != '"') { sb.append(sql.charAt(i)); i += 1 }
-        if (i < n) { sb.append('"'); i += 1 }
-      } else if (c == '-' && i + 1 < n && sql.charAt(i + 1) == '-') {
-        val e = sql.indexOf('\n', i)
-        val end = if (e < 0) n else e + 1
-        sb.append(sql.substring(i, end)); i = end
-      } else if (c == '/' && i + 1 < n && sql.charAt(i + 1) == '*') {
-        val e = sql.indexOf("*/", i + 2)
-        val end = if (e < 0) n else e + 2
-        sb.append(sql.substring(i, end)); i = end
-      } else if (c == '(') {
+      val q = Lex.skip(sql, i)
+      if (q > i) { sb.append(sql.substring(i, q)); i = q } // quoted span: verbatim
+      else if (c == '(') {
         inFrom = false :: inFrom; pending = Nil :: pending
         sb.append(c); i += 1
       } else if (c == ')') {
@@ -1928,7 +1840,7 @@ object DuckDialect {
     def identGroupHasAsof(jp: Int): Boolean = identGroupAfter(jp) && {
       var k2 = jp + 4
       while (k2 < sql.length && Character.isWhitespace(sql.charAt(k2))) k2 += 1
-      scanCall(sql, k2).exists { case (after, _) =>
+      matchClose(sql, k2).exists { after =>
         topKeyword(sql.substring(k2 + 1, after - 1), "asof") >= 0
       }
     }
@@ -2022,7 +1934,7 @@ object DuckDialect {
     // afterwards, so duckisms inside the subquery still bridge.
     def parseRel(): Option[String] =
       if (i < sql.length && sql.charAt(i) == '(')
-        scanCall(sql, i).flatMap { case (after, _) =>
+        matchClose(sql, i).flatMap { after =>
           val inner = sql.substring(i + 1, after - 1).trim
           val w0 = readWord(inner, 0).toLowerCase(java.util.Locale.ROOT)
           if (w0 != "select" && w0 != "with") None
@@ -2040,7 +1952,7 @@ object DuckDialect {
     // equi-free inner product is the nested-loop class the pair gate
     // cannot bound). Inner RIGHT/FULL keep refusing.
     def parseTreeMember(): Option[AsofTreeMember] =
-      scanCall(sql, i).flatMap { case (after, _) =>
+      matchClose(sql, i).flatMap { after =>
         val inner = sql.substring(i + 1, after - 1).trim
         if (topKeywordAll(inner, "join").length != 1) return None
         var k = 0
@@ -2115,7 +2027,7 @@ object DuckDialect {
     // the gate — and carry an ASOF somewhere (a no-ASOF multi-join
     // group keeps refusing)
     def parseMultiTree(): Option[AsofMultiTree] =
-      scanCall(sql, i).flatMap { case (after, _) =>
+      matchClose(sql, i).flatMap { after =>
         val inner = sql.substring(i + 1, after - 1).trim
         if (topKeyword(inner, "asof") < 0 &&
           !topKeywordAll(inner, "join").exists { jp =>
@@ -2158,7 +2070,7 @@ object DuckDialect {
       // one inner join → single tree; two or more → multi tree
       val groupJoins =
         if (!treeStart) 0
-        else scanCall(sql, i).map { case (after, _) =>
+        else matchClose(sql, i).map { after =>
           topKeywordAll(sql.substring(i + 1, after - 1), "join").length
         }.getOrElse(0)
       var multi =
@@ -2278,7 +2190,7 @@ object DuckDialect {
         while (k2 < sql.length && Character.isWhitespace(sql.charAt(k2)))
           k2 += 1
         if (k2 >= sql.length || sql.charAt(k2) != '(') return None
-        val close = scanMatch(sql, k2).getOrElse(return None)
+        val close = matchClose(sql, k2).getOrElse(return None)
         val colsU = splitTop(sql.substring(k2 + 1, close - 1))
           .getOrElse(return None).map(_.trim)
         if (colsU.isEmpty ||
@@ -2345,7 +2257,7 @@ object DuckDialect {
     * `CAST(e.ts AS DATE)` counts)? String literals are stripped first so
     * 'e.g.' text cannot false-positive. */
   private def refsAlias(e: String, a: String): Boolean = {
-    val noStr = e.replaceAll("'(?:[^']|'')*'", " ")
+    val noStr = Lex.blankQuoted(e)
     java.util.regex.Pattern.compile(
       "(?i)(?<![A-Za-z0-9_.`\"])" +
         java.util.regex.Pattern.quote(a) + "\\.").matcher(noStr).find()
@@ -2362,21 +2274,12 @@ object DuckDialect {
     def refsNew(e: String): Boolean = newAliases.exists(refsAlias(e, _))
     def refsEarlier(e: String): Boolean = earlier.exists(refsAlias(e, _))
     conjs.flatMap { c =>
-      var d = 0
-      var j = 0
       var eq = -1
-      while (j < c.length && eq < 0) {
-        c.charAt(j) match {
-          case '\'' => j += 1
-            while (j < c.length && c.charAt(j) != '\'') j += 1
-            j += 1
-          case '(' | '[' => d += 1; j += 1
-          case ')' | ']' => d -= 1; j += 1
-          case '=' if d == 0 &&
-            (j == 0 || "<>!".indexOf(c.charAt(j - 1)) < 0) &&
-            (j + 1 >= c.length || c.charAt(j + 1) != '=') => eq = j
-          case _ => j += 1
-        }
+      Lex.walk(c) { (j, d) =>
+        if (d == 0 && c.charAt(j) == '=' &&
+          (j == 0 || "<>!".indexOf(c.charAt(j - 1)) < 0) &&
+          (j + 1 >= c.length || c.charAt(j + 1) != '=')) { eq = j; c.length }
+        else j + 1
       }
       if (eq < 0) None
       else {
@@ -2402,11 +2305,9 @@ object DuckDialect {
     val n = text.length
     while (i < n) {
       val c = text.charAt(i)
-      if (c == '\'' || c == '"' || c == '`') {
-        val j = text.indexOf(c, i + 1)
-        val end = if (j < 0) n else j + 1
-        sb.append(text.substring(i, end)); i = end
-      } else if (Character.isLetter(c) || c == '_') {
+      val q = Lex.skip(text, i)
+      if (q > i) { sb.append(text.substring(i, q)); i = q }
+      else if (Character.isLetter(c) || c == '_') {
         val w = readWord(text, i)
         val prevOk = i == 0 || {
           val p = text.charAt(i - 1)
@@ -2655,12 +2556,9 @@ object DuckDialect {
         if (cols.isEmpty) return None
         cols.flatMap { case (a, cs) => cs.map(c => s"`${pref(a, c)}` AS `$c`") }
       case it => Seq(ColumnsAliasRe.findFirstMatchIn(it) match {
-        case Some(m) if !m.group(1).startsWith("'") =>
-          mapChainRefs(it.substring(0, m.start), earlier) +
-            " AS " + (if (m.group(1).startsWith("\""))
-              "`" + m.group(1).substring(1, m.group(1).length - 1)
-                .replace("\"\"", "\"") + "`"
-            else m.group(1))
+        case Some(m) if Lex.literal(m.group(1)).isEmpty =>
+          mapChainRefs(it.substring(0, m.start), earlier) + " AS " +
+            Lex.quotedIdent(m.group(1)).fold(m.group(1))(v => s"`$v`")
         case _ => it match {
           case QualRe(a, c)
             if earlierSet(a.toLowerCase(java.util.Locale.ROOT)) =>
@@ -2685,24 +2583,13 @@ object DuckDialect {
     def refsEarlier(e: String): Boolean = earlier.exists(refsAlias(e, _))
     val conjs = splitTopAnd(cond)
     def ineqOp(c: String): Option[(Int, String)] = {
-      var d = 0
-      var j = 0
-      while (j < c.length) {
-        c.charAt(j) match {
-          case '\'' => j += 1
-            while (j < c.length && c.charAt(j) != '\'') j += 1
-            j += 1
-          case '(' | '[' => d += 1; j += 1
-          case ')' | ']' => d -= 1; j += 1
-          case '<' | '>' if d == 0 =>
-            if (j + 1 < c.length && c.charAt(j + 1) == '>') return None
-            val op = if (j + 1 < c.length && c.charAt(j + 1) == '=')
-              c.substring(j, j + 2) else c.substring(j, j + 1)
-            return Some((j, op))
-          case _ => j += 1
-        }
+      var at = -1
+      Lex.walk(c) { (j, d) =>
+        if (d == 0 && (c.charAt(j) == '<' || c.charAt(j) == '>')) { at = j; c.length }
+        else j + 1
       }
-      None
+      if (at < 0 || c.startsWith(">", at + 1)) None
+      else Some((at, c.substring(at, if (c.startsWith("=", at + 1)) at + 2 else at + 1)))
     }
     val ineqs = conjs.zipWithIndex.flatMap { case (c, ix) =>
       ineqOp(c).map(o => (ix, c, o._1, o._2))
@@ -2945,7 +2832,7 @@ object DuckDialect {
     k += 2
     while (k < sql.length && Character.isWhitespace(sql.charAt(k))) k += 1
     if (k >= sql.length || sql.charAt(k) != '(') return sql
-    val close = scanMatch(sql, k).getOrElse(return sql)
+    val close = matchClose(sql, k).getOrElse(return sql)
     val keys = sql.substring(k + 1, close - 1).trim
     if (keys.isEmpty) return sql
     if (hasTopSetOp(sql) || topKeyword(sql, "qualify") >= 0) return sql
@@ -3041,11 +2928,7 @@ object DuckDialect {
       var alias: Option[String] = None
       UnpivotAliasRe.findFirstMatchIn(it).foreach { m =>
         val raw = m.group(1)
-        alias = Some(
-          if (raw.startsWith("'"))
-            raw.substring(1, raw.length - 1).replace("''", "'")
-          else if (raw.startsWith("\"")) raw.substring(1, raw.length - 1)
-          else raw)
+        alias = Some(Lex.literal(raw).orElse(Lex.quotedIdent(raw)).getOrElse(raw))
         it = it.substring(0, m.start).trim
       }
       val cols: Seq[String] =
@@ -3169,7 +3052,7 @@ object DuckDialect {
       if (readWord(text, i).equalsIgnoreCase("in")) {
         i += 2; ws()
         if (i >= text.length || text.charAt(i) != '(') return None
-        val close = scanMatch(text, i).getOrElse(return None)
+        val close = matchClose(text, i).getOrElse(return None)
         val items = splitTop(text.substring(i + 1, close - 1))
           .getOrElse(return None).map(_.trim)
         if (items.isEmpty || items.exists(_.isEmpty)) return None
@@ -3209,7 +3092,7 @@ object DuckDialect {
               val nm =
                 if (arg == "*") lf + "_star()"
                 else lf + "(" +
-                  arg.stripPrefix("\"").stripSuffix("\"") + ")"
+                  Lex.quotedIdent(arg).getOrElse(arg) + ")"
               (it, "_" + nm)
             case _ => (it, "")
           }
@@ -3364,18 +3247,15 @@ object DuckDialect {
     * Qualified refs (`x.f`, `f.x`) and quoted spans pass through. */
   private def substIdent(body: String, param: String, name: String)
       : String = {
-    // Spark string literals treat backslash as an escape (DuckDB does
-    // not) — double them so a column named a\b probes as itself
-    val lit = "'" + name.replace("\\", "\\\\").replace("'", "''") + "'"
+    // sqlLit doubles backslashes, so a column named a\b probes as itself
+    val lit = sqlLit(name)
     val sb = new StringBuilder
     var i = 0
     while (i < body.length) {
       val ch = body.charAt(i)
-      if (ch == '\'' || ch == '"') {
-        val j = body.indexOf(ch, i + 1)
-        val end = if (j < 0) body.length else j + 1
-        sb.append(body.substring(i, end)); i = end
-      } else if (Character.isLetter(ch) || ch == '_') {
+      val q = Lex.skip(body, i)
+      if (q > i) { sb.append(body.substring(i, q)); i = q }
+      else if (Character.isLetter(ch) || ch == '_') {
         val w = readWord(body, i)
         val prevOk = i == 0 || {
           val p = body.charAt(i - 1)
@@ -3449,17 +3329,17 @@ object DuckDialect {
     val e = e0.trim
     if (BareIdentChainRe.matches(e)) Some(e)
     else if (e.matches("""\d+(\.\d+)?""")) Some(e)
-    else if (e.length >= 2 && e.head == '\'' && e.last == '\'' &&
-      !e.substring(1, e.length - 1).contains('\'')) Some(e)
+    // a simple literal: one '…' span with no escaped quote inside
+    else if (Lex.literal(e).exists(_.length == e.length - 2)) Some(e)
     else if (e.startsWith("-")) {
       val rest = e.substring(1).trim
       if (rest.matches("""\d+(\.\d+)?""")) Some("-" + rest)
-      else if (rest.startsWith("(") && scanMatch(rest, 0).contains(rest.length))
+      else if (rest.startsWith("(") && matchClose(rest, 0).contains(rest.length))
         renderDuckExpr(rest).map(r => s"-($r)")
       else renderDuckAtom(rest).map(r => s"-($r)")
     } else if (e.length > 4 && e.substring(0, 4).equalsIgnoreCase("cast") &&
       e.indexOf('(') >= 4 && e.substring(4, e.indexOf('(')).trim.isEmpty &&
-      e.endsWith(")") && scanMatch(e, e.indexOf('(')).contains(e.length)) {
+      e.endsWith(")") && matchClose(e, e.indexOf('(')).contains(e.length)) {
       val body = e.substring(e.indexOf('(') + 1, e.length - 1)
       topKeywordAll(body, "as").lastOption.flatMap { asAt =>
         val ty = body.substring(asAt + 2).trim
@@ -3481,7 +3361,7 @@ object DuckDialect {
       val po = e.indexOf('(')
       if (po > 0 && e.endsWith(")") &&
         e.substring(0, po).trim.matches("[A-Za-z_][A-Za-z0-9_]*") &&
-        scanMatch(e, po).contains(e.length)) {
+        matchClose(e, po).contains(e.length)) {
         val body = e.substring(po + 1, e.length - 1)
         if (body.trim.isEmpty) None
         else splitTop(body) match {
@@ -3500,7 +3380,7 @@ object DuckDialect {
 
   private def renderDuckExpr(e0: String): Option[String] = {
     var e = e0.trim
-    while (e.length >= 2 && e.head == '(' && scanMatch(e, 0).contains(e.length))
+    while (e.length >= 2 && e.head == '(' && matchClose(e, 0).contains(e.length))
       e = e.substring(1, e.length - 1).trim
     renderDuckAtom(e).orElse {
       // NESTED binaries (r15 second/third pass, all DuckDB-pinned):
@@ -3526,12 +3406,9 @@ object DuckDialect {
         "exists", "any", "all", "distinct", "collate", "glob")
       while (i < e.length) {
         val c = e.charAt(i)
-        if (c == '\'') {
-          i += 1
-          while (i < e.length && e.charAt(i) != '\'') i += 1
-          i += 1
-          prev = '\''
-        } else if (c == '(') { d += 1; i += 1; prev = c }
+        val q = Lex.skip(e, i)
+        if (q > i) { prev = e.charAt(q - 1); i = q }
+        else if (c == '(') { d += 1; i += 1; prev = c }
         else if (c == ')') { d -= 1; i += 1; prev = c }
         else if (Character.isLetter(c) || c == '_') {
           val w = readWord(e, i)
@@ -3655,26 +3532,18 @@ object DuckDialect {
       val it = raw.trim
       // locate the word `columns` followed by '(' — quote-aware scan
       var at = -1
-      var ci = 0
-      while (at < 0 && ci < it.length) {
-        val c = it.charAt(ci)
-        if (c == '\'') { ci += 1
-          while (ci < it.length && it.charAt(ci) != '\'') ci += 1
-          ci += 1
-        } else if (Character.isLetter(c) || c == '_') {
-          val w = readWord(it, ci)
-          val boundary = ci == 0 || {
-            val p = it.charAt(ci - 1)
-            !(Character.isLetterOrDigit(p) || p == '_' || p == '.')
-          }
-          if (boundary && w.equalsIgnoreCase("columns")) {
-            var j2 = ci + w.length
-            while (j2 < it.length &&
-              Character.isWhitespace(it.charAt(j2))) j2 += 1
-            if (j2 < it.length && it.charAt(j2) == '(') at = ci
-          }
-          ci += w.length
-        } else ci += 1
+      Lex.words(it) { (ci, _) =>
+        val boundary = ci == 0 || {
+          val p = it.charAt(ci - 1)
+          !(Character.isLetterOrDigit(p) || p == '_' || p == '.')
+        }
+        if (boundary && readWord(it, ci).equalsIgnoreCase("columns")) {
+          var j2 = ci + 7
+          while (j2 < it.length &&
+            Character.isWhitespace(it.charAt(j2))) j2 += 1
+          if (j2 < it.length && it.charAt(j2) == '(') at = ci
+        }
+        at >= 0
       }
       if (at < 0) {
         // plain select item: feed its output name into the global dedup
@@ -3682,11 +3551,9 @@ object DuckDialect {
         else ColumnsAliasRe.findFirstMatchIn(it) match {
           case Some(m) =>
             val rawA = m.group(1)
-            val nm =
-              if (rawA.startsWith("'")) null // string-literal alias: skip
-              else if (rawA.startsWith("\""))
-                rawA.substring(1, rawA.length - 1).replace("\"\"", "\"")
-              else rawA
+            val nm = // a string-literal alias is skipped
+              if (Lex.literal(rawA).isDefined) null
+              else Lex.quotedIdent(rawA).getOrElse(rawA)
             if (nm == null) Seq(it)
             else {
               val nm2 = dedup(nm)
@@ -3706,7 +3573,7 @@ object DuckDialect {
         var open = at + 7
         while (open < it.length &&
           Character.isWhitespace(it.charAt(open))) open += 1
-        val close = scanMatch(it, open).getOrElse(return None)
+        val close = matchClose(it, open).getOrElse(return None)
         var tail = it.substring(close)
         // a second COLUMNS → refuse (no nested stars)
         if (tail.toLowerCase(java.util.Locale.ROOT).contains("columns"))
@@ -3722,13 +3589,9 @@ object DuckDialect {
         var aliasTemplate: Option[String] = None
         ColumnsAliasRe.findFirstMatchIn(tail).foreach { m =>
           val raw = m.group(1)
-          if (raw.startsWith("'"))
-            aliasTemplate =
-              Some(raw.substring(1, raw.length - 1).replace("''", "'"))
-          else if (raw.startsWith("\""))
-            aliasBase =
-              Some(raw.substring(1, raw.length - 1).replace("\"\"", "\""))
-          else aliasBase = Some(raw)
+          aliasTemplate = Lex.literal(raw)
+          if (aliasTemplate.isEmpty)
+            aliasBase = Some(Lex.quotedIdent(raw).getOrElse(raw))
           tail = tail.substring(0, m.start)
         }
         val arg = it.substring(open + 1, close - 1).trim
@@ -3738,6 +3601,9 @@ object DuckDialect {
         // schema raises DuckDB's binder error rather than silently
         // keeping everything
         val ExcludeRe = """(?is)^\*\s+EXCLUDE\s*\((.*)\)\s*$""".r
+        // one EXCLUDE entry: a "quoted" or bare column name
+        def exclName(e: String): Option[String] = Lex.quotedIdent(e)
+          .orElse(Some(e).filter(w => w.nonEmpty && readWord(w, 0) == w))
         // `* [EXCLUDE (…)] REPLACE (expr AS col, …)` (r13): replaced
         // columns keep their POSITION, take the expression's value, and
         // are NAMED by the alias's spelling (verified: `AS AA` over
@@ -3762,21 +3628,13 @@ object DuckDialect {
               val reps = splitTop(repBody).getOrElse(return None)
                 .map(_.trim).map {
                   case RepItemRe(e, a) =>
-                    val alias =
-                      if (a.startsWith("\""))
-                        a.substring(1, a.length - 1).replace("\"\"", "\"")
-                      else a
-                    (e, alias)
+                    (e, Lex.quotedIdent(a).getOrElse(a))
                   case _ => return None
                 }
               if (reps.isEmpty) return None
               val ex = Option(exBody).map { b =>
-                splitTop(b).getOrElse(return None).map(_.trim).map { e =>
-                  if (e.length >= 2 && e.startsWith("\"") &&
-                    e.endsWith("\"")) e.substring(1, e.length - 1)
-                  else if (e.nonEmpty && readWord(e, 0) == e) e
-                  else return None
-                }
+                splitTop(b).getOrElse(return None).map(_.trim)
+                  .map(exclName(_).getOrElse(return None))
               }.getOrElse(Nil)
               (reps.map(_._2) ++ ex)
                 .filterNot(t => cols.exists(_.equalsIgnoreCase(t)))
@@ -3816,12 +3674,7 @@ object DuckDialect {
               cols.filterNot(c => ex.exists(_.equalsIgnoreCase(c)))
             case ExcludeRe(body) =>
               val ex = splitTop(body).getOrElse(return None)
-                .map(_.trim).map { e =>
-                  if (e.length >= 2 && e.startsWith("\"") &&
-                    e.endsWith("\"")) e.substring(1, e.length - 1)
-                  else if (e.nonEmpty && readWord(e, 0) == e) e
-                  else return None
-                }
+                .map(_.trim).map(exclName(_).getOrElse(return None))
               if (ex.isEmpty) return None
               val missing = ex.filterNot(e =>
                 cols.exists(_.equalsIgnoreCase(e)))
@@ -4096,27 +3949,106 @@ object DuckDialect {
     * `('literal')` with no commas/options — the only read_parquet shape
     * that maps 1:1 onto Spark's `parquet.` identifier. */
   private def parseSingleLiteralCall(sql: String, open: Int)
-      : Option[(String, Int)] = {
-    val n = sql.length
-    var i = open + 1 // past '('
-    while (i < n && Character.isWhitespace(sql.charAt(i))) i += 1
-    if (i >= n || sql.charAt(i) != '\'') return None
-    i += 1
-    val p = new StringBuilder
-    var closed = false
-    while (i < n && !closed) {
-      sql.charAt(i) match {
-        case '\'' if i + 1 < n && sql.charAt(i + 1) == '\'' =>
-          p.append('\''); i += 2
-        case '\'' => closed = true; i += 1
-        case ch => p.append(ch); i += 1
-      }
+      : Option[(String, Int)] =
+    Lex.readLiteral(sql, skipWs(sql, open + 1)).flatMap { case (path, e) =>
+      val k = skipWs(sql, e)
+      if (k < sql.length && sql.charAt(k) == ')' && !path.contains('`'))
+        Some((path, k + 1))
+      else None
     }
-    if (!closed) return None
-    while (i < n && Character.isWhitespace(sql.charAt(i))) i += 1
-    if (i < n && sql.charAt(i) == ')' && !p.toString.contains('`'))
-      Some((p.toString, i + 1))
-    else None
+
+  /** Index of the first non-whitespace char of `s` at or after `i`. */
+  private def skipWs(s: String, i: Int): Int = {
+    var k = i
+    while (k < s.length && Character.isWhitespace(s.charAt(k))) k += 1
+    k
+  }
+
+  /** One parsed COPY statement, shared by both directions:
+    * `COPY (query)|table [(cols)] TO|FROM 'path' [(options)]`. `fmt` is
+    * the FORMAT option, else the path extension's (.parquet, .json /
+    * .ndjson, else csv); HEADER/DELIMITER stay None when not given. */
+  private case class CopyStmt(query: Option[String], table: String,
+      cols: Seq[String], to: Boolean, path: String, fmt: String,
+      header: Option[Boolean], delim: Option[String])
+
+  /** None for any shape outside the bridged subset (→ guidance): a query
+    * source or a column list loading FROM a file, or writing TO one with
+    * a column list, trailing text. An option outside FORMAT/HEADER/
+    * DELIMITER raises with the supported list. */
+  private def parseCopy(text: String): Option[CopyStmt] = {
+    val t = text.trim.stripSuffix(";").trim
+    if (!readWord(t, 0).equalsIgnoreCase("copy")) return None
+    var i = skipWs(t, 4)
+    var query: Option[String] = None
+    var table = ""
+    if (i < t.length && t.charAt(i) == '(') {
+      val after = matchClose(t, i).getOrElse(return None)
+      query = Some(t.substring(i + 1, after - 1)); i = after
+    } else parseIdentChain(t, i) match {
+      case Some((ident, after)) => table = ident; i = after
+      case None => return None
+    }
+    i = skipWs(t, i)
+    // optional column list (r12): `COPY t (b, a) FROM …`
+    var cols = Seq.empty[String]
+    if (query.isEmpty && i < t.length && t.charAt(i) == '(') {
+      val close = matchClose(t, i).getOrElse(return None)
+      cols = splitTop(t.substring(i + 1, close - 1)).getOrElse(return None)
+        .map { c0 =>
+          val c = c0.trim
+          parseIdentChain(c, 0) match {
+            case Some((ident, after)) if after == c.length &&
+              !ident.contains('.') => ident.stripPrefix("`").stripSuffix("`")
+            case _ => return None
+          }
+        }
+      i = skipWs(t, close)
+    }
+    val dir = readWord(t, i).toLowerCase(java.util.Locale.ROOT)
+    val to = dir == "to"
+    if (!to && (dir != "from" || query.nonEmpty)) return None
+    if (to && cols.nonEmpty) return None
+    val (path, afterPath) =
+      Lex.readLiteral(t, skipWs(t, i + dir.length)).getOrElse(return None)
+    i = skipWs(t, afterPath)
+    var fmt = ""
+    var header: Option[Boolean] = None
+    var delim: Option[String] = None
+    if (i < t.length && t.charAt(i) == '(') {
+      // QUOTE-AWARE option split: DELIMITER ',' is valid DuckDB and a raw
+      // split(',') would shear it apart (ADVICE follow-up)
+      val after = matchClose(t, i).getOrElse(return None)
+      for (o <- splitTop(t.substring(i + 1, after - 1)).getOrElse(return None)
+          .map(_.trim).filter(_.nonEmpty)) {
+        val k = readWord(o, 0).toLowerCase(java.util.Locale.ROOT)
+        val raw = o.drop(k.length).trim
+        val v = bareLiteral(raw).getOrElse(raw)
+        k match {
+          case "format" => fmt = v.toLowerCase(java.util.Locale.ROOT)
+          case "header" =>
+            val h = v.toLowerCase(java.util.Locale.ROOT)
+            header = Some(h.isEmpty || h == "true" || h == "1")
+          case "delimiter" | "delim" | "sep" => delim = Some(v)
+          case other => throw new IllegalArgumentException(
+            if (to) s"COPY option '$other' is not bridged (supported: " +
+              "FORMAT PARQUET|CSV|JSON, HEADER, DELIMITER) — use " +
+              "df.write options for the rest"
+            else s"COPY FROM option '$other' is not bridged (supported: " +
+              "FORMAT PARQUET|CSV|JSON, HEADER, DELIMITER) — use " +
+              "spark.read + INSERT for the rest")
+        }
+      }
+      i = skipWs(t, after)
+    }
+    if (i < t.length) return None // trailing junk -> guidance
+    if (fmt.isEmpty) {
+      val lower = path.toLowerCase(java.util.Locale.ROOT)
+      fmt = if (lower.endsWith(".parquet")) "parquet"
+      else if (lower.endsWith(".json") || lower.endsWith(".ndjson")) "json"
+      else "csv"
+    }
+    Some(CopyStmt(query, table, cols, to, path, fmt, header, delim))
   }
 
   /** DuckDB `COPY (query) TO 'path' [(options)]` / `COPY table TO …`
@@ -4139,81 +4071,11 @@ object DuckDialect {
     * The returned Count is taken from the WRITTEN data (parquet: a
     * metadata-only read; csv/json: one linear scan of what was just
     * written) so the source query executes exactly once. */
-  private def bridgeCopyTo(
-      spark: SparkSession, text: String): Option[DataFrame] = {
-    val t = text.trim.stripSuffix(";").trim
-    if (!readWord(t, 0).equalsIgnoreCase("copy")) return None
-    var i = 4
-    def ws(): Unit =
-      while (i < t.length && Character.isWhitespace(t.charAt(i))) i += 1
-    ws()
-    if (i >= t.length) return None
-    val source: org.apache.spark.sql.DataFrame =
-      if (t.charAt(i) == '(') scanCall(t, i) match {
-        case Some((after, _)) =>
-          val inner = t.substring(i + 1, after - 1)
-          i = after
-          sqlNoCompat(spark, inner)
-        case None => return None
-      } else parseIdentChain(t, i) match {
-        case Some((ident, after)) =>
-          i = after
-          if (i < t.length && t.charAt(i) == '(') return None // col list
-          spark.table(ident)
-        case None => return None
-      }
-    ws()
-    if (!readWord(t, i).equalsIgnoreCase("to")) return None
-    i += 2; ws()
-    if (i >= t.length || t.charAt(i) != '\'') return None
-    i += 1
-    val pathSb = new StringBuilder
-    var closed = false
-    while (i < t.length && !closed) t.charAt(i) match {
-      case '\'' if i + 1 < t.length && t.charAt(i + 1) == '\'' =>
-        pathSb.append('\''); i += 2
-      case '\'' => closed = true; i += 1
-      case ch => pathSb.append(ch); i += 1
-    }
-    if (!closed) return None
-    val path = pathSb.toString
-    ws()
-    var fmt = ""
-    var header = true
-    var delim = ","
-    if (i < t.length && t.charAt(i) == '(') scanCall(t, i) match {
-      case Some((after, _)) =>
-        val opts = t.substring(i + 1, after - 1)
-        i = after
-        // QUOTE-AWARE option split: DELIMITER ',' is valid DuckDB and a
-        // raw split(',') would shear it apart (ADVICE follow-up)
-        val items = splitTop(opts).getOrElse(return None)
-        for (o <- items.map(_.trim).filter(_.nonEmpty)) {
-          val k = readWord(o, 0).toLowerCase(java.util.Locale.ROOT)
-          val v = o.drop(k.length).trim
-            .stripPrefix("'").stripSuffix("'")
-            .toLowerCase(java.util.Locale.ROOT)
-          k match {
-            case "format" => fmt = v
-            case "header" => header = v.isEmpty || v == "true" || v == "1"
-            case "delimiter" | "delim" | "sep" =>
-              delim = o.drop(k.length).trim.stripPrefix("'").stripSuffix("'")
-            case other => throw new IllegalArgumentException(
-              s"COPY option '$other' is not bridged (supported: FORMAT " +
-                "PARQUET|CSV|JSON, HEADER, DELIMITER) — use " +
-                "df.write options for the rest")
-          }
-        }
-      case None => return None
-    }
-    ws()
-    if (i < t.length) return None // trailing junk -> guidance
-    if (fmt.isEmpty) {
-      val lower = path.toLowerCase(java.util.Locale.ROOT)
-      fmt = if (lower.endsWith(".parquet")) "parquet"
-      else if (lower.endsWith(".json") || lower.endsWith(".ndjson")) "json"
-      else "csv"
-    }
+  private def copyTo(spark: SparkSession, c: CopyStmt): DataFrame = {
+    val source = c.query.fold(spark.table(c.table))(sqlNoCompat(spark, _))
+    val (path, fmt) = (c.path, c.fmt)
+    val header = c.header.getOrElse(true)
+    val delim = c.delim.getOrElse(",")
     // DuckDB compresses COPY TO output by EXTENSION (pinned: .gz →
     // gzip bytes, .zst → zstd bytes; .gzip/.zstd write PLAIN bytes).
     // Spark's text writers take a compression OPTION and never look at
@@ -4251,7 +4113,7 @@ object DuckDialect {
         .option("multiLine", true).csv(path).count()
     }
     import spark.implicits._
-    Some(Seq(n).toDF("Count"))
+    Seq(n).toDF("Count")
   }
 
   /** `COPY <table> FROM 'path' [(FORMAT …, HEADER …, DELIMITER …)]` —
@@ -4273,84 +4135,9 @@ object DuckDialect {
     * positional file→list mapping, NULL-filled unlisted columns
     * (default-carrying / non-nullable unlisted columns refuse: DuckDB
     * applies the default there). */
-  private def bridgeCopyFrom(
-      spark: SparkSession, text: String): Option[DataFrame] = {
-    val t = text.trim.stripSuffix(";").trim
-    if (!readWord(t, 0).equalsIgnoreCase("copy")) return None
-    var i = 4
-    def ws(): Unit =
-      while (i < t.length && Character.isWhitespace(t.charAt(i))) i += 1
-    ws()
-    if (i >= t.length || t.charAt(i) == '(') return None
-    val ident = parseIdentChain(t, i) match {
-      case Some((id, after)) => i = after; id
-      case None => return None
-    }
-    ws()
-    // optional column list (r12): `COPY t (b, a) FROM …` — DuckDB maps
-    // FILE columns to the LISTED columns POSITIONALLY (header names are
-    // ignored — verified with a mismatching header) and fills unlisted
-    // columns with their DEFAULT (NULL when none)
-    var colList: Seq[String] = Seq.empty
-    if (i < t.length && t.charAt(i) == '(') {
-      val close = scanCall(t, i).getOrElse(return None)._1
-      colList = splitTop(t.substring(i + 1, close - 1))
-        .getOrElse(return None).map(_.trim)
-        .map { c =>
-          val p = parseIdentChain(c, 0)
-          p match {
-            case Some((ident, after)) if after == c.length &&
-              !ident.contains('.') => ident.stripPrefix("`").stripSuffix("`")
-            case _ => return None
-          }
-        }
-      if (colList.isEmpty) return None
-      i = close; ws()
-    }
-    if (!readWord(t, i).equalsIgnoreCase("from")) return None
-    i += 4; ws()
-    if (i >= t.length || t.charAt(i) != '\'') return None
-    i += 1
-    val pathSb = new StringBuilder
-    var closed = false
-    while (i < t.length && !closed) t.charAt(i) match {
-      case '\'' if i + 1 < t.length && t.charAt(i + 1) == '\'' =>
-        pathSb.append('\''); i += 2
-      case '\'' => closed = true; i += 1
-      case ch => pathSb.append(ch); i += 1
-    }
-    if (!closed) return None
-    val path = pathSb.toString
-    ws()
-    var fmt = ""
-    var header: Option[Boolean] = None
-    var delim: Option[String] = None
-    if (i < t.length && t.charAt(i) == '(') scanCall(t, i) match {
-      case Some((after, _)) =>
-        val items = splitTop(t.substring(i + 1, after - 1))
-          .getOrElse(return None)
-        i = after
-        for (o <- items.map(_.trim).filter(_.nonEmpty)) {
-          val k = readWord(o, 0).toLowerCase(java.util.Locale.ROOT)
-          val v = o.drop(k.length).trim
-            .stripPrefix("'").stripSuffix("'")
-            .toLowerCase(java.util.Locale.ROOT)
-          k match {
-            case "format" => fmt = v
-            case "header" => header = Some(v.isEmpty || v == "true" || v == "1")
-            case "delimiter" | "delim" | "sep" =>
-              delim = Some(o.drop(k.length).trim
-                .stripPrefix("'").stripSuffix("'"))
-            case other => throw new IllegalArgumentException(
-              s"COPY FROM option '$other' is not bridged (supported: " +
-                "FORMAT PARQUET|CSV|JSON, HEADER, DELIMITER) — use " +
-                "spark.read + INSERT for the rest")
-          }
-        }
-      case None => return None
-    }
-    ws()
-    if (i < t.length) return None // trailing junk -> guidance
+  private def copyFrom(spark: SparkSession, c: CopyStmt): DataFrame = {
+    val (ident, colList, path, fmt, header, delim) =
+      (c.table, c.cols, c.path, c.fmt, c.header, c.delim)
     // same divergence guard as the read_csv/read_json bridges (r15):
     // Spark decompresses .gzip/.zstd by extension, DuckDB reads those
     // extensions as raw bytes (it auto-detects only .gz/.zst) — a
@@ -4361,12 +4148,6 @@ object DuckDialect {
           "extensions but DuckDB reads them as plain bytes (it " +
           "auto-detects only .gz/.zst) — rename the file to the " +
           "matching extension")
-    if (fmt.isEmpty) {
-      val lower = path.toLowerCase(java.util.Locale.ROOT)
-      fmt = if (lower.endsWith(".parquet")) "parquet"
-      else if (lower.endsWith(".json") || lower.endsWith(".ndjson")) "json"
-      else "csv"
-    }
     // Loud-edges doctrine (ADVICE r11): HEADER/DELIMITER are csv-only —
     // silently ignoring them on a parquet/json load would accept an
     // option the load does not honor.
@@ -4456,7 +4237,7 @@ object DuckDialect {
       .write.insertInto(ident)
     val n = obs.get("n").asInstanceOf[Long]
     import spark.implicits._
-    Some(Seq(n).toDF("Count"))
+    Seq(n).toDF("Count")
   }
 
   /** The dialect-tolerant `spark.sql`: valid Spark SQL runs untouched;
@@ -4488,33 +4269,7 @@ object DuckDialect {
     * item) embeds unchanged and the statement reaches guidance, never a
     * partial rewrite or a misleading 'refused at this scale'. */
   private def expandAsof(spark: SparkSession, text: String): String = {
-    val sb = new StringBuilder
-    var i = 0
-    val n = text.length
-    while (i < n) {
-      val c = text.charAt(i)
-      if (c == '\'') {
-        var k = i + 1
-        var closed = false
-        while (k < n && !closed) {
-          if (text.charAt(k) == '\'') {
-            if (k + 1 < n && text.charAt(k + 1) == '\'') k += 2
-            else { closed = true; k += 1 }
-          } else k += 1
-        }
-        sb.append(text.substring(i, math.min(k, n))); i = k
-      } else if (c == '(') {
-        scanMatch(text, i) match {
-          case Some(close) =>
-            sb.append('(')
-              .append(expandAsof(spark, text.substring(i + 1, close - 1)))
-              .append(')')
-            i = close
-          case None => sb.append(c); i += 1
-        }
-      } else { sb.append(c); i += 1 }
-    }
-    val grouped = sb.toString
+    val grouped = mapGroups(text)(expandAsof(spark, _))
     if ("""(?i)\basof\b""".r.findFirstIn(grouped).isEmpty) grouped
     else asofChainExpand(spark, grouped) match {
       case Some(ex) => asofChainScaleGuard(spark, grouped); ex
@@ -4523,11 +4278,15 @@ object DuckDialect {
   }
 
   private def sqlNoCompat(spark: SparkSession, text: String): DataFrame = {
+    // comments are blanked once here: every bridge below, and the COPY
+    // and PIVOT dispatch, sees comment-free text; the first Spark attempt
+    // and the guidance still see the statement as written
+    val clean = Lex.blankComments(text)
     // COPY … TO never parses as Spark SQL — dispatch the statement
     // bridge first; an unbridgeable COPY shape gets the guidance table
-    if (readWord(text.trim, 0).equalsIgnoreCase("copy"))
-      return bridgeCopyTo(spark, text)
-        .orElse(bridgeCopyFrom(spark, text))
+    if (readWord(clean.trim, 0).equalsIgnoreCase("copy"))
+      return parseCopy(clean)
+        .map(c => if (c.to) copyTo(spark, c) else copyFrom(spark, c))
         .getOrElse(
           throw new IllegalArgumentException(guidance(text,
             "(COPY is not Spark SQL)",
@@ -4539,8 +4298,8 @@ object DuckDialect {
     try spark.sql(text)
     catch {
       case e: org.apache.spark.sql.AnalysisException // incl. parse
-          if readWord(text.trim, 0).equalsIgnoreCase("pivot") =>
-        bridgePivot(spark, text) match {
+          if readWord(clean.trim, 0).equalsIgnoreCase("pivot") =>
+        bridgePivot(spark, clean) match {
           case Some(p) =>
             try spark.sql(p)
             catch {
@@ -4555,37 +4314,27 @@ object DuckDialect {
                 "aggregate, a table/view source)"), e)
         }
       case e: org.apache.spark.sql.AnalysisException => // incl. parse
-        // COLUMNS(…) star expressions and STRUCT-expanding unnest need
-        // the live schema — expanded here (session-aware), then the
-        // text rewrite handles any other duckisms the statement
+        // COLUMNS(…) star expressions, STRUCT-expanding unnest and the
+        // exact-count percent reservoir need the live schema — each
+        // expands here (session-aware) when its keyword appears, then
+        // ASOF takes its one session-aware path (the chain Scaladoc:
+        // nested SELECT/WITH groups deepest-first, then the statement),
+        // and the text rewrite handles any other duckisms the statement
         // carries (incl. the LIST unnest → explode rename on the items
         // the struct pass left alone)
-        val colsExpanded =
-          if ("""(?i)\bcolumns\s*\(""".r.findFirstIn(text).isDefined)
-            bridgeColumns(spark, text)
-          else None
-        val base1 = colsExpanded.getOrElse(text)
-        val structExpanded =
-          (if ("""(?i)\bunnest\s*\(""".r.findFirstIn(base1).isDefined)
-            bridgeStructUnnest(spark, base1)
-          else None).orElse(colsExpanded)
-        val base2 = structExpanded.getOrElse(text)
-        val expanded0 =
-          (if ("""(?i)\breservoir\b""".r.findFirstIn(base2).isDefined &&
-            """(?i)\busing\s+sample\b""".r.findFirstIn(base2).isDefined)
-            bridgeReservoirPercent(spark, base2)
-          else None).orElse(structExpanded)
-        // ASOF: the one session-aware path (the chain Scaladoc) —
-        // nested SELECT/WITH groups deepest-first, then the statement
-        val base3 = expanded0.getOrElse(text)
-        val expanded =
-          (if ("""(?i)\basof\b""".r.findFirstIn(base3).isDefined) {
-            val ex = expandAsof(spark, base3)
-            if (ex != base3) Some(ex) else None
-          } else None).orElse(expanded0)
-        val rewritten = rewrite(expanded.getOrElse(text))
-        if (rewritten == text) {
-          if (unbridgeable(text))
+        def has(re: String, t: String) = re.r.findFirstIn(t).isDefined
+        var cur = clean
+        if (has("""(?i)\bcolumns\s*\(""", cur))
+          cur = bridgeColumns(spark, cur).getOrElse(cur)
+        if (has("""(?i)\bunnest\s*\(""", cur))
+          cur = bridgeStructUnnest(spark, cur).getOrElse(cur)
+        if (has("""(?i)\breservoir\b""", cur) &&
+          has("""(?i)\busing\s+sample\b""", cur))
+          cur = bridgeReservoirPercent(spark, cur).getOrElse(cur)
+        if (has("""(?i)\basof\b""", cur)) cur = expandAsof(spark, cur)
+        val rewritten = rewrite(cur)
+        if (rewritten == clean) {
+          if (unbridgeable(clean))
             throw new IllegalArgumentException(
               guidance(text, e.getMessage, "(not retried: contains a " +
                 "construct with no direct Spark twin)"), e)

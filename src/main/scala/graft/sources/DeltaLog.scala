@@ -834,9 +834,12 @@ object DeltaLog {
       if (statted.isEmpty) snap.files
       else {
         import org.apache.spark.sql.functions.{col => c, from_json}
+        // a LOCAL relation: the optimizer folds the stats filter over it
+        // in the driver, so a read launches no Spark job for it (the
+        // stats rows are bounded log metadata, already on the driver)
         val statsDf = spark.createDataFrame(
-          spark.sparkContext.parallelize(
-            statted.map { case (p, s) => org.apache.spark.sql.Row(p, s) }, 1),
+          java.util.Arrays.asList(
+            statted.map { case (p, s) => org.apache.spark.sql.Row(p, s) }: _*),
           org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("path",
               org.apache.spark.sql.types.StringType),

@@ -15,6 +15,11 @@ object GraftColumnBridge {
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
+  /** An AnalysisException carrying a plain message (its message
+    * constructor is not public), for graft's SQL function builders. */
+  def analysisError(message: String): AnalysisException =
+    new AnalysisException(message, None, None, None, None, Map.empty, Array.empty)
+
   /** Neutral, public view of a Column's node tree — just enough shape
     * for conservative predicate analysis (function applications over
     * single-part attributes and literals; everything else is Opaque). */

@@ -117,7 +117,7 @@ object DeltaQueries {
 
     // Merge-on-read DML: the same DELETE + UPDATE shape as q73 but
     // through deletion vectors — no data file is rewritten, the scan
-    // reconstructs the state via the (file, row_index) anti-join, and
+    // reconstructs the state via the (file, row_index) vector filter, and
     // the result still hash-matches the oracle exactly. The 100 TB
     // point: q73's copy-on-write rewrites every hit file; this commits
     // a sidecar of positions and appends only updated rows.

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.StructType
   * V1 `PrunedFilteredScan` surface (the same integration style Spark's
   * JDBC source uses), so the physical plan is a `RowDataSourceScanExec`
   * that DISPLAYS the pushed filters, and everything this engine's Delta
-  * reader does — log replay, time travel, deletion-vector anti-join,
+  * reader does — log replay, time travel, deletion-vector filtering,
   * column-mapping resolution, stats/partition file skipping — rides
   * underneath unchanged:
   *

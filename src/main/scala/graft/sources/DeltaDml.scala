@@ -2,19 +2,26 @@ package graft.sources
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, expr, not, when}
+import org.apache.spark.sql.functions.{coalesce, col, expr, not, when}
 
 /** Copy-on-write UPDATE / DELETE over [[DeltaLog]] tables — the DML the
   * reference REPL dispatches to its engine (query_sync_table.py:123-125)
   * and the Tier B rows VERDICT r01 flagged as missing.
   *
   * Semantics are Delta's own: identify the data files that contain at
-  * least one matching row (a distributed scan collecting FILE NAMES only
-  * — bounded by the file count, which is metadata-scale), rewrite just
-  * those files with the change applied, and commit `remove`+`add`
-  * actions for them in one atomic log entry. Untouched files are never
-  * read twice or rewritten, which is what keeps a 100 TB point-update
-  * proportional to the files it hits, not to the table.
+  * least one matching row, rewrite just those files with the change
+  * applied, and commit `remove`+`add` actions for them in one atomic log
+  * entry. Untouched files are never read twice or rewritten, which is
+  * what keeps a 100 TB point-update proportional to the files it hits,
+  * not to the table.
+  *
+  * A commit finds its files and its counts in ONE pass: a map-only job
+  * returns each task's matched-row count per `__file` ([[rowsPerFile]];
+  * file names and counts only — metadata-scale), and the driver's sum
+  * gives both the hit files and the affected rows. The write is the
+  * second and last job. MERGE does the same with one aggregate over the
+  * join (hit files, ambiguity, clause counts) and counts its inserts
+  * from the footers of their own write.
   */
 object DeltaDml {
 
@@ -97,27 +104,18 @@ object DeltaDml {
     val snap = snapHint.getOrElse(DeltaLog.snapshot(spark, tablePath))
     DeltaLog.checkWritable(snap)
 
-    // Map absolute scan URIs back to the log's relative paths.
-    val uriToRel: Map[String, String] =
-      snap.files.map { a =>
-        val abs = new Path(tablePath,
-          java.net.URLDecoder.decode(a.path, "UTF-8"))
-        abs.getFileSystem(spark.sessionState.newHadoopConf())
-          .makeQualified(abs).toString -> a.path
-      }.toMap
-
-    val hitUris =
-      if (snap.files.isEmpty) Array.empty[String]
-      else DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
-        .filter(condition).select(col("__file"))
-        .distinct().collect().map(_.getString(0)) // file names only: metadata-scale
-    if (hitUris.isEmpty)
+    val hits =
+      if (snap.files.isEmpty) Map.empty[String, Long]
+      else rowsPerFile(DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+        .filter(condition))
+    if (hits.isEmpty)
       return DmlResult(snap.version, 0, 0L)
-    val hitRel = hitUris.toSeq.map(u => uriToRel.getOrElse(u,
-      throw new IllegalStateException(s"scanned file not in snapshot: $u")))
+    val hitUris = hits.keys.toIndexedSeq.sorted
+    val live = DeltaLog.liveFiles(spark, snap)
+    val hitRel = hitUris.map(live.entry(_).path)
+    val affected = hits.values.sum
 
-    val hitDf = DeltaLog.scanFiles(spark, snap, hitUris.toIndexedSeq)
-    val affected = hitDf.filter(condition).count()
+    val hitDf = DeltaLog.scanFiles(spark, snap, hitUris)
     val rewritten = transform(hitDf)
     val adds = DeltaWrite.writeDataFiles(rewritten, tablePath,
       snap.partitionColumns, Some(snap.schema))
@@ -131,9 +129,26 @@ object DeltaDml {
     val actions = hitRel.map(DeltaWrite.removeAction) ++
       adds.map(DeltaWrite.addAction) ++ cdcs
     val v = DeltaWrite.commit(spark, tablePath, actions, operation,
-      snapHint = Some(snap))
+      snapHint = Some(snap), metrics = Seq(
+        (if (operation == "DELETE") "numDeletedRows" else "numUpdatedRows") -> affected,
+        "numRemovedFiles" -> hitRel.size.toLong,
+        "numAddedFiles" -> adds.size.toLong))
     DmlResult(v, hitRel.size, affected)
   }
+
+  /** Matched rows per `__file` in ONE map-only job: each task counts its
+    * rows into a map and returns it; the driver sums the maps (a file
+    * read by several tasks arrives as several pieces). The result holds
+    * file names and counts only — metadata-scale. */
+  private def rowsPerFile(matched: DataFrame): Map[String, Long] =
+    matched.select(col("__file")).queryExecution.toRdd.mapPartitions { it =>
+      val n = scala.collection.mutable.HashMap[String, Long]()
+      it.foreach { r =>
+        val f = r.getUTF8String(0).toString
+        n(f) = n.getOrElse(f, 0L) + 1L
+      }
+      n.iterator
+    }.collect().groupMapReduce(_._1)(_._2)(_ + _)
 
   final case class MergeResult(version: Long, rewrittenFiles: Int,
       updatedRows: Long, deletedRows: Long, insertedRows: Long)
@@ -156,11 +171,20 @@ object DeltaDml {
     *   - `insert`: when true, source rows matching NO target row are
     *     inserted (source schema must cover the target's columns).
     *
-    * Copy-on-write at scale: only files holding at least one matched row
-    * are rewritten (semi-join collecting file NAMES — metadata-scale);
-    * inserts append new files; one atomic remove+add commit. A source
-    * with MULTIPLE rows matching one target row makes the update
-    * ambiguous — that is an error, as in Delta.
+    * Copy-on-write at scale: only files holding at least one row a
+    * matched clause acts on are rewritten; inserts append new files; one
+    * atomic remove+add commit. A source with MULTIPLE rows matching one
+    * target row of a rewritten file makes the update ambiguous — that is
+    * an error, as in Delta.
+    *
+    * Jobs: ONE aggregate over target ⋈ source keyed by the physical row
+    * (`__file`, `__pos`), reduced per file inside the tasks, returns per
+    * file whether a clause acts on it, its largest match count and its
+    * deleted and updated rows (file names and counts only —
+    * metadata-scale). Then the hit files are rewritten, and the inserts
+    * written on their own, so the footers of that write count them
+    * exactly (no `count()` pass, no accumulator a re-run task could
+    * double). Nothing is cached.
     */
   def merge(spark: SparkSession, tablePath: String, source: DataFrame,
       condition: Column,
@@ -173,170 +197,158 @@ object DeltaDml {
     DeltaLog.checkWritable(snap)
     if (matchedUpdate.nonEmpty || matchedDelete.nonEmpty)
       DeltaLog.checkAppendOnly(snap, "MERGE with matched clauses")
-    // the insert anti-join reads the SAME version the removes are
-    // decided against
-    val target = DeltaLog.scanFiles(spark, snap, snap.filePaths)
 
-    val uriToRel: Map[String, String] =
-      snap.files.map { a =>
-        val abs = new Path(tablePath,
-          java.net.URLDecoder.decode(a.path, "UTF-8"))
-        abs.getFileSystem(spark.sessionState.newHadoopConf())
-          .makeQualified(abs).toString -> a.path
-      }.toMap
-
-    // Files containing at least one row a matched CLAUSE will act on
-    // (file names only come back to the driver, never data). The gate
-    // matters: a match with no applicable update/delete clause changes
-    // nothing, and rewriting its file would turn an insert-only merge
-    // into a spurious full-file rewrite. Provenance comes from the
-    // scan's `__file` metadata COLUMN (scanFilesWithMeta), which
-    // survives any join strategy — input_file_name() evaluated after a
-    // shuffle returns "", which would break hit detection for any
-    // source too large to broadcast, exactly the at-scale case.
-    import org.apache.spark.sql.functions.lit
+    // Clause decisions for a (target, source) pair; `__matched` is null
+    // on the unmatched side of the rewrite's left join. The same
+    // expressions decide the counts and the rewrite. A clause condition
+    // that evaluates to NULL does not act (SQL WHEN semantics): without
+    // the coalesce, `filter(!doDelete)` would drop such a row from the
+    // rewrite while counting it neither deleted nor updated.
+    val marked = source.withColumn("__matched", lit(true))
+    val matched = col("__matched").isNotNull
+    def holds(c: Column): Column = coalesce(c, lit(false))
+    val doDelete = matchedDelete.map(c => matched && holds(c)).getOrElse(lit(false))
+    val doUpdate = matched && !doDelete &&
+      holds(matchedUpdateCond.getOrElse(lit(true))) && lit(matchedUpdate.nonEmpty)
+    // A match with no applicable update/delete clause changes nothing:
+    // rewriting its file would turn an insert-only merge into a spurious
+    // full-file rewrite. Provenance comes from the scan's `__file`
+    // metadata COLUMN (scanFilesWithMeta), which survives any join
+    // strategy — input_file_name() after a shuffle returns "".
     val updGate =
       if (matchedUpdate.nonEmpty) matchedUpdateCond.getOrElse(lit(true))
       else lit(false)
     val actGate = matchedDelete.foldLeft(updGate)(_ || _)
-    val hitUris =
-      if ((matchedUpdate.isEmpty && matchedDelete.isEmpty) || snap.files.isEmpty)
-        Array.empty[String]
-      else DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
-        .drop("__pos").alias("t")
-        .join(source.alias("s"), condition && actGate)
-        .select(col("t.__file")).distinct()
-        .collect().map(_.getString(0))
-    val hitRel = hitUris.toSeq.map(u => uriToRel.getOrElse(u,
-      throw new IllegalStateException(s"scanned file not in snapshot: $u")))
 
-    // Source rows matching no target row (whole table, not just hit files).
+    // file → (largest match count, deleted rows, updated rows), for the
+    // files some clause acts on
+    val hits: Map[String, (Long, Long, Long)] =
+      if ((matchedUpdate.isEmpty && matchedDelete.isEmpty) || snap.files.isEmpty)
+        Map.empty
+      else DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths).alias("t")
+        .join(marked.alias("s"), condition)
+        .groupBy(col("t.__file").as("f"), col("t.__pos"))
+        .agg(count(lit(1)).as("m"),
+          max(when(actGate, 1L).otherwise(0L)).as("acted"),
+          sum(when(doDelete, 1L).otherwise(0L)).as("del"),
+          sum(when(doUpdate, 1L).otherwise(0L)).as("upd"))
+        .select(col("f"), col("m"), col("acted"), col("del"), col("upd"))
+        .queryExecution.toRdd.mapPartitions { it =>
+          val acc = scala.collection.mutable.HashMap[String, Array[Long]]()
+          it.foreach { r =>
+            val a = acc.getOrElseUpdate(r.getUTF8String(0).toString, new Array[Long](4))
+            a(0) = math.max(a(0), r.getLong(1)); a(1) = math.max(a(1), r.getLong(2))
+            a(2) += r.getLong(3); a(3) += r.getLong(4)
+          }
+          acc.iterator.map { case (f, a) => (f, a(0), a(1), a(2), a(3)) }
+        }
+        .collect()
+        .groupMapReduce(_._1)(r => (r._2, r._3, r._4, r._5)) { (a, b) =>
+          (math.max(a._1, b._1), math.max(a._2, b._2), a._3 + b._3, a._4 + b._4)
+        }
+        .collect { case (f, (m, acted, del, upd)) if acted > 0 => f -> (m, del, upd) }
+    val dup = hits.values.map(_._1).maxOption.getOrElse(0L)
+    if (dup > 1) throw new IllegalStateException(
+      s"MERGE source has $dup rows matching one target row of " +
+        s"$tablePath — the update is ambiguous (Delta semantics)")
+    val deleted = hits.values.map(_._2).sum
+    val updated = hits.values.map(_._3).sum
+    val hitUris = hits.keys.toIndexedSeq.sorted
+    val live = DeltaLog.liveFiles(spark, snap)
+    val hitRel = hitUris.map(live.entry(_).path)
+
+    // Source rows matching no target row (whole table, not just hit
+    // files), read from the SAME version the removes are decided against.
     val inserts =
       if (!insert) None
       else Some(source.alias("s")
-        .join(target.alias("t"), condition, "left_anti")
+        .join(DeltaLog.scanFiles(spark, snap, snap.filePaths).alias("t"),
+          condition, "left_anti")
         .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*))
 
     if (hitUris.isEmpty && !insert)
       return MergeResult(snap.version, 0, 0L, 0L, 0L)
 
-    // Bounded by the HIT files, not the table — cached once, read for
-    // the ambiguity check, the clause counts, and the rewrite; released
-    // after the commit (or on any failure).
     val cdf = DeltaCdf.enabled(snap.configuration)
-    var cached: Option[DataFrame] = None
-    try {
-      val (rewritten, updated, deleted, hitChanges, dvActed) =
-        if (hitUris.isEmpty) (None, 0L, 0L, None, None)
-        else {
-          // (__file, __pos) is the stable physical row identity — it
-          // keys the ambiguity check deterministically and, on
-          // deletion-vector tables, becomes the vectorized position.
-          val hit = DeltaLog.scanFilesWithMeta(spark, snap, hitUris.toIndexedSeq)
-          val marked = source.withColumn("__matched", lit(true))
-          val joined = hit.alias("t").join(marked.alias("s"), condition, "left")
-          joined.persist()
-          cached = Some(joined)
-          val dup = joined.groupBy(col("t.__file"), col("t.__pos"))
-            .agg(count(col("__matched")).as("m")).agg(max(col("m")))
-            .head.getLong(0)
-          if (dup > 1) throw new IllegalStateException(
-            s"MERGE source has $dup rows matching one target row of " +
-              s"$tablePath — the update is ambiguous (Delta semantics)")
-
-          val matched = col("__matched").isNotNull
-          val doDelete = matchedDelete.map(matched && _).getOrElse(lit(false))
-          val doUpdate = matched && !doDelete &&
-            matchedUpdateCond.getOrElse(lit(true)) &&
-            lit(matchedUpdate.nonEmpty)
-          val counts = joined.agg(
-            sum(when(doDelete, 1L).otherwise(0L)),
-            sum(when(doUpdate, 1L).otherwise(0L))).head
-          val nDel = Option(counts.get(0)).fold(0L)(_.asInstanceOf[Long])
-          val nUpd = Option(counts.get(1)).fold(0L)(_.asInstanceOf[Long])
-
-          val kept = joined.filter(!doDelete)
-          val applied = snap.schema.fieldNames.map { f =>
-            matchedUpdate.toMap.get(f) match {
-              case Some(v) => when(doUpdate, v).otherwise(col(s"t.$f")).as(f)
-              case None => col(s"t.$f").as(f)
-            }
-          }
-          val changes =
-            if (!cdf) None
-            else {
-              val tcols = snap.schema.fieldNames.toIndexedSeq.map(f => col(s"t.$f").as(f))
-              Some(joined.filter(doDelete).select(tcols: _*)
-                .withColumn("_change_type", lit("delete"))
-                .unionByName(joined.filter(doUpdate).select(tcols: _*)
-                  .withColumn("_change_type", lit("update_preimage")))
-                .unionByName(joined.filter(doUpdate).select(applied.toIndexedSeq: _*)
-                  .withColumn("_change_type", lit("update_postimage"))))
-            }
-          if (DeltaDv.enabled(snap.configuration)) {
-            // Merge-on-read: acted-on rows (deleted or updated) are
-            // vectored out of their files; ONLY the updated versions
-            // re-materialize (plus inserts) — untouched rows in hit
-            // files are never rewritten.
-            val acted = joined.filter(doDelete || doUpdate)
-              .select(col("t.__file").as("__file"), col("t.__pos").as("__pos"))
-            val updatedRows = joined.filter(doUpdate)
-              .select(applied.toIndexedSeq: _*)
-            (Some(updatedRows), nUpd, nDel, changes, Some(acted))
-          } else
-            (Some(kept.select(applied.toIndexedSeq: _*)), nUpd, nDel, changes, None)
-        }
-
-      val nIns = inserts.map(_.count()).getOrElse(0L)
-      // In merge-on-read mode `rewritten` holds the UPDATED rows only;
-      // an acted-delete-only merge materializes no rewrite data at all.
-      val rewriteData = rewritten.filter(_ => dvActed.isEmpty || updated > 0)
-      val newData = (rewriteData, inserts) match {
-        case (Some(r), Some(i)) if nIns > 0 => Some(r.unionByName(i))
-        case (Some(r), _) => Some(r)
-        case (None, Some(i)) if nIns > 0 => Some(i)
-        case _ => None
+    val dv = DeltaDv.enabled(snap.configuration)
+    // (__file, __pos) is the stable physical row identity; on
+    // deletion-vector tables it becomes the vectorized position.
+    val joined =
+      if (hitUris.isEmpty) None
+      else Some(DeltaLog.scanFilesWithMeta(spark, snap, hitUris).alias("t")
+        .join(marked.alias("s"), condition, "left"))
+    val applied = snap.schema.fieldNames.toIndexedSeq.map { f =>
+      matchedUpdate.toMap.get(f) match {
+        case Some(v) => when(doUpdate, v).otherwise(col(s"t.$f")).as(f)
+        case None => col(s"t.$f").as(f)
       }
-      if (newData.isEmpty && hitRel.isEmpty)
-        return MergeResult(snap.version, 0, 0L, 0L, 0L)
+    }
+    // Copy-on-write rewrites the hit files' kept rows; merge-on-read
+    // vectors the acted rows out and writes ONLY the updated versions
+    // (none for a delete-only merge).
+    val rewriteData = joined.flatMap { j =>
+      if (!dv) Some(j.filter(!doDelete).select(applied: _*))
+      else if (updated > 0) Some(j.filter(doUpdate).select(applied: _*))
+      else None
+    }
+    val rewriteAdds = rewriteData.toSeq.flatMap(d =>
+      DeltaWrite.writeDataFiles(d, tablePath, snap.partitionColumns, Some(snap.schema)))
+    // Inserts land in their own files: their footers count them.
+    // Empty staged files (an insert set with no rows) are dropped.
+    val (insAdds, nIns) = inserts.fold((Seq.empty[DeltaLog.AddEntry], 0L)) { i =>
+      val staged = DeltaWrite.writeDataFiles(i, tablePath, snap.partitionColumns,
+        Some(snap.schema)).map(a =>
+          a -> RowTracking.numRecordsOf(spark, tablePath, a.path, a.stats))
+      val (kept, empty) = staged.partition(_._2 > 0)
+      val tfs = new Path(tablePath).getFileSystem(live.conf)
+      empty.foreach { case (a, _) => tfs.delete(new Path(tablePath,
+        java.net.URLDecoder.decode(a.path, "UTF-8")), false) }
+      (kept.map(_._1), kept.map(_._2).sum)
+    }
+    val adds = rewriteAdds ++ insAdds
+    if (adds.isEmpty && hitRel.isEmpty)
+      return MergeResult(snap.version, 0, 0L, 0L, 0L)
+    DeltaConstraints.enforceStaged(spark, tablePath, adds, snap.schema,
+      snap.configuration)
 
-      val adds = newData.toSeq.flatMap(d =>
-        DeltaWrite.writeDataFiles(d, tablePath, snap.partitionColumns,
-          Some(snap.schema)))
-      DeltaConstraints.enforceStaged(spark, tablePath, adds, snap.schema,
-        snap.configuration)
-      val cdcs =
-        if (!cdf) Nil
-        else {
-          val insChanges = inserts.filter(_ => nIns > 0)
-            .map(_.withColumn("_change_type", lit("insert")))
-          (hitChanges, insChanges) match {
-            case (Some(h), Some(i)) =>
-              DeltaCdf.writeCdcFiles(h.unionByName(i), tablePath, Some(snap.schema))
-            case (Some(h), None) =>
-              DeltaCdf.writeCdcFiles(h, tablePath, Some(snap.schema))
-            case (None, Some(i)) =>
-              DeltaCdf.writeCdcFiles(i, tablePath, Some(snap.schema))
-            case _ => Nil
-          }
-        }.map(DeltaCdf.cdcAction)
-      val actions = dvActed match {
-        case Some(acted) =>
-          // vectorize the acted rows instead of removing+rewriting the
-          // hit files; kept rows stay physically where they are
-          val dvPart = DeltaDv.vectorize(spark, snap, tablePath, acted)
-            .map(_._1).getOrElse(Nil)
-          DeltaWrite.dvProtocolAction(snap.protocol) +:
-            (dvPart ++ adds.map(DeltaWrite.addAction) ++ cdcs)
-        case None =>
-          hitRel.map(DeltaWrite.removeAction) ++
-            adds.map(DeltaWrite.addAction) ++ cdcs
-      }
-      val v = DeltaWrite.commit(spark, tablePath, actions, "MERGE",
-        snapHint = Some(snap))
-      MergeResult(v, if (dvActed.isDefined) 0 else hitRel.size,
-        updated, deleted, nIns)
-    } finally cached.foreach(_.unpersist())
+    val cdcs =
+      if (!cdf) Nil
+      else {
+        val tcols = snap.schema.fieldNames.toIndexedSeq.map(f => col(s"t.$f").as(f))
+        val hitChanges = joined.map(j => j.filter(doDelete).select(tcols: _*)
+          .withColumn("_change_type", lit("delete"))
+          .unionByName(j.filter(doUpdate).select(tcols: _*)
+            .withColumn("_change_type", lit("update_preimage")))
+          .unionByName(j.filter(doUpdate).select(applied: _*)
+            .withColumn("_change_type", lit("update_postimage"))))
+        val insChanges = inserts.filter(_ => nIns > 0)
+          .map(_.withColumn("_change_type", lit("insert")))
+        (hitChanges ++ insChanges).reduceOption(_ unionByName _).toSeq
+          .flatMap(c => DeltaCdf.writeCdcFiles(c, tablePath, Some(snap.schema)))
+      }.map(DeltaCdf.cdcAction)
+    val actions = joined match {
+      case Some(j) if dv =>
+        // vectorize the acted rows instead of removing+rewriting the
+        // hit files; kept rows stay physically where they are
+        val acted = j.filter(doDelete || doUpdate)
+          .select(col("t.__file").as("__file"), col("t.__pos").as("__pos"))
+        val dvPart = DeltaDv.vectorize(spark, snap, tablePath, acted)
+          .map(_._1).getOrElse(Nil)
+        DeltaWrite.dvProtocolAction(snap.protocol) +:
+          (dvPart ++ adds.map(DeltaWrite.addAction) ++ cdcs)
+      case _ =>
+        hitRel.map(DeltaWrite.removeAction) ++
+          adds.map(DeltaWrite.addAction) ++ cdcs
+    }
+    val removedFiles = if (dv) 0 else hitRel.size
+    val v = DeltaWrite.commit(spark, tablePath, actions, "MERGE",
+      snapHint = Some(snap), metrics = Seq(
+        "numTargetRowsInserted" -> nIns,
+        "numTargetRowsUpdated" -> updated,
+        "numTargetRowsDeleted" -> deleted,
+        "numTargetFilesRemoved" -> removedFiles.toLong,
+        "numTargetFilesAdded" -> adds.size.toLong))
+    MergeResult(v, removedFiles, updated, deleted, nIns)
   }
 
   // ---- REPL dispatch ------------------------------------------------

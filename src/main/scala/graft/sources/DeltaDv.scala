@@ -12,8 +12,9 @@ import graft.sources.DeltaDml.DmlResult
   * POSITIONS to a sidecar and re-adds the untouched data files with a
   * DV descriptor — no data rewrite at all. A point delete on a 100 TB
   * table costs one scan of the HIT files plus a sidecar of the deleted
-  * positions, instead of rewriting every hit file; the scan-side cost
-  * is one anti-join bounded by deleted rows ([[DeltaLog.scanFilesWithMeta]]).
+  * positions, instead of rewriting every hit file; on the scan side each
+  * task filters a vectored file's rows against its parsed positions
+  * ([[DeltaLog.scanFilesWithMeta]]).
   *
   * Physical encoding ([[RoaringDv]]): ONE roaring-format DV file per
   * DELETE commit — the protocol's framed layout (format-version byte,
@@ -92,89 +93,55 @@ object DeltaDv {
     (inlined ++ filed).toMap
   }
 
-  /** Parse the existing vector of an already-vectored file (driver-side;
-    * bounded by that file's deletion set). */
-  private def existingPositions(spark: SparkSession, tablePath: String,
-      d: DeltaLog.DvDescriptor): Array[Long] = {
-    if (d.inline)
-      return RoaringDv.deserialize(
-        RoaringDv.z85DecodeTo(d.raw, d.sizeInBytes.toInt))
-    val p = new Path(tablePath, d.path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val len = fs.getFileStatus(p).getLen.toInt
-    val bytes = new Array[Byte](len)
-    val in = fs.open(p)
-    try in.readFully(0, bytes) finally in.close()
-    RoaringDv.unframe(bytes, d.offset, d.sizeInBytes)
-  }
-
-  /** The vectorization common to MOR DELETE and UPDATE: given the
-    * matched rows (with provenance columns), stage ONE sidecar holding
-    * the hit files' complete deletion sets and return the remove /
-    * re-add-with-descriptor actions plus the newly-deleted row count.
-    * None when nothing matched. */
+  /** The vectorization common to MOR DELETE, UPDATE and MERGE: given
+    * the matched rows (with provenance columns), stage ONE sidecar
+    * holding the hit files' complete deletion sets and return the
+    * remove / re-add-with-descriptor actions plus the newly-deleted row
+    * count. None when nothing matched.
+    *
+    * ONE map-only job: each task de-duplicates the positions
+    * it read per file and SERIALIZES them as a bitmap, so the driver
+    * collects compressed per-file payloads — the very bytes this commit
+    * must write into the log/sidecar anyway (log metadata, the
+    * documented bounded-collect class) — never one row per deleted row,
+    * and the hit files are the keys of what comes back. A file read by
+    * several tasks (split on row groups) arrives as several pieces; the
+    * driver UNIONS them, then merges any existing vector, so each
+    * descriptor stays the file's COMPLETE deletion set. The driver's
+    * working set is bounded by the deleted rows. */
   private[sources] def vectorize(spark: SparkSession, snap: DeltaLog.Snapshot,
       tablePath: String, matched: DataFrame)
       : Option[(Seq[com.fasterxml.jackson.databind.node.ObjectNode], Long)] = {
-    val hitFiles = matched.select("__file").distinct()
-      .collect().map(_.getString(0)) // metadata-scale
-    if (hitFiles.isEmpty) return None
-
-    val hconf = spark.sessionState.newHadoopConf()
-    def canon(p: String): String = {
-      val hp = new Path(p)
-      hp.getFileSystem(hconf).makeQualified(hp).toString
-    }
-    val entryByCanon: Map[String, DeltaLog.AddEntry] = snap.files.map { a =>
-      canon(new Path(tablePath,
-        java.net.URLDecoder.decode(a.path, "UTF-8")).toString) -> a
-    }.toMap
-    val hitEntries = hitFiles.toSeq.map(f => f -> entryByCanon.getOrElse(f,
-      throw new IllegalStateException(s"scanned file not in snapshot: $f")))
-
-    // New positions ∪ the hit files' existing vectors → each descriptor
-    // stays the file's COMPLETE deletion set. The bitmaps SERIALIZE ON
-    // THE EXECUTORS (one group per hit file); the driver collects only
-    // the compressed per-file DV payloads — the very bytes this commit
-    // must write into the log/sidecar anyway (log metadata, the
-    // documented bounded-collect class) — never one row per deleted
-    // row. Files that already carry a vector merge driver-side, bounded
-    // by that file's deletion set.
-    import spark.implicits._
-    val newSerByFile: Map[String, (Array[Byte], Long)] = matched
-      .select(col("__file"), col("__pos"))
-      .as[(String, Long)]
-      .groupByKey(_._1)
-      .mapGroups { (f, it) =>
-        // dedup after the sort: a duplicate (file,pos) pair reaching the
-        // matched frame must not inflate cardinality past the bitmap's
-        // true distinct-position count — the descriptor contract
-        // (cardinality == bitmap cardinality) is what replay trusts
-        val sorted = it.map(_._2).toArray
-        java.util.Arrays.sort(sorted)
-        val ps = new Array[Long](sorted.length)
-        var n = 0
-        var i = 0
-        while (i < sorted.length) {
-          if (n == 0 || ps(n - 1) != sorted(i)) { ps(n) = sorted(i); n += 1 }
-          i += 1
+    val pieces = matched.select(col("__file"), col("__pos")).queryExecution.toRdd
+      .mapPartitions { it =>
+        val byFile = scala.collection.mutable.HashMap[String,
+          scala.collection.mutable.ArrayBuilder.ofLong]()
+        it.foreach { r =>
+          byFile.getOrElseUpdate(r.getUTF8String(0).toString,
+            new scala.collection.mutable.ArrayBuilder.ofLong) += r.getLong(1)
         }
-        val uniq = java.util.Arrays.copyOf(ps, n)
-        (f, RoaringDv.serialize(uniq), n.toLong)
-      }
-      .collect().map { case (f, bytes, card) => f -> (bytes, card) }.toMap
+        byFile.iterator.map { case (f, b) =>
+          val ps = b.result().distinct
+          (f, RoaringDv.serialize(ps), ps.length.toLong)
+        }
+      }.collect()
+    if (pieces.isEmpty) return None
+
+    val live = DeltaLog.liveFiles(spark, snap)
+    // the cardinality must equal the bitmap's distinct positions — the
+    // descriptor contract replay trusts
     val perFile: Seq[(String, Array[Byte], Long)] =
-      hitEntries.map { case (f, a) =>
-        val (newBytes, newCard) =
-          newSerByFile.getOrElse(f, (RoaringDv.serialize(Array.empty), 0L))
-        a.dv match {
-          case None => (f, newBytes, newCard)
-          case Some(d) =>
-            val merged = (RoaringDv.deserialize(newBytes) ++
-              existingPositions(spark, tablePath, d)).distinct.sorted
-            (f, RoaringDv.serialize(merged), merged.length.toLong)
+      pieces.groupBy(_._1).toSeq.map { case (f, ps) =>
+        // an already-vectored file's positions: bounded by its deletion set
+        val existing = live.entry(f).dv.map(DeltaLog.dvPositions(live.conf, tablePath, _))
+        if (ps.length == 1 && existing.isEmpty) ps.head
+        else {
+          val u = (ps.flatMap(p => RoaringDv.deserialize(p._2)) ++
+            existing.getOrElse(Array.empty[Long])).distinct
+          (f, RoaringDv.serialize(u), u.length.toLong)
         }
       }
+    val hitEntries = perFile.map { case (f, _, _) => f -> live.entry(f) }
 
     val descs = writeDescriptors(spark, tablePath, perFile)
     val oldCards = hitEntries.map(_._2.dv.map(_.cardinality).getOrElse(0L)).sum
@@ -214,7 +181,9 @@ object DeltaDv {
             .map(DeltaCdf.cdcAction)
         val v = DeltaWrite.commit(spark, tablePath,
           DeltaWrite.dvProtocolAction(snap.protocol) +: (dvActions ++ cdcs),
-          "DELETE", snapHint = Some(snap))
+          "DELETE", snapHint = Some(snap), metrics = Seq(
+            "numDeletedRows" -> affected, "numRemovedFiles" -> 0L,
+            "numAddedFiles" -> 0L))
         DmlResult(v, 0, affected)
     }
   }
@@ -269,7 +238,9 @@ object DeltaDv {
         val v = DeltaWrite.commit(spark, tablePath,
           DeltaWrite.dvProtocolAction(snap.protocol) +:
             (dvActions ++ adds.map(DeltaWrite.addAction) ++ cdcs),
-          "UPDATE", snapHint = Some(snap))
+          "UPDATE", snapHint = Some(snap), metrics = Seq(
+            "numUpdatedRows" -> affected, "numRemovedFiles" -> 0L,
+            "numAddedFiles" -> adds.size.toLong))
         DmlResult(v, 0, affected)
     }
   }

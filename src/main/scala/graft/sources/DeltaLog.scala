@@ -225,68 +225,91 @@ object DeltaLog {
         .reduce(_ unionByName _)
 
     // Merge-on-read: files carrying a deletion vector are scanned with
-    // their physical row index and anti-joined against the DV sidecar
-    // rows (file, pos) — fully distributed, positions never transit the
-    // driver, and the join probe side is bounded by DELETED rows, not
-    // the table.
+    // their physical row index and filtered against their vector inside
+    // the task that reads them ([[DvFilter]]) — positions never transit
+    // the driver, and no join, shuffle or broadcast job is added.
     // Callers hand over either plain absolute paths (snapshot file
     // lists) or qualified URIs (provenance-column round trips) —
     // canonicalize both sides before matching.
-    val hconf = spark.sessionState.newHadoopConf()
-    def canon(p: String): String = {
-      val hp = new Path(p)
-      hp.getFileSystem(hconf).makeQualified(hp).toString
-    }
-    val dvByCanon: Map[String, DvDescriptor] = snap.files.flatMap { a =>
-      a.dv.map { d =>
-        val abs = new Path(snap.tablePath,
-          java.net.URLDecoder.decode(a.path, "UTF-8")).toString
-        canon(abs) -> (if (d.inline) d
-          else d.copy(path = new Path(snap.tablePath, d.path).toString))
-      }
-    }.toMap
-    val (dvPaths, plainPaths) = paths.partition(p => dvByCanon.contains(canon(p)))
+    val live = liveFiles(spark, snap)
+    val dvByCanon: Map[String, DvDescriptor] =
+      live.byUri.flatMap { case (uri, a) => a.dv.map(uri -> _) }
+    val (dvPaths, plainPaths) =
+      paths.partition(p => dvByCanon.contains(live.qualify(p)))
     if (dvPaths.isEmpty) readAll(plainPaths)
     else {
-      // Each (data file, descriptor) ref parses ITS vector out of the
-      // roaring DV file in the executor task — positions never transit
-      // the driver, and the probe side stays bounded by deleted rows.
-      // Inline ('i') vectors decode straight from the descriptor's z85
-      // payload; no file I/O. File reads use the SESSION's Hadoop conf
-      // (broadcast — spark.hadoop.* credentials/endpoints must reach
-      // executor-side DV opens on real object stores).
-      val refs: Seq[(String, String, String, Long, Long)] = dvPaths.map { p =>
-        val d = dvByCanon(canon(p))
-        (canon(p), d.storageType, if (d.inline) d.raw else d.path,
-          d.offset, d.sizeInBytes)
-      }
+      // File reads use the SESSION's Hadoop conf (broadcast —
+      // spark.hadoop.* credentials/endpoints must reach executor-side
+      // DV opens on real object stores).
       val bconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(hconf))
-      import spark.implicits._
-      val dvRows = spark.createDataset(refs)
-        .flatMap { case (file, st, ref, off, size) =>
-          val positions =
-            if (st == "i")
-              RoaringDv.deserialize(RoaringDv.z85DecodeTo(ref, size.toInt))
-            else {
-              val p = new Path(ref)
-              val dfs = p.getFileSystem(bconf.value.value)
-              val len = dfs.getFileStatus(p).getLen.toInt
-              val bytes = new Array[Byte](len)
-              val in = dfs.open(p)
-              try in.readFully(0, bytes) finally in.close()
-              RoaringDv.unframe(bytes, off, size)
-            }
-          positions.map(file -> _)
-        }.toDF("__dv_file", "__dv_pos")
-      val withMeta = readAll(dvPaths)
-      val filtered = withMeta.join(dvRows,
-          withMeta("__file") === dvRows("__dv_file") &&
-            withMeta("__pos") === dvRows("__dv_pos"), "left_anti")
+        new org.apache.spark.util.SerializableConfiguration(live.conf))
+      val keep = new DvFilter(snap.tablePath, dvPaths.map { p =>
+        val uri = live.qualify(p)
+        uri -> dvByCanon(uri)
+      }.toMap, bconf)
+      val notDeleted = org.apache.spark.sql.functions.udf(
+        (file: String, pos: Long) => keep.live(file, pos))
+      val filtered = readAll(dvPaths).filter(notDeleted(col("__file"), col("__pos")))
       if (plainPaths.isEmpty) filtered
       else readAll(plainPaths).unionByName(filtered)
     }
   }
+
+  /** The per-task deletion-vector filter of [[scanFilesWithMeta]]:
+    * `byUri` maps each vectored file's qualified URI to its descriptor
+    * (metadata-scale). A task parses a file's vector the first time it
+    * reads a row of that file — inline ('i') vectors straight from the
+    * descriptor's z85 payload, file-backed ones out of the roaring DV
+    * file — and keeps the sorted positions for the rest of its rows. */
+  private final class DvFilter(tablePath: String, byUri: Map[String, DvDescriptor],
+      conf: org.apache.spark.broadcast.Broadcast[
+        org.apache.spark.util.SerializableConfiguration]) extends Serializable {
+    @transient private lazy val parsed = mutable.HashMap[String, Array[Long]]()
+
+    def live(file: String, pos: Long): Boolean = {
+      val deleted = parsed.getOrElseUpdate(file, byUri.get(file).fold(
+        Array.empty[Long])(DeltaLog.dvPositions(conf.value.value, tablePath, _)))
+      java.util.Arrays.binarySearch(deleted, pos) < 0
+    }
+  }
+
+  /** A vector's sorted deleted positions (a file-backed `d.path`
+    * resolves against `tablePath` unless absolute). */
+  private[sources] def dvPositions(conf: org.apache.hadoop.conf.Configuration,
+      tablePath: String, d: DvDescriptor): Array[Long] =
+    if (d.inline)
+      RoaringDv.deserialize(RoaringDv.z85DecodeTo(d.raw, d.sizeInBytes.toInt))
+    else {
+      val p = new Path(tablePath, d.path)
+      val dfs = p.getFileSystem(conf)
+      val len = dfs.getFileStatus(p).getLen.toInt
+      val bytes = new Array[Byte](len)
+      val in = dfs.open(p)
+      try in.readFully(0, bytes) finally in.close()
+      RoaringDv.unframe(bytes, d.offset, d.sizeInBytes)
+    }
+
+  /** A snapshot's live entries keyed by the qualified URI the scan's
+    * `__file` column reports, built with ONE Hadoop conf: qualifying a
+    * path needs its FileSystem, and a fresh `newHadoopConf()` per file
+    * is a full conf copy each. `qualify` maps a plain absolute path or a
+    * qualified URI of the table's files to the same key. */
+  private[sources] final class LiveFiles(val conf: org.apache.hadoop.conf.Configuration,
+      snap: Snapshot) {
+    def qualify(p: String): String = {
+      val hp = new Path(p)
+      hp.getFileSystem(conf).makeQualified(hp).toString
+    }
+    val byUri: Map[String, AddEntry] = snap.files.map { a =>
+      qualify(new Path(snap.tablePath,
+        java.net.URLDecoder.decode(a.path, "UTF-8")).toString) -> a
+    }.toMap
+    def entry(uri: String): AddEntry = byUri.getOrElse(uri,
+      throw new IllegalStateException(s"scanned file not in snapshot: $uri"))
+  }
+
+  private[sources] def liveFiles(spark: SparkSession, snap: Snapshot): LiveFiles =
+    new LiveFiles(spark.sessionState.newHadoopConf(), snap)
 
   private val mapper = new ObjectMapper()
   private val VersionRe = """(\d{20})\.json""".r

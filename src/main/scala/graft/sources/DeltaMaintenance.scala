@@ -246,8 +246,9 @@ object DeltaMaintenance {
   }
 
   /** DESCRIBE HISTORY: one row per surviving commit (version DESC) with
-    * the commitInfo operation/engineInfo and the commit timestamp
-    * (commitInfo.timestamp, file mtime for commits predating it).
+    * the commitInfo operation/engineInfo, the commit timestamp
+    * (commitInfo.timestamp, file mtime for commits predating it) and the
+    * commit's `operationMetrics` map (null when it recorded none).
     * Metadata-scale: reads only the log. Commits cleaned past a
     * checkpoint horizon no longer appear — history is as durable as the
     * log, exactly the protocol's contract. */
@@ -263,6 +264,7 @@ object DeltaMaintenance {
       .map { st =>
         val v = st.getPath.getName.dropRight(5).toLong
         var op: String = null; var engine: String = null
+        var metrics: Map[String, String] = null
         var ts: Long = st.getModificationTime
         DeltaLog.withLogLines(fs, st.getPath)(_.foreach { line =>
           val ci = mapper.readTree(line).get("commitInfo")
@@ -274,16 +276,21 @@ object DeltaMaintenance {
             // history must agree with TIMESTAMP AS OF resolution
             if (ci.hasNonNull("inCommitTimestamp"))
               ts = ci.get("inCommitTimestamp").asLong()
+            if (ci.hasNonNull("operationMetrics"))
+              metrics = scala.jdk.CollectionConverters.SetHasAsScala(
+                ci.get("operationMetrics").properties()).asScala
+                .map(e => e.getKey -> e.getValue.asText()).toMap
           }
         })
-        Row(v, new java.sql.Timestamp(ts), op, engine)
+        Row(v, new java.sql.Timestamp(ts), op, engine, metrics)
       }
       .sortBy(-_.getLong(0))
     val schema = StructType(Seq(
       StructField("version", LongType),
       StructField("timestamp", TimestampType),
       StructField("operation", StringType),
-      StructField("engineInfo", StringType)))
+      StructField("engineInfo", StringType),
+      StructField("operationMetrics", MapType(StringType, StringType))))
     spark.createDataFrame(
       scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava, schema)
   }
@@ -341,14 +348,17 @@ object DeltaMaintenance {
       new Path(tablePath, java.net.URLDecoder.decode(a.path, "UTF-8")).toString
     }
     // One partition per ~targetSize of input: the rewrite is distributed,
-    // only file metadata moves through the driver.
+    // only file metadata moves through the driver. Unpartitioned tables
+    // COALESCE the scan (one job, no shuffle: bin-packing needs no row
+    // to move between tasks); partitioned tables hash on their partition
+    // columns so each output file holds one partition's rows.
     val totalBytes = small.map(_.size).sum
     val parts = math.max(1, (totalBytes / smallFileBytes).toInt)
     val df = DeltaLog.scanFiles(spark, snap, uris)
     val compacted =
       if (snap.partitionColumns.nonEmpty) df.repartition(parts,
         snap.partitionColumns.map(org.apache.spark.sql.functions.col): _*)
-      else df.repartition(parts)
+      else df.coalesce(parts)
     val adds = DeltaWrite.writeDataFiles(compacted, tablePath,
       snap.partitionColumns, Some(snap.schema))
     val actions =
@@ -363,7 +373,9 @@ object DeltaMaintenance {
       }
     }
     val v = DeltaWrite.commit(spark, tablePath, actions, "OPTIMIZE",
-      snapHint = Some(snap))
+      snapHint = Some(snap), metrics = Seq(
+        "numRemovedFiles" -> small.size.toLong,
+        "numAddedFiles" -> adds.size.toLong))
     (small.size, v)
   }
 

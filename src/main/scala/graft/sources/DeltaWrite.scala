@@ -166,11 +166,18 @@ object DeltaWrite {
   /** Append a commit of explicit actions (used by [[DeltaDml]]). Returns
     * the committed version. With `maxRetries` > 0, a version-number race
     * (rename onto an existing commit fails) re-lists and retries — only
-    * safe when the actions do not depend on the snapshot (appends). */
+    * safe when the actions do not depend on the snapshot (appends).
+    *
+    * commitInfo records `readVersion` (the snapshot hint's version: the
+    * state the actions were computed against) and, when given,
+    * `operationMetrics` — Delta's string-valued counter map (rows
+    * deleted/updated/inserted, files removed/added). Callers pass
+    * counts their single pass already returned; none is recomputed. */
   private[sources] def commit(spark: SparkSession, tablePath: String,
       actions: Seq[ObjectNode], operation: String, maxRetries: Int = 0,
       ictExplicit: Option[Long] = None,
-      snapHint: Option[DeltaLog.Snapshot] = None): Long = {
+      snapHint: Option[DeltaLog.Snapshot] = None,
+      metrics: Seq[(String, Long)] = Nil): Long = {
     val dir = DeltaLog.logDir(tablePath)
     val f = fs(spark, dir)
     f.mkdirs(dir)
@@ -211,6 +218,11 @@ object DeltaWrite {
         .put("timestamp", System.currentTimeMillis())
         .put("operation", operation).put("engineInfo", "graft-spark")
       ict.foreach(t => ci.put("inCommitTimestamp", t))
+      snapHint.foreach(sn => ci.put("readVersion", sn.version))
+      if (metrics.nonEmpty) {
+        val om = ci.putObject("operationMetrics")
+        metrics.foreach { case (k, n) => om.put(k, n.toString) }
+      }
       val info = mapper.createObjectNode()
       info.set[ObjectNode]("commitInfo", ci)
       val effActions = RowTracking.stamp(spark, tablePath,
@@ -279,6 +291,51 @@ object DeltaWrite {
     }
   }
 
+  /** Write `rows` as ONE parquet file at `target` from the driver,
+    * through Spark's own parquet writer (ParquetFileFormat's output
+    * writer, configured from the session's parquet settings exactly as a
+    * distributed write is): checkpoint rows are already on the driver,
+    * so this launches no Spark job. `target` must not exist; callers
+    * stage under a hidden name and rename. Returns the file's size. */
+  private def writeParquetOnDriver(spark: SparkSession, target: Path,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]): Long = {
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val factory = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      job.getConfiguration, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToCatalystConverter(schema)
+    val out = factory.newInstance(target.toString, schema, ctx)
+    try rows.foreach(r => out.write(
+      toCatalyst(r).asInstanceOf[org.apache.spark.sql.catalyst.InternalRow]))
+    finally out.close()
+    fs(spark, target).getFileStatus(target).getLen
+  }
+
+  /** Read one parquet file's `schema` columns on the driver through
+    * Spark's parquet reader (no Spark job) — for checkpoint metadata a
+    * writer consults, which is O(files), never table data. */
+  private def readParquetOnDriver(spark: SparkSession, file: Path,
+      schema: org.apache.spark.sql.types.StructType)
+      : Seq[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+    val read = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().buildReaderWithPartitionValues(spark, schema,
+        org.apache.spark.sql.types.StructType(Nil), schema, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+        spark.sessionState.newHadoopConf())
+    val toRow = org.apache.spark.sql.catalyst.CatalystTypeConverters
+      .createToScalaConverter(schema)
+    val len = fs(spark, file).getFileStatus(file).getLen
+    read(PartitionedFile(org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(file), 0L, len,
+        Array.empty[String], 0L, len))
+      .map(r => toRow(r).asInstanceOf[org.apache.spark.sql.Row]).toVector
+  }
+
   /** Write a parquet checkpoint of the current snapshot plus the
     * `_last_checkpoint` pointer, so readers skip replaying old commits.
     *
@@ -288,7 +345,12 @@ object DeltaWrite {
     * bootstrap bottleneck, while N parts let the reader's
     * `spark.read.parquet(parts: _*)` parallelize the replay scan. Add
     * entries are distributed round-robin; protocol + metaData ride in
-    * part 1 (replay order does not matter within a checkpoint). */
+    * part 1 (replay order does not matter within a checkpoint).
+    *
+    * Every row is already on the driver (the snapshot), so each part is
+    * written there by [[writeParquetOnDriver]] — Spark's parquet writer
+    * with the session's settings, no Spark job — and staged under a
+    * hidden name before any part is published. */
   def checkpoint(spark: SparkSession, tablePath: String, parts: Int = 1): Long = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -391,18 +453,8 @@ object DeltaWrite {
     // back to the previous checkpoint / full replay instead of silently
     // bootstrapping from a partial live-file set).
     def stagePart(rows: Seq[Row]): Path = {
-      val staging = new Path(dir, s".ckpt-${java.util.UUID.randomUUID()}")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1).asInstanceOf[org.apache.spark.rdd.RDD[Row]],
-          ckptSchema)
-        .write.mode("overwrite").parquet(staging.toString)
-      val part = f.listStatus(staging).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("checkpoint write produced no part file"))
       val hidden = new Path(dir, s".ckpt-staged-${java.util.UUID.randomUUID()}.parquet")
-      if (!f.rename(part, hidden))
-        throw new IllegalStateException(s"could not stage checkpoint part $hidden")
-      f.delete(staging, true)
+      writeParquetOnDriver(spark, hidden, ckptSchema, rows)
       hidden
     }
     def publish(staged: Seq[(Path, Path)]): Unit =
@@ -445,7 +497,9 @@ object DeltaWrite {
     * table does not carry it yet, a protocol-upgrade commit (reader 3 /
     * writer 7, feature lists preserved) lands first. Sidecars are fully
     * staged before the manifest publishes, and the reader refuses a
-    * manifest whose sidecar is missing. */
+    * manifest whose sidecar is missing. Manifest and sidecars are
+    * written, and a prior manifest's sidecars read, on the driver
+    * (no Spark job), like [[checkpoint]]'s parts. */
   def checkpointV2(spark: SparkSession, tablePath: String,
       sidecars: Int = 1, manifestFormat: String = "parquet"): Long = {
     require(manifestFormat == "parquet" || manifestFormat == "json",
@@ -509,20 +563,13 @@ object DeltaWrite {
     val scDir = new Path(dir, "_sidecars")
     f.mkdirs(scDir)
 
+    // each file is staged under a hidden name, then renamed into place
     def writeOne(target: Path, rows: Seq[Row], schema: StructType): Long = {
-      val staging = new Path(dir, s".ckpt-v2-${java.util.UUID.randomUUID()}")
-      spark.createDataFrame(
-          spark.sparkContext.parallelize(rows, 1)
-            .asInstanceOf[org.apache.spark.rdd.RDD[Row]], schema)
-        .write.mode("overwrite").parquet(staging.toString)
-      val part = f.listStatus(staging).map(_.getPath)
-        .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException("checkpoint write produced no part file"))
-      val size = f.getFileStatus(part).getLen
+      val staged = new Path(dir, s".ckpt-v2-${java.util.UUID.randomUUID()}.parquet")
+      val size = writeParquetOnDriver(spark, staged, schema, rows)
       f.delete(target, false)
-      if (!f.rename(part, target))
+      if (!f.rename(staged, target))
         throw new IllegalStateException(s"could not place $target")
-      f.delete(staging, true)
       size
     }
 
@@ -571,51 +618,34 @@ object DeltaWrite {
                   sc.get("sizeInBytes").asLong())
                 .toMap)
             } else {
-              val refs = spark.read.parquet(manifest.toString)
-              if (!refs.columns.contains("sidecar")) Map.empty[String, Long]
-              else refs.select("sidecar").collect()
+              val sidecarOnly = StructType(manifestSchema.filter(_.name == "sidecar"))
+              readParquetOnDriver(spark, manifest, sidecarOnly)
                 .filter(!_.isNullAt(0)).map(_.getStruct(0))
                 .map(sc => sc.getAs[String]("path") ->
                   sc.getAs[Long]("sizeInBytes"))
                 .toMap
             }).filter { case (name, _) => f.exists(new Path(scDir, name)) }
-          if (named.isEmpty) Map.empty
-          else {
-              // ONE read over every prior sidecar, grouped back by file —
-              // a per-sidecar read would launch N driver jobs per checkpoint
-              val rows = spark.read
-                .parquet(named.keys.toSeq.map(n => new Path(scDir, n).toString): _*)
-                .select(org.apache.spark.sql.functions.input_file_name().as("f"),
-                  org.apache.spark.sql.functions.col("add"))
-                .collect()
-              val nameToKeys = rows.filter(!_.isNullAt(1))
-                .groupBy(r => new Path(r.getString(0)).getName)
-                .map { case (name, rs) =>
-                  name -> rs.map(_.getStruct(1)).map { a =>
-                    val dv = Option(a.getAs[Row]("deletionVector"))
-                    // offset is NULL for inline descriptors — a bare
-                    // getAs[Long] would NPE on unboxing
-                    val base =
-                      if (a.schema.fieldNames.contains("baseRowId") &&
-                          !a.isNullAt(a.fieldIndex("baseRowId")))
-                        Some(a.getAs[Long]("baseRowId"))
-                      else None
-                    contentKey(a.getAs[String]("path"), a.getAs[Long]("size"),
-                      Option(a.getAs[String]("stats")),
-                      dv.map(d => d.getAs[String]("pathOrInlineDv") +
-                        "@" + (if (d.isNullAt(d.fieldIndex("offset"))) "i"
-                          else d.getAs[Long]("offset").toString) +
-                        "+" + d.getAs[Long]("sizeInBytes")),
-                      dv.map(_.getAs[Long]("cardinality")), base)
-                  }.toSet
-                }
-              // files absent from the scan were EMPTY sidecars — they
-              // legitimately match (and serve) an empty bucket
-              named.map { case (n, sz) =>
-                nameToKeys.getOrElse(n,
-                  Set.empty[(String, Long, String, String, Long, Long)]) -> (n, sz)
-              }
-            }
+          // prior sidecars are checkpoint metadata: read on the driver,
+          // no Spark job; an EMPTY sidecar legitimately matches (and
+          // serves) an empty bucket
+          named.map { case (name, sz) =>
+            readParquetOnDriver(spark, new Path(scDir, name), sidecarSchema)
+              .filter(!_.isNullAt(0)).map(_.getStruct(0)).map { a =>
+                val dv = Option(a.getAs[Row]("deletionVector"))
+                // offset is NULL for inline descriptors — a bare
+                // getAs[Long] would NPE on unboxing
+                val base =
+                  if (a.isNullAt(a.fieldIndex("baseRowId"))) None
+                  else Some(a.getAs[Long]("baseRowId"))
+                contentKey(a.getAs[String]("path"), a.getAs[Long]("size"),
+                  Option(a.getAs[String]("stats")),
+                  dv.map(d => d.getAs[String]("pathOrInlineDv") +
+                    "@" + (if (d.isNullAt(d.fieldIndex("offset"))) "i"
+                      else d.getAs[Long]("offset").toString) +
+                    "+" + d.getAs[Long]("sizeInBytes")),
+                  dv.map(_.getAs[Long]("cardinality")), base)
+              }.toSet -> (name, sz)
+          }
       }
     }
     // unchanged buckets are referenced; changed ones land (fully

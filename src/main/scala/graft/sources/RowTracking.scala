@@ -54,20 +54,23 @@ object RowTracking {
   /** Record count of a staged add: from its stats JSON, else one footer
     * read (foreign files re-committed without stats). */
   private def numRecordsOf(spark: SparkSession, tablePath: String,
-      add: ObjectNode): Long = {
-    if (add.hasNonNull("stats")) {
-      val s = mapper.readTree(add.get("stats").asText())
-      if (s.hasNonNull("numRecords")) return s.get("numRecords").asLong()
-    }
-    val rel = java.net.URLDecoder.decode(add.get("path").asText(), "UTF-8")
-    val p =
-      if (rel.contains("://") || rel.startsWith("/")) new Path(rel)
-      else new Path(tablePath, rel)
-    val reader = ParquetFileReader.open(
-      HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()))
-    try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
-    finally reader.close()
-  }
+      add: ObjectNode): Long =
+    numRecordsOf(spark, tablePath, add.get("path").asText(),
+      if (add.hasNonNull("stats")) Some(add.get("stats").asText()) else None)
+
+  private[sources] def numRecordsOf(spark: SparkSession, tablePath: String,
+      path: String, stats: Option[String]): Long =
+    stats.map(mapper.readTree).filter(_.hasNonNull("numRecords"))
+      .map(_.get("numRecords").asLong()).getOrElse {
+        val rel = java.net.URLDecoder.decode(path, "UTF-8")
+        val p =
+          if (rel.contains("://") || rel.startsWith("/")) new Path(rel)
+          else new Path(tablePath, rel)
+        val reader = ParquetFileReader.open(
+          HadoopInputFile.fromPath(p, spark.sessionState.newHadoopConf()))
+        try reader.getFooter.getBlocks.asScala.map(_.getRowCount).sum
+        finally reader.close()
+      }
 
   private def protocolActionListsRowTracking(actions: Seq[ObjectNode]): Boolean =
     actions.exists { n =>
@@ -145,7 +148,7 @@ object RowTracking {
     * `_row_id` (baseRowId + physical row index) and
     * `_row_commit_version`. Files without a recorded baseRowId (written
     * before the feature) yield nulls rather than failing the scan.
-    * Deletion vectors compose: the DV anti-join runs on the same
+    * Deletion vectors compose: the DV filter runs on the same
     * physical row index, so surviving rows keep their ids. */
   def readWithRowIds(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame = {

@@ -34,9 +34,7 @@ final class PathResolver(mapping: Map[String, String] = Map.empty)
       else ref
     // Delta tables resolve through the transaction log (the reference's
     // delta_scan path); anything else is a plain parquet file/directory.
-    if (graft.sources.DeltaLog.isDeltaTable(spark, path))
-      graft.sources.DeltaLog.read(spark, path)
-    else spark.read.parquet(path)
+    graft.sources.DeltaLog.readTableOrParquet(spark, path)
   }
 }
 

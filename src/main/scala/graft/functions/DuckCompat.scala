@@ -1016,7 +1016,8 @@ object DuckCompat {
     // delta_scan('<path>'), delta-unity-duckdb.js:331-335, and users
     // paste it directly). Resolves through graft's public-protocol
     // Delta reader (log replay + checkpoints + DVs); a non-Delta path
-    // falls back to a plain parquet scan, mirroring PathResolver. The
+    // reads as plain parquet (DeltaLog.readTableOrParquet, the resolver
+    // PathResolver uses too). The
     // path must be a literal — as in DuckDB, where table functions bind
     // at plan time.
     spark.sessionState.tableFunctionRegistry.createOrReplaceTempFunction(
@@ -1027,11 +1028,8 @@ object DuckCompat {
           case _ => throw new IllegalArgumentException(
             "delta_scan expects exactly one string-literal path")
         }
-        val df =
-          if (graft.sources.DeltaLog.isDeltaTable(spark, path))
-            graft.sources.DeltaLog.read(spark, path)
-          else spark.read.parquet(path)
-        df.queryExecution.analyzed
+        graft.sources.DeltaLog.readTableOrParquet(spark, path)
+          .queryExecution.analyzed
       }, "built-in")
 
     // read_csv / read_json as real TABLE FUNCTIONS (r10 — previously

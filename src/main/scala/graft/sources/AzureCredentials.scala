@@ -88,9 +88,7 @@ final class AbfssSasResolver(
             "Could not determine Azure storage account from ABFSS path " +
               s"or environment: $ref"))
         AzureCredentials.installSas(spark, account, sas)
-        val path = locate(ref)
-        if (DeltaLog.isDeltaTable(spark, path)) DeltaLog.read(spark, path)
-        else spark.read.parquet(path)
+        DeltaLog.readTableOrParquet(spark, locate(ref))
       case _ => fallback.resolve(spark, ref)
     }
 }

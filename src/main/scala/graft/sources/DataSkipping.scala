@@ -1,29 +1,32 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.schema.LogicalTypeAnnotation
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{coalesce, col, lit}
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.GraftColumnBridge.{AttrView, FnView, LitView, NodeView}
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualTo,
+  Expression, GreaterThan, GreaterThanOrEqual, In, InSet, IsNotNull, IsNull,
+  LessThan, LessThanOrEqual, Or}
+import org.apache.spark.sql.catalyst.util.{DateTimeUtils, TypeUtils}
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** File-level data skipping — the Delta stats protocol (`add.stats` JSON
   * with `numRecords` / `minValues` / `maxValues` / `nullCount`) plus the
-  * pruning rewrite that turns a row predicate into a can-this-FILE-match
-  * predicate over those stats.
+  * ONE skipping evaluator ([[mightMatch]]): a resolved Catalyst
+  * predicate decides keep/skip per file over the entry's parsed stats
+  * and typed partition values, in the driver, with no DataFrame. Every
+  * scan's file index ([[DeltaFileIndex]]) and `readWhere` call it.
   *
   * This is the scan-side half of what makes a 100 TB table queryable: a
   * point or range predicate on a clustered column should open the files
   * whose [min,max] intersect it, not all of them. Pruning is SAFE, never
   * exact — a file that cannot be excluded is scanned, and the original
-  * predicate still runs over every row that survives, so a translation
-  * gap costs I/O, never correctness. Missing stats (hand-written logs,
+  * predicate still runs over every row that survives, so an unsupported
+  * shape costs I/O, never correctness. Missing stats (hand-written logs,
   * unsupported types) fall back to "might match".
   *
   * Stats are harvested from the parquet FOOTERS after the distributed
@@ -123,7 +126,12 @@ object DataSkipping {
     case (a: Number, b: Number) =>
       val (da, db) = (a.doubleValue(), b.doubleValue())
       if ((da <= db) == isMin) x else y
-    case (a: String, b: String) => if ((a <= b) == isMin) x else y
+    // strings in UTF-8 byte order, as parquet's footer and Spark order
+    // them: String's UTF-16 order puts U+E000..U+FFFF after every
+    // character above U+FFFF, and the merged bound would skip matches
+    case (a: String, b: String) =>
+      val le = UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) <= 0
+      if (le == isMin) x else y
     case _ => x
   }
 
@@ -137,66 +145,8 @@ object DataSkipping {
     case _ =>
   }
 
-  /** Fold a file's hive-style partition values into its stats JSON as
-    * point ranges (min = max = value), so partition predicates prune
-    * through the same [[canMatch]] rewrite as data-column ranges — a
-    * `region='eu'` filter then drops every other partition's files
-    * DRIVER-side, before the scan is even planned. Values are typed from
-    * the table schema (numbers unquoted, strings quoted) because
-    * `from_json` null-swallows mistyped tokens, which would silently
-    * disable pruning. Unsupported types and the hive null sentinel just
-    * contribute no range (never wrong, only unpruned). Returns None only
-    * when there is nothing at all to skip on. */
-  def withPartitionValues(statsJson: Option[String], relPath: String,
-      schema: StructType, partCols: Seq[String]): Option[String] = {
-    val segs = relPath.split("/").dropRight(1).flatMap(_.split("=", 2) match {
-      case Array(k, v) => Some(
-        java.net.URLDecoder.decode(k, "UTF-8") ->
-          java.net.URLDecoder.decode(v, "UTF-8"))
-      case _ => None
-    }).filter { case (k, v) =>
-      partCols.contains(k) && v != "__HIVE_DEFAULT_PARTITION__"
-    }
-    if (segs.isEmpty) return statsJson
-    val root = statsJson.map(mapper.readTree(_)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-      .getOrElse {
-        val r = mapper.createObjectNode()
-        r.set[com.fasterxml.jackson.databind.node.ObjectNode](
-          "minValues", mapper.createObjectNode())
-        r.set[com.fasterxml.jackson.databind.node.ObjectNode](
-          "maxValues", mapper.createObjectNode())
-        r
-      }
-    def obj(name: String) = {
-      val n = root.get(name)
-      if (n != null && n.isObject)
-        n.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else {
-        val o = mapper.createObjectNode()
-        root.set[com.fasterxml.jackson.databind.node.ObjectNode](name, o); o
-      }
-    }
-    val (mins, maxs) = (obj("minValues"), obj("maxValues"))
-    segs.foreach { case (k, v) =>
-      try schema.fields.find(_.name == k).map(_.dataType) match {
-        case Some(org.apache.spark.sql.types.IntegerType) =>
-          mins.put(k, v.toInt); maxs.put(k, v.toInt)
-        case Some(org.apache.spark.sql.types.LongType) =>
-          mins.put(k, v.toLong); maxs.put(k, v.toLong)
-        case Some(org.apache.spark.sql.types.FloatType) =>
-          mins.put(k, v.toFloat); maxs.put(k, v.toFloat)
-        case Some(org.apache.spark.sql.types.DoubleType) =>
-          mins.put(k, v.toDouble); maxs.put(k, v.toDouble)
-        case Some(org.apache.spark.sql.types.StringType) =>
-          mins.put(k, v); maxs.put(k, v)
-        case _ =>
-      } catch { case _: NumberFormatException => } // malformed dir: no range
-    }
-    Some(mapper.writeValueAsString(root))
-  }
-
-  /** Spark schema for parsing `add.stats` of a table with `dataSchema`. */
+  /** The shape of `add.stats` for a table with `dataSchema`, as a Spark
+    * schema (what a reader parsing the JSON column-wise would use). */
   def statsSchema(dataSchema: StructType): StructType = {
     val valueStruct = StructType(dataSchema.fields.map(f =>
       StructField(f.name, f.dataType)))
@@ -208,71 +158,97 @@ object DataSkipping {
         StructField(f.name, org.apache.spark.sql.types.LongType))))))
   }
 
-  /** Rewrite a row predicate into a may-this-file-match predicate over a
-    * parsed stats struct column `s`. Conservative: any unsupported
-    * subtree (or missing stat, via coalesce) becomes TRUE. `statCols` is
-    * the set of columns actually present in the stats schema — an
-    * attribute outside it must fall back to "might match", not throw on
-    * a nonexistent `s.minValues.<col>` reference. Partition columns
-    * participate via [[withPartitionValues]]' point ranges. Operates on
-    * the
-    * bridge's neutral view of the Column node tree (Spark 4's
-    * Connect-unified Column has no public `.expr`). */
-  def canMatch(condition: Column, statCols: Set[String]): Column =
-    translate(GraftColumnBridge.view(condition), statCols)
+  /** What a file's log entry records about one column, as Catalyst
+    * values of the column's type; None where it records nothing. */
+  final case class ColumnStats(min: Option[Any] = None, max: Option[Any] = None,
+      nullCount: Option[Long] = None, numRecords: Option[Long] = None)
 
-  private def translate(e: NodeView, statCols: Set[String]): Column = e match {
-    case FnView("and", Seq(l, r)) => translate(l, statCols) && translate(r, statCols)
-    case FnView("or", Seq(l, r)) => translate(l, statCols) || translate(r, statCols)
-    case FnView("=" | "==" | "equal_to", Seq(a, b)) =>
-      (a, b) match {
-        case (AttrView(n), LitView(v)) if statCols(n) => rangeContains(n, v)
-        case (LitView(v), AttrView(n)) if statCols(n) => rangeContains(n, v)
-        case _ => lit(true)
-      }
-    case FnView("<", Seq(a, b)) => cmpNode(a, b, strict = true, attrOnLeftUsesMin = true, statCols)
-    case FnView("<=", Seq(a, b)) => cmpNode(a, b, strict = false, attrOnLeftUsesMin = true, statCols)
-    case FnView(">", Seq(a, b)) => cmpNode(a, b, strict = true, attrOnLeftUsesMin = false, statCols)
-    case FnView(">=", Seq(a, b)) => cmpNode(a, b, strict = false, attrOnLeftUsesMin = false, statCols)
-    case FnView("in", AttrView(n) +: vs)
-        if statCols(n) && vs.forall(_.isInstanceOf[LitView]) =>
-      vs.collect { case LitView(v) => rangeContains(n, v) }
-        .reduceOption(_ || _).getOrElse(lit(true))
-    case FnView("isnull", Seq(AttrView(n))) if statCols(n) =>
-      safe(col(s"s.nullCount.`$n`") > 0)
-    case _ => lit(true)
-  }
+  /** Parse an `add.stats` JSON once (None when absent or unparseable). */
+  def parse(stats: Option[String]): Option[JsonNode] =
+    stats.flatMap(s => scala.util.Try(mapper.readTree(s)).toOption)
 
-  /** attr OP lit (or lit OP attr, mirrored): `<`-family checks the file
-    * minimum, `>`-family the maximum. */
-  private def cmpNode(a: NodeView, b: NodeView,
-      strict: Boolean, attrOnLeftUsesMin: Boolean, statCols: Set[String]): Column =
-    (a, b) match {
-      case (AttrView(n), LitView(v)) if statCols(n) =>
-        bound(n, v, useMin = attrOnLeftUsesMin, strict)
-      case (LitView(v), AttrView(n)) if statCols(n) =>
-        bound(n, v, useMin = !attrOnLeftUsesMin, strict)
-      case _ => lit(true)
+  /** Column `name`'s stats in a parsed `add.stats`. Only values whose
+    * JSON form is unambiguous for `dt` count: integral and floating
+    * numbers, binary-ordered strings, dates (ISO text, or the day number
+    * the footer harvest records). Decimals (the footer records unscaled
+    * integers), timestamps and everything else record nothing. */
+  def columnStats(stats: Option[JsonNode], name: String, dt: DataType): ColumnStats =
+    stats.fold(ColumnStats()) { root =>
+      def field(section: String): JsonNode =
+        Option(root.get(section)).map(_.get(name)).orNull
+      def count(n: JsonNode): Option[Long] =
+        Option(n).filter(_.canConvertToLong).map(_.asLong)
+      ColumnStats(value(field("minValues"), dt), value(field("maxValues"), dt),
+        count(field("nullCount")), count(root.get("numRecords")))
     }
 
-  private def bound(n: String, v: Any, useMin: Boolean, strict: Boolean): Column = {
-    val c = if (useMin) minCol(n) else maxCol(n)
-    val l = litOf(v)
-    safe(
-      if (useMin) { if (strict) c < l else c <= l }
-      else { if (strict) c > l else c >= l })
+  private def value(n: JsonNode, dt: DataType): Option[Any] =
+    if (n == null || !(n.isNumber || n.isTextual)) None
+    else dt match {
+      case ByteType if n.canConvertToInt && n.asInt.isValidByte => Some(n.asInt.toByte)
+      case ShortType if n.canConvertToInt && n.asInt.isValidShort => Some(n.asInt.toShort)
+      case IntegerType if n.isIntegralNumber && n.canConvertToInt => Some(n.asInt)
+      case LongType if n.isIntegralNumber && n.canConvertToLong => Some(n.asLong)
+      case FloatType if n.isNumber => Some(n.floatValue)
+      case DoubleType if n.isNumber => Some(n.doubleValue)
+      case StringType if n.isTextual => // the default (binary) collation
+        Some(UTF8String.fromString(n.asText))
+      case DateType if n.isTextual =>
+        DateTimeUtils.stringToDate(UTF8String.fromString(n.asText))
+      case DateType if n.isIntegralNumber && n.canConvertToInt => Some(n.asInt)
+      case _ => None
+    }
+
+  /** Whether a file might hold a row satisfying `pred`, a resolved
+    * Catalyst predicate, judged in the driver from what the file's log
+    * entry records: `stats(name, type)` for each column it compares.
+    * Understood shapes are AND/OR of column-vs-constant comparisons,
+    * IN lists and null tests. Anything else keeps the file, as does a
+    * missing stat, and so does a Cast over the column: casts can break
+    * order ("10" < "9" as strings, 10 > 9 as ints). Skipping is an I/O
+    * saving only; the full predicate still filters every kept row. */
+  def mightMatch(pred: Expression, stats: (String, DataType) => ColumnStats): Boolean = {
+    def constant(a: AttributeReference, e: Expression): Option[Any] =
+      if (!e.foldable || e.dataType != a.dataType) None
+      else scala.util.Try(e.eval()).toOption.filter(_ != null)
+    // a null value, an unordered type or a missing bound keeps the file
+    def holds(a: AttributeReference, op: String, v: Any): Boolean =
+      v == null || scala.util.Try {
+        val s = stats(a.name, a.dataType)
+        lazy val ord = TypeUtils.getInterpretedOrdering(a.dataType)
+        op match {
+          case "=" => s.min.forall(ord.lteq(_, v)) && s.max.forall(ord.gteq(_, v))
+          case "<" => s.min.forall(ord.lt(_, v))
+          case "<=" => s.min.forall(ord.lteq(_, v))
+          case ">" => s.max.forall(ord.gt(_, v))
+          case ">=" => s.max.forall(ord.gteq(_, v))
+        }
+      }.getOrElse(true)
+    def compare(op: String, mirrored: String, l: Expression, r: Expression): Boolean =
+      (l, r) match {
+        case (a: AttributeReference, v) => constant(a, v).forall(holds(a, op, _))
+        case (v, a: AttributeReference) => constant(a, v).forall(holds(a, mirrored, _))
+        case _ => true
+      }
+    def keep(e: Expression): Boolean = e match {
+      case And(l, r) => keep(l) && keep(r)
+      case Or(l, r) => keep(l) || keep(r)
+      case EqualTo(l, r) => compare("=", "=", l, r)
+      case LessThan(l, r) => compare("<", ">", l, r)
+      case LessThanOrEqual(l, r) => compare("<=", ">=", l, r)
+      case GreaterThan(l, r) => compare(">", "<", l, r)
+      case GreaterThanOrEqual(l, r) => compare(">=", "<=", l, r)
+      case In(a: AttributeReference, vs) =>
+        val values = vs.map(constant(a, _))
+        values.exists(_.isEmpty) || values.flatten.exists(holds(a, "=", _))
+      case InSet(a: AttributeReference, values) => values.exists(holds(a, "=", _))
+      case IsNull(a: AttributeReference) =>
+        stats(a.name, a.dataType).nullCount.forall(_ > 0)
+      case IsNotNull(a: AttributeReference) =>
+        val s = stats(a.name, a.dataType)
+        s.nullCount.isEmpty || s.nullCount != s.numRecords
+      case _ => true
+    }
+    keep(pred)
   }
-
-  private def litOf(v: Any): Column =
-    GraftColumnBridge.column(
-      org.apache.spark.sql.catalyst.expressions.Literal(v))
-
-  private def minCol(n: String): Column = col(s"s.minValues.`$n`")
-  private def maxCol(n: String): Column = col(s"s.maxValues.`$n`")
-
-  private def rangeContains(n: String, v: Any): Column =
-    safe(minCol(n) <= litOf(v) && maxCol(n) >= litOf(v))
-
-  /** NULL stat (absent min/max) must mean "might match", not "skip". */
-  private def safe(c: Column): Column = coalesce(c, lit(true))
 }

@@ -9,18 +9,20 @@ import org.apache.spark.sql.types.StructType
 /** Batch read relation behind `spark.read.format("graft-delta")` — the
   * V1 `PrunedFilteredScan` surface (the same integration style Spark's
   * JDBC source uses), so the physical plan is a `RowDataSourceScanExec`
-  * that DISPLAYS the pushed filters, and everything this engine's Delta
-  * reader does — log replay, time travel, deletion-vector filtering,
-  * column-mapping resolution, stats/partition file skipping — rides
-  * underneath unchanged:
+  * that DISPLAYS the pushed filters, and the one Delta read path rides
+  * underneath: [[DeltaLog.readWhere]] — log replay, time travel, the
+  * snapshot's file index, deletion-vector filtering, column-mapping
+  * resolution and file skipping. It stays a V1 scan over `readWhere`
+  * because a bare `BaseRelation` (a file relation on its own) could
+  * carry neither the deletion-vector filter nor the mapping projection:
   *
   *   - `requiredColumns` prunes the projection before the scan plan is
   *     built (mapped tables prune PHYSICAL columns, since the logical
   *     projection happens inside [[DeltaLog.scanFiles]]);
-  *   - translatable `filters` become the [[DeltaLog.readWhere]]
-  *     condition, which skips whole FILES on add.stats ranges and
-  *     partition values before Spark's own parquet row-group pushdown
-  *     sees the survivors;
+  *   - translatable `filters` become the `readWhere` condition, which
+  *     skips whole FILES on add.stats ranges and partition values
+  *     ([[DataSkipping.mightMatch]]) before Spark's own parquet
+  *     row-group pushdown sees the survivors;
   *   - untranslatable filters are reported via `unhandledFilters`, so
   *     Spark re-applies them above the scan (never dropped).
   *

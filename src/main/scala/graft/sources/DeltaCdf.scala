@@ -101,7 +101,7 @@ object DeltaCdf {
       s"commit $v of $tablePath no longer exists (log cleaned) — " +
         "change feed unavailable for this range")
     val cdcs = scala.collection.mutable.Buffer[String]()
-    val adds = scala.collection.mutable.Buffer[String]()
+    val adds = scala.collection.mutable.Buffer[DeltaLog.AddEntry]()
     var dataRemove = false
     DeltaLog.withLogLines(fs, commit)(_.foreach { line =>
       val node = mapper.readTree(line)
@@ -109,7 +109,7 @@ object DeltaCdf {
       def changes(n: com.fasterxml.jackson.databind.JsonNode) =
         !n.hasNonNull("dataChange") || n.get("dataChange").asBoolean(true)
       if (cdc != null) cdcs += cdc.get("path").asText()
-      if (add != null && changes(add)) adds += add.get("path").asText()
+      if (add != null && changes(add)) adds += DeltaLog.addEntry(add)
       if (rm != null && changes(rm)) dataRemove = true
     })
 
@@ -138,9 +138,7 @@ object DeltaCdf {
     } else if (adds.nonEmpty) {
       // append-only commit: its added files ARE the inserted rows
       val snapV = DeltaLog.snapshot(spark, tablePath, Some(v))
-      Some(DeltaLog.scanFiles(spark, snapV, adds.toSeq.map { p =>
-        new Path(tablePath, java.net.URLDecoder.decode(p, "UTF-8")).toString
-      }).withColumn("_change_type", lit("insert"))
+      Some(DeltaLog.scanFiles(spark, snapV, adds.toSeq).withColumn("_change_type", lit("insert"))
         .withColumn("_commit_version", lit(v)))
     } else None // metadata-only or layout-only commit
   }

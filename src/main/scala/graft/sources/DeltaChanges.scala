@@ -25,7 +25,7 @@ object DeltaChanges {
   private val mapper = new ObjectMapper()
 
   final case class Changes(fromVersionExclusive: Long, toVersion: Long,
-      addedFiles: Seq[String])
+      addedFiles: Seq[DeltaLog.AddEntry])
 
   /** (files, bytes) added by ONE commit — the metadata a streaming
     * source's `maxFilesPerTrigger` / `maxBytesPerTrigger` walk needs.
@@ -53,7 +53,9 @@ object DeltaChanges {
     (files, bytes)
   }
 
-  /** File paths added by commits in `(fromExclusive, toInclusive]`
+  /** Files added by commits in `(fromExclusive, toInclusive]`, as those
+    * commits' own `add` entries — a file re-added later in the range
+    * (a deletion vector attached) appears once, as last added
     * (`toInclusive` defaults to the latest version — a streaming source
     * passes the batch's end offset so a commit landing mid-planning
     * stays out of the batch). */
@@ -64,7 +66,7 @@ object DeltaChanges {
     val latest = toInclusive.getOrElse(DeltaLog.latestVersion(spark, tablePath))
     val fs = DeltaLog.logDir(tablePath)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    val added = scala.collection.mutable.Buffer[String]()
+    val added = scala.collection.mutable.LinkedHashMap[String, DeltaLog.AddEntry]()
     ((fromExclusive + 1) to latest).foreach { v =>
       val commit = new org.apache.hadoop.fs.Path(
         DeltaLog.logDir(tablePath), f"$v%020d.json")
@@ -77,7 +79,7 @@ object DeltaChanges {
           s"commit $v of $tablePath no longer exists (log cleaned past " +
             "this consumer's offset) — full snapshot refresh required")
       } else {
-        val adds = scala.collection.mutable.Buffer[String]()
+        val adds = scala.collection.mutable.Buffer[DeltaLog.AddEntry]()
         var dataChangingRemove = false
         var dataChangingAdd = false
         DeltaLog.withLogLines(fs, commit)(_.foreach { line =>
@@ -86,7 +88,7 @@ object DeltaChanges {
           if (add != null) {
             val changes = !add.hasNonNull("dataChange") ||
               add.get("dataChange").asBoolean(true)
-            if (changes) { dataChangingAdd = true; adds += add.get("path").asText() }
+            if (changes) { dataChangingAdd = true; adds += DeltaLog.addEntry(add) }
           }
           if (rm != null && (!rm.hasNonNull("dataChange") ||
               rm.get("dataChange").asBoolean(true)))
@@ -110,13 +112,10 @@ object DeltaChanges {
                 "ignoreDeletes=true to skip delete-only commits, or " +
                 "re-read the snapshot")
         }
-        added ++= adds
+        added ++= adds.map(a => a.path -> a)
       }
     }
-    Changes(fromExclusive, latest, added.toSeq.map { p =>
-      new org.apache.hadoop.fs.Path(tablePath,
-        java.net.URLDecoder.decode(p, "UTF-8")).toString
-    })
+    Changes(fromExclusive, latest, added.values.toSeq)
   }
 
   /** ROW-level change feed for one commit, derived from the
@@ -163,17 +162,15 @@ object DeltaChanges {
     // DELETE re-adds the same path with a bigger deletion vector, and
     // the diff is only right when the removed side applies the OLD
     // vector and the added side the new one.
-    def readFiles(snapAt: DeltaLog.Snapshot, paths: Seq[String]): DataFrame =
-      DeltaLog.scanFiles(spark, snapAt,
-        paths.map(p => new org.apache.hadoop.fs.Path(tablePath,
-          java.net.URLDecoder.decode(p, "UTF-8")).toString))
+    def readFiles(snapAt: DeltaLog.Snapshot, paths: Set[String]): DataFrame =
+      DeltaLog.scanFiles(spark, snapAt, snapAt.files.filter(a => paths(a.path)))
     val prevSnap =
       if (removed.isEmpty) snap
       else DeltaLog.snapshot(spark, tablePath, Some(version - 1))
     val cols = schema.fieldNames.toSeq
-    val weighted = readFiles(prevSnap, removed.toSeq)
+    val weighted = readFiles(prevSnap, removed.toSet)
       .select(cols.map(col) :+ lit(-1L).as("__w"): _*)
-      .unionByName(readFiles(snap, added.toSeq)
+      .unionByName(readFiles(snap, added.toSet)
         .select(cols.map(col) :+ lit(1L).as("__w"): _*))
     weighted.groupBy(cols.map(col): _*).agg(sum("__w").as("__d"))
       .filter(col("__d") =!= 0L)

@@ -77,24 +77,20 @@ object DeltaConstraints {
     * metadata — supplied values must equal the expression, null-safely,
     * after casting the expression to the column's declared type);
     * deletes the staged files and throws on any violation. All checks
-    * fold into ONE aggregation pass. No-op without checks. */
-  private[sources] def enforceStaged(spark: SparkSession, tablePath: String,
-      adds: Seq[DeltaLog.AddEntry], schema: org.apache.spark.sql.types.StructType,
-      configuration: Map[String, String]): Unit = {
+    * fold into ONE aggregation pass. No-op without checks. `table` is
+    * the table as the adds will join it (schema, partition columns,
+    * properties); the adds are read like any table file, mapped ones
+    * through their physical names. */
+  private[sources] def enforceStaged(spark: SparkSession, table: DeltaLog.Snapshot,
+      adds: Seq[DeltaLog.AddEntry]): Unit = {
+    val (tablePath, schema) = (table.tablePath, table.schema)
     val genChecks = DeltaGenerated.generationExprs(schema).map { case (c, e) =>
       val dt = schema.fields.find(_.name == c).get.dataType
       s"generation of $c" -> s"`$c` <=> CAST(($e) AS ${dt.sql})"
     }
-    val cs = (checks(configuration) ++ genChecks).toSeq.sortBy(_._1)
+    val cs = (checks(table.configuration) ++ genChecks).toSeq.sortBy(_._1)
     if (cs.isEmpty || adds.isEmpty) return
-    val paths = adds.map(a => new Path(tablePath,
-      java.net.URLDecoder.decode(a.path, "UTF-8")).toString)
-    // Staged files of a mapped table hold PHYSICAL names — read through
-    // them and project back, or every logical-named CHECK would
-    // validate a column of nulls.
-    val staged = DeltaLog.fromPhysical(
-      spark.read.schema(DeltaLog.physicalSchema(schema))
-        .option("basePath", tablePath).parquet(paths: _*), schema)
+    val staged = DeltaLog.scanFiles(spark, table, adds)
     val aggs = cs.map { case (_, e) =>
       sum(when(coalesce(expr(e), lit(true)) === false, 1L).otherwise(0L))
     }
@@ -104,7 +100,7 @@ object DeltaConstraints {
       if (violations > 0) {
         val fs = new Path(tablePath)
           .getFileSystem(spark.sessionState.newHadoopConf())
-        paths.foreach(p => fs.delete(new Path(p), false))
+        adds.foreach(a => fs.delete(new Path(table.pathOf(a)), false))
         throw new IllegalStateException(
           s"CHECK constraint $name ($e) violated by $violations row(s); " +
             s"write to $tablePath aborted")

@@ -106,21 +106,20 @@ object DeltaDml {
 
     val hits =
       if (snap.files.isEmpty) Map.empty[String, Long]
-      else rowsPerFile(DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+      else rowsPerFile(DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
         .filter(condition))
     if (hits.isEmpty)
       return DmlResult(snap.version, 0, 0L)
     val hitUris = hits.keys.toIndexedSeq.sorted
-    val live = DeltaLog.liveFiles(spark, snap)
-    val hitRel = hitUris.map(live.entry(_).path)
+    val hitEntries = hitUris.map(DeltaLog.liveFiles(spark, snap).entry)
+    val hitRel = hitEntries.map(_.path)
     val affected = hits.values.sum
 
-    val hitDf = DeltaLog.scanFiles(spark, snap, hitUris)
+    val hitDf = DeltaLog.scanFiles(spark, snap, hitEntries)
     val rewritten = transform(hitDf)
     val adds = DeltaWrite.writeDataFiles(rewritten, tablePath,
       snap.partitionColumns, Some(snap.schema))
-    DeltaConstraints.enforceStaged(spark, tablePath, adds, snap.schema,
-      snap.configuration)
+    DeltaConstraints.enforceStaged(spark, snap, adds)
     val cdcs =
       if (DeltaCdf.enabled(snap.configuration))
         DeltaCdf.writeCdcFiles(cdcOf(hitDf), tablePath, Some(snap.schema))
@@ -225,7 +224,7 @@ object DeltaDml {
     val hits: Map[String, (Long, Long, Long)] =
       if ((matchedUpdate.isEmpty && matchedDelete.isEmpty) || snap.files.isEmpty)
         Map.empty
-      else DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths).alias("t")
+      else DeltaLog.scanFilesWithMeta(spark, snap, snap.files).alias("t")
         .join(marked.alias("s"), condition)
         .groupBy(col("t.__file").as("f"), col("t.__pos"))
         .agg(count(lit(1)).as("m"),
@@ -255,14 +254,15 @@ object DeltaDml {
     val updated = hits.values.map(_._3).sum
     val hitUris = hits.keys.toIndexedSeq.sorted
     val live = DeltaLog.liveFiles(spark, snap)
-    val hitRel = hitUris.map(live.entry(_).path)
+    val hitEntries = hitUris.map(live.entry)
+    val hitRel = hitEntries.map(_.path)
 
     // Source rows matching no target row (whole table, not just hit
     // files), read from the SAME version the removes are decided against.
     val inserts =
       if (!insert) None
       else Some(source.alias("s")
-        .join(DeltaLog.scanFiles(spark, snap, snap.filePaths).alias("t"),
+        .join(DeltaLog.scanFiles(spark, snap, snap.files).alias("t"),
           condition, "left_anti")
         .select(snap.schema.fieldNames.map(col).toIndexedSeq: _*))
 
@@ -275,7 +275,7 @@ object DeltaDml {
     // deletion-vector tables it becomes the vectorized position.
     val joined =
       if (hitUris.isEmpty) None
-      else Some(DeltaLog.scanFilesWithMeta(spark, snap, hitUris).alias("t")
+      else Some(DeltaLog.scanFilesWithMeta(spark, snap, hitEntries).alias("t")
         .join(marked.alias("s"), condition, "left"))
     val applied = snap.schema.fieldNames.toIndexedSeq.map { f =>
       matchedUpdate.toMap.get(f) match {
@@ -308,8 +308,7 @@ object DeltaDml {
     val adds = rewriteAdds ++ insAdds
     if (adds.isEmpty && hitRel.isEmpty)
       return MergeResult(snap.version, 0, 0L, 0L, 0L)
-    DeltaConstraints.enforceStaged(spark, tablePath, adds, snap.schema,
-      snap.configuration)
+    DeltaConstraints.enforceStaged(spark, snap, adds)
 
     val cdcs =
       if (!cdf) Nil

@@ -165,7 +165,7 @@ object DeltaDv {
     DeltaLog.checkWritable(snap)
     if (snap.files.isEmpty) return DmlResult(snap.version, 0, 0L)
 
-    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
     // Already-vectored rows are filtered by the scan, so `matched` is
     // exactly the NEWLY deleted rows.
     val matched = withMeta.filter(condition)
@@ -201,7 +201,7 @@ object DeltaDv {
     DeltaLog.checkWritable(snap)
     if (snap.files.isEmpty) return DmlResult(snap.version, 0, 0L)
 
-    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
+    val withMeta = DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
     val matched = withMeta.filter(condition)
     vectorize(spark, snap, tablePath, matched) match {
       case None => DmlResult(snap.version, 0, 0L)
@@ -224,8 +224,7 @@ object DeltaDv {
           }
         val adds = DeltaWrite.writeDataFiles(updated, tablePath,
           snap.partitionColumns, Some(snap.schema))
-        DeltaConstraints.enforceStaged(spark, tablePath, adds, snap.schema,
-          snap.configuration)
+        DeltaConstraints.enforceStaged(spark, snap, adds)
         val cdcs =
           if (!DeltaCdf.enabled(snap.configuration)) Nil
           else DeltaCdf.writeCdcFiles(

@@ -65,7 +65,8 @@ object DeltaGenerated {
     })
     val adds = DeltaWrite.writeDataFiles(filled, tablePath, partitionBy)
     // user-supplied generated values are validated like every later write
-    DeltaConstraints.enforceStaged(spark, tablePath, adds, stamped, Map.empty)
+    DeltaConstraints.enforceStaged(spark,
+      DeltaLog.Snapshot(-1L, stamped, partitionBy, adds, tablePath), adds)
     val actions = DeltaWrite.protocolAction(1, 4) +:
       DeltaWrite.metaDataAction(stamped, partitionBy) +:
       adds.map(DeltaWrite.addAction)

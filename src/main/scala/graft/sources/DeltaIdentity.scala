@@ -80,8 +80,7 @@ object DeltaIdentity {
       snap.schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
     val adds = DeltaWrite.writeDataFiles(ordered, tablePath,
       snap.partitionColumns, Some(snap.schema))
-    DeltaConstraints.enforceStaged(spark, tablePath, adds, snap.schema,
-      snap.configuration)
+    DeltaConstraints.enforceStaged(spark, snap, adds)
     val newSchema = withHwm(snap.schema, info.column, info.start, info.step, hwm)
     val actions = DeltaWrite.metaDataAction(newSchema, snap.partitionColumns,
       snap.configuration, snap.metaDataId) +: adds.map(DeltaWrite.addAction)

@@ -4,9 +4,14 @@ import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.{DataType, StructField, StructType}
+import org.apache.spark.sql.catalyst.plans.logical.Filter
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Minimal Delta Lake transaction-log reader, from the PUBLIC Delta
   * protocol only (delta.io PROTOCOL.md): a table directory's
@@ -21,16 +26,19 @@ import org.apache.spark.sql.types.{DataType, StructField, StructType}
   * through DuckDB's `delta_scan`
   * (delta-unity-duckdb.js:330,425,496) — re-expressed directly on
   * Spark: replay the log (driver-side METADATA work, bounded by log
-  * size, exactly how any Delta client bootstraps), then hand the
-  * surviving parquet file list to the distributed scan. Filters and
-  * column pruning push into that scan as with any parquet read.
+  * size, exactly how any Delta client bootstraps), then scan the
+  * surviving entries through ONE file index over the snapshot
+  * ([[DeltaFileIndex]], see [[scanFilesWithMeta]]): it skips files in
+  * the driver, and filters and column pruning push into the parquet
+  * scan as with any parquet read.
   *
   * Scope (checked, not assumed): reader versions 1-3 — version 2's
-  * column mapping in `name` mode, version 3's deletion vectors in the
-  * roaring portable format ([[RoaringDv]], [[DvDescriptor]]); anything else is
-  * rejected rather than misread. Partitioned tables are supported via
-  * hive-style file layout (`col=val/part-….parquet`), which is what
-  * [[DeltaWrite]] and Spark's own `partitionBy` produce.
+  * column mapping in `name` and `id` mode, version 3's deletion vectors
+  * in the roaring portable format ([[RoaringDv]], [[DvDescriptor]]);
+  * anything else is rejected rather than misread. A partitioned table's
+  * partition values come from each entry's `add.partitionValues`, so
+  * any file layout reads (this engine's writer lays files out hive-style,
+  * `col=val/part-….parquet`, as Spark's `partitionBy` does).
   *
   * Snapshots are incremental, as in Delta's own client: a JVM-wide LRU
   * of `SnapshotCacheSize` (64) entries maps each table's qualified log
@@ -73,11 +81,19 @@ object DeltaLog {
     * `add.stats` JSON when the writer recorded one (see DataSkipping);
     * `dv` is the file's deletion vector, if any; `baseRowId` /
     * `defaultRowCommitVersion` are the row-tracking fields (fresh row id
-    * of row i in the file = baseRowId + i). */
+    * of row i in the file = baseRowId + i); `partitionValues` is
+    * `add.partitionValues` as logged (physical column name → serialized
+    * value, null for a null partition) — the only source of a file's
+    * partition columns, whatever its directory layout. */
   final case class AddEntry(path: String, size: Long,
       stats: Option[String] = None, dv: Option[DvDescriptor] = None,
       baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None)
+      defaultRowCommitVersion: Option[Long] = None,
+      partitionValues: Map[String, String] = Map.empty) {
+    /** `stats` parsed once: entries live in cached snapshots, and every
+      * scan's skipping reads them. */
+    @transient private[sources] lazy val parsedStats = DataSkipping.parse(stats)
+  }
 
   final case class Snapshot(
       version: Long,
@@ -106,11 +122,11 @@ object DeltaLog {
         * a replayed `removed: true` tombstone deletes its domain. The
         * row-tracking high-water mark lives in `delta.rowTracking`. */
       domainMetadata: Map[String, String] = Map.empty) {
-    /** Absolute (decoded) URIs of the live files. */
-    def filePaths: Seq[String] = files.map { a =>
-      val decoded = java.net.URLDecoder.decode(a.path, "UTF-8")
-      new Path(tablePath, decoded).toString
-    }
+    /** Absolute (decoded) path of a file of this table. */
+    def pathOf(a: AddEntry): String =
+      new Path(tablePath, java.net.URLDecoder.decode(a.path, "UTF-8")).toString
+    /** Absolute (decoded) paths of the live files. */
+    def filePaths: Seq[String] = files.map(pathOf)
     /** Column-mapping mode ("none" unless the table opted in). */
     def columnMappingMode: String =
       configuration.getOrElse("delta.columnMapping.mode", "none")
@@ -123,136 +139,110 @@ object DeltaLog {
       minReader: Int = 1, minWriter: Int = 2,
       readerFeatures: Seq[String] = Nil, writerFeatures: Seq[String] = Nil)
 
-  /** A file's table root: parent directory with trailing hive
-    * `col=value` partition segments stripped. For the table's own files
-    * this IS the table path; for a shallow clone's entries it is the
-    * SOURCE table's root — grouping by it gives each origin its own
-    * `basePath`, so hive partition columns resolve per origin instead of
-    * failing Spark's "file not under basePath" check. */
-  private def fileTableRoot(p: String): String = {
-    val segs = p.split("/").dropRight(1)
-    segs.reverse.dropWhile(_.contains("=")).reverse.mkString("/")
-  }
+  /** Scan `files` (entries of `snap`) as the table's logical columns,
+    * deletion vectors applied: [[scanFilesWithMeta]] without its
+    * provenance columns. */
+  private[graft] def scanFiles(spark: SparkSession, snap: Snapshot,
+      files: Seq[AddEntry]): DataFrame =
+    scanFilesWithMeta(spark, snap, files).select(
+      snap.schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*)
 
-  /** Scan explicit data files of a snapshot, column-mapping aware: under
-    * `name` mode the parquet holds PHYSICAL column names (from each
-    * field's `delta.columnMapping.physicalName` metadata) and the result
-    * is projected back to logical names; other mapped modes are rejected
-    * rather than silently read as all-NULL columns. Every path that
-    * reads a mapped table's files (read / readWhere / the change feeds /
-    * DML hit reads) must go through here. Files may live OUTSIDE the
-    * table directory (shallow clones) — they are read in per-origin
-    * groups, each with its own basePath. */
-  /** [[scanFiles]] for callers outside this package (the streaming
-    * source): explicit files of `snap` read DV- and mapping-aware. */
-  private[graft] def readFiles(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame = scanFiles(spark, snap, paths)
-
-  private[sources] def scanFiles(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame =
-    if (paths.isEmpty)
-      spark.createDataFrame(
-        java.util.Collections.emptyList[Row](), snap.schema)
-    else {
-      val ordered = snap.schema.fieldNames.toIndexedSeq
-        .map(n => org.apache.spark.sql.functions.col(s"`$n`"))
-      scanFilesWithMeta(spark, snap, paths).select(ordered: _*)
-    }
-
-  /** [[scanFiles]] plus the physical provenance columns `__file`
-    * (qualified file URI) and `__pos` (row index within the file) —
-    * what DML hit detection and deletion-vector writes key on. */
+  /** The ONE way any table file is scanned (read, readWhere, DML, MERGE,
+    * deletion vectors, change feeds, streaming, row tracking,
+    * compaction): a single relation over [[fileRelation]] projected to
+    * the snapshot's logical columns in schema order, plus the physical
+    * provenance columns `__file` (qualified file URI) and `__pos` (row
+    * index within the file) that DML hit detection and deletion-vector
+    * writes key on. Column mapping: under `name` mode the parquet holds
+    * PHYSICAL column names (each field's
+    * `delta.columnMapping.physicalName`), under `id` mode columns match
+    * by parquet field id; both project back to logical names. Files
+    * carrying a deletion vector are filtered against it inside the task
+    * that reads them ([[DvFilter]]) — positions never transit the
+    * driver, and no join, shuffle or broadcast job is added; rows of
+    * other files pass the guard without touching the filter. */
   private[sources] def scanFilesWithMeta(spark: SparkSession, snap: Snapshot,
-      paths: Seq[String]): DataFrame = {
-    val mode = snap.columnMappingMode
-    if (mode != "none" && mode != "name" && mode != "id")
-      throw new UnsupportedOperationException(
-        s"column mapping mode '$mode' not supported (none/name/id)")
-    require(paths.nonEmpty, "scanFilesWithMeta needs at least one file")
-    import org.apache.spark.sql.functions.col
-    // Hive partition discovery may reorder partition columns to the end
-    // of a group's output — every group is pinned to the snapshot's
-    // column order (plus the provenance columns, taken from the scan's
-    // _metadata before any projection) so unions and positional
-    // consumers see ONE deterministic schema regardless of file layout.
-    val metaCols = Seq(col("_metadata.file_path").as("__file"),
-      col("_metadata.row_index").as("__pos"))
-    def readGroup(base: String, ps: Seq[String]): DataFrame =
-      if (mode == "name" || mode == "id") {
-        // name mode: parquet columns match by PHYSICAL name. id mode
-        // (icebergCompat writers): they match by parquet FIELD ID —
-        // stamp each requested field with `parquet.field.id` from its
-        // `delta.columnMapping.id` and let Spark's field-id resolution
-        // do the matching (the session flag only activates for fields
-        // that carry the metadata, so name-matched reads are unaffected).
-        val physical0 = physicalSchema(snap.schema)
-        val physical =
-          if (mode == "id")
-            StructType(physical0.fields.zip(snap.schema.fields).map {
-              case (p, l) =>
-                if (l.metadata.contains("delta.columnMapping.id"))
-                  p.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
-                    .withMetadata(p.metadata)
-                    .putLong("parquet.field.id",
-                      l.metadata.getLong("delta.columnMapping.id"))
-                    .build())
-                else throw new IllegalStateException(
-                  s"id-mode table ${snap.tablePath}: field ${l.name} has no " +
-                    "delta.columnMapping.id — cannot resolve columns")
-            })
-          else physical0
-        // session-level by necessity (field-id resolution is a SQL conf,
-        // not a per-read option, and the read materializes lazily) —
-        // deliberate and safe: the flag only changes behavior for reads
-        // whose REQUESTED schema carries parquet.field.id metadata,
-        // which this engine attaches exactly for id-mode tables
-        if (mode == "id")
-          spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        val raw = spark.read.schema(physical)
-          .option("basePath", base).parquet(ps: _*)
-        raw.select(physical.fields.zip(snap.schema.fields).map {
-          case (p, l) => col(s"`${p.name}`").as(l.name)
-        }.toIndexedSeq ++ metaCols: _*)
-      } else {
-        spark.read.schema(snap.schema)
-          .option("basePath", base).parquet(ps: _*)
-          .select(snap.schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")) ++
-            metaCols: _*)
-      }
-    def readAll(ps: Seq[String]): DataFrame =
-      ps.groupBy(fileTableRoot).toSeq.sortBy(_._1)
-        .map { case (root, group) => readGroup(root, group) }
-        .reduce(_ unionByName _)
-
-    // Merge-on-read: files carrying a deletion vector are scanned with
-    // their physical row index and filtered against their vector inside
-    // the task that reads them ([[DvFilter]]) — positions never transit
-    // the driver, and no join, shuffle or broadcast job is added.
-    // Callers hand over either plain absolute paths (snapshot file
-    // lists) or qualified URIs (provenance-column round trips) —
-    // canonicalize both sides before matching.
-    val live = liveFiles(spark, snap)
-    val dvByCanon: Map[String, DvDescriptor] =
-      live.byUri.flatMap { case (uri, a) => a.dv.map(uri -> _) }
-    val (dvPaths, plainPaths) =
-      paths.partition(p => dvByCanon.contains(live.qualify(p)))
-    if (dvPaths.isEmpty) readAll(plainPaths)
+      files: Seq[AddEntry]): DataFrame = {
+    val relation = fileRelation(spark, snap, files)
+    val logical = relation.dataSchema.fields.zip(snap.schema.fields).map {
+      case (p, l) if p.name == l.name => col(s"`${l.name}`")
+      case (p, l) => col(s"`${p.name}`").as(l.name)
+    }.toIndexedSeq
+    val withMeta = spark.baseRelationToDataFrame(relation).select(logical ++ Seq(
+      col("_metadata.file_path").as("__file"),
+      col("_metadata.row_index").as("__pos")): _*)
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val vectored = files.flatMap(a => a.dv.map(uriOf(conf, snap, a) -> _)).toMap
+    if (vectored.isEmpty) withMeta
     else {
       // File reads use the SESSION's Hadoop conf (broadcast —
       // spark.hadoop.* credentials/endpoints must reach executor-side
       // DV opens on real object stores).
       val bconf = spark.sparkContext.broadcast(
-        new org.apache.spark.util.SerializableConfiguration(live.conf))
-      val keep = new DvFilter(snap.tablePath, dvPaths.map { p =>
-        val uri = live.qualify(p)
-        uri -> dvByCanon(uri)
-      }.toMap, bconf)
+        new org.apache.spark.util.SerializableConfiguration(conf))
+      val keep = new DvFilter(snap.tablePath, vectored, bconf)
       val notDeleted = org.apache.spark.sql.functions.udf(
         (file: String, pos: Long) => keep.live(file, pos))
-      val filtered = readAll(dvPaths).filter(notDeleted(col("__file"), col("__pos")))
-      if (plainPaths.isEmpty) filtered
-      else readAll(plainPaths).unionByName(filtered)
+      withMeta.filter(!col("__file").isin(vectored.keys.toSeq: _*) ||
+        notDeleted(col("__file"), col("__pos")))
     }
+  }
+
+  /** The parquet relation over `files` of `snap`: a [[DeltaFileIndex]]
+    * of their entries, in the table's PHYSICAL schema (identity when
+    * unmapped; under id mode each field carries its `parquet.field.id`).
+    * Its partition fields take their place in the schema's own order. */
+  private[graft] def fileRelation(spark: SparkSession, snap: Snapshot,
+      files: Seq[AddEntry]): HadoopFsRelation = {
+    val mode = snap.columnMappingMode
+    if (mode != "none" && mode != "name" && mode != "id")
+      throw new UnsupportedOperationException(
+        s"column mapping mode '$mode' not supported (none/name/id)")
+    val physical =
+      if (mode == "none") snap.schema
+      else StructType(physicalSchema(snap.schema).fields.zip(snap.schema.fields).map {
+        case (p, l) if mode == "id" =>
+          if (!l.metadata.contains("delta.columnMapping.id"))
+            throw new IllegalStateException(
+              s"id-mode table ${snap.tablePath}: field ${l.name} has no " +
+                "delta.columnMapping.id — cannot resolve columns")
+          p.copy(metadata = new org.apache.spark.sql.types.MetadataBuilder()
+            .withMetadata(p.metadata)
+            .putLong("parquet.field.id", l.metadata.getLong("delta.columnMapping.id"))
+            .build())
+        case (p, _) => p
+      })
+    // session-level by necessity (field-id resolution is a SQL conf,
+    // not a per-read option, and the read materializes lazily) —
+    // deliberate and safe: the flag only changes behavior for reads
+    // whose REQUESTED schema carries parquet.field.id metadata, which
+    // this engine attaches exactly for id-mode tables
+    if (mode == "id") spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
+    val partitions = StructType(snap.partitionColumns.map(c =>
+      physical(snap.schema.fieldIndex(c))))
+    lazy val conf = spark.sessionState.newHadoopConf()
+    val index = new DeltaFileIndex(snap.tablePath,
+      files.map(a => a -> fileStatus(conf, snap, a)), partitions,
+      spark.sessionState.conf.sessionLocalTimeZone)
+    HadoopFsRelation(index, partitions, physical, None, new ParquetFileFormat,
+      Map.empty)(spark)
+  }
+
+  /** The qualified URI a scan reads `a` by — what its `__file` reports. */
+  private def uriOf(conf: Configuration, snap: Snapshot, a: AddEntry): String = {
+    val p = new Path(snap.pathOf(a))
+    p.getFileSystem(conf).makeQualified(p).toString
+  }
+
+  /** `a`'s status as the scan reads it, length from `add.size`. A size
+    * below parquet's 12-byte minimum (magic, footer length, magic)
+    * cannot be the file's: hand-written logs record placeholders, so the
+    * length is then read from the file itself. */
+  private def fileStatus(conf: Configuration, snap: Snapshot,
+      a: AddEntry): FileStatus = {
+    val p = new Path(uriOf(conf, snap, a))
+    val len = if (a.size >= 12) a.size else p.getFileSystem(conf).getFileStatus(p).getLen
+    new FileStatus(len, false, 0, 0L, 0L, p)
   }
 
   /** The per-task deletion-vector filter of [[scanFilesWithMeta]]:
@@ -292,18 +282,9 @@ object DeltaLog {
   /** A snapshot's live entries keyed by the qualified URI the scan's
     * `__file` column reports, built with ONE Hadoop conf: qualifying a
     * path needs its FileSystem, and a fresh `newHadoopConf()` per file
-    * is a full conf copy each. `qualify` maps a plain absolute path or a
-    * qualified URI of the table's files to the same key. */
-  private[sources] final class LiveFiles(val conf: org.apache.hadoop.conf.Configuration,
-      snap: Snapshot) {
-    def qualify(p: String): String = {
-      val hp = new Path(p)
-      hp.getFileSystem(conf).makeQualified(hp).toString
-    }
-    val byUri: Map[String, AddEntry] = snap.files.map { a =>
-      qualify(new Path(snap.tablePath,
-        java.net.URLDecoder.decode(a.path, "UTF-8")).toString) -> a
-    }.toMap
+    * is a full conf copy each. */
+  private[sources] final class LiveFiles(val conf: Configuration, snap: Snapshot) {
+    val byUri: Map[String, AddEntry] = snap.files.map(a => uriOf(conf, snap, a) -> a).toMap
     def entry(uri: String): AddEntry = byUri.getOrElse(uri,
       throw new IllegalStateException(s"scanned file not in snapshot: $uri"))
   }
@@ -559,9 +540,61 @@ object DeltaLog {
     snap
   }
 
+  /** Replays that started without a cached snapshot (from a checkpoint
+    * or version 0) — how a test tells a cold bootstrap from a cache hit,
+    * now that neither launches a Spark job. */
+  private[graft] val coldReplays = new java.util.concurrent.atomic.AtomicLong
+
+  /** The checkpoint columns replay consumes — classic and multi-part
+    * checkpoints, V2 manifests and their sidecars; a column or field a
+    * file lacks reads as null. */
+  private lazy val CheckpointColumns: StructType = StructType.fromDDL(
+    "add STRUCT<path: STRING, size: BIGINT, stats: STRING, " +
+      "partitionValues: MAP<STRING, STRING>, deletionVector: STRUCT<" +
+      "storageType: STRING, pathOrInlineDv: STRING, `offset`: BIGINT, " +
+      "sizeInBytes: BIGINT, cardinality: BIGINT>, baseRowId: BIGINT, " +
+      "defaultRowCommitVersion: BIGINT>, " +
+    "metaData STRUCT<id: STRING, schemaString: STRING, " +
+      "partitionColumns: ARRAY<STRING>, configuration: MAP<STRING, STRING>>, " +
+    "protocol STRUCT<minReaderVersion: INT, minWriterVersion: INT, " +
+      "readerFeatures: ARRAY<STRING>, writerFeatures: ARRAY<STRING>>, " +
+    "txn STRUCT<appId: STRING, version: BIGINT>, sidecar STRUCT<path: STRING>, " +
+    "domainMetadata STRUCT<domain: STRING, configuration: STRING, removed: BOOLEAN>")
+
+  /** An `add` action of a commit JSON, compacted log or V2 JSON manifest
+    * as a snapshot entry. */
+  private[sources] def addEntry(add: JsonNode): AddEntry = {
+    def optLong(n: String): Option[Long] =
+      if (add.hasNonNull(n)) Some(add.get(n).asLong()) else None
+    val dv =
+      if (!add.hasNonNull("deletionVector")) None
+      else {
+        val d = add.get("deletionVector")
+        val st = d.get("storageType").asText()
+        checkDvStorage(st)
+        Some(DvDescriptor(
+          dvPathOf(st, d.get("pathOrInlineDv").asText()),
+          d.get("cardinality").asLong(),
+          if (d.hasNonNull("offset")) d.get("offset").asLong() else 1L,
+          if (d.hasNonNull("sizeInBytes")) d.get("sizeInBytes").asLong() else 0L,
+          st, d.get("pathOrInlineDv").asText()))
+      }
+    val pv = add.get("partitionValues")
+    AddEntry(add.get("path").asText(), add.get("size").asLong(),
+      if (add.hasNonNull("stats")) Some(add.get("stats").asText()) else None,
+      dv, optLong("baseRowId"), optLong("defaultRowCommitVersion"),
+      if (pv == null || !pv.isObject) Map.empty
+      else pv.properties().asScala.map { e =>
+        e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())
+      }.toMap)
+  }
+
   /** Replay `target`'s state: on top of `seed` (a cached snapshot whose
     * later commits up to `target` are all listed) when given, else from
-    * the newest checkpoint at or before `target`, else from version 0. */
+    * the newest checkpoint at or before `target`, else from version 0.
+    * Checkpoint parquet and V2 sidecars are read on the driver
+    * ([[DeltaWrite.readParquetOnDriver]]): they are table metadata, and
+    * no replay launches a Spark job. */
   private def replay(spark: SparkSession, fs: FileSystem, tablePath: String,
       target: Long, seed: Option[Snapshot], commits: Map[Long, FileStatus],
       checkpoints: Map[Long, Seq[Path]],
@@ -599,27 +632,8 @@ object DeltaLog {
       val add = node.get("add"); val rm = node.get("remove")
       val md = node.get("metaData"); val proto = node.get("protocol")
       if (add != null) {
-        val p = add.get("path").asText()
-        val stats =
-          if (add.hasNonNull("stats")) Some(add.get("stats").asText())
-          else None
-        val dv =
-          if (add.hasNonNull("deletionVector")) {
-            val d = add.get("deletionVector")
-            val st = d.get("storageType").asText()
-            checkDvStorage(st)
-            Some(DvDescriptor(
-              dvPathOf(st, d.get("pathOrInlineDv").asText()),
-              d.get("cardinality").asLong(),
-              if (d.hasNonNull("offset")) d.get("offset").asLong() else 1L,
-              if (d.hasNonNull("sizeInBytes")) d.get("sizeInBytes").asLong()
-              else 0L,
-              st, d.get("pathOrInlineDv").asText()))
-          } else None
-        def optLong(n: String): Option[Long] =
-          if (add.hasNonNull(n)) Some(add.get(n).asLong()) else None
-        live(p) = AddEntry(p, add.get("size").asLong(), stats, dv,
-          optLong("baseRowId"), optLong("defaultRowCommitVersion"))
+        val a = addEntry(add)
+        live(a.path) = a
       }
       if (rm != null && !bootstrapCtx) live.remove(rm.get("path").asText())
       if (md != null) {
@@ -661,35 +675,28 @@ object DeltaLog {
     // (removes in it are vacuum tombstones, not pending deletes).
     val ckptVersion =
       if (seed.isDefined) None else checkpoints.keys.filter(_ <= target).maxOption
+    if (seed.isEmpty) coldReplays.incrementAndGet()
     ckptVersion.foreach { v =>
+      def optLong(r: Row, n: String): Option[Long] =
+        if (r.isNullAt(r.fieldIndex(n))) None else Some(r.getAs[Long](n))
       def processAdd(a: Row): Unit = {
         val path = a.getAs[String]("path")
-        val stats =
-          if (a.schema.fieldNames.contains("stats"))
-            Option(a.getAs[String]("stats"))
-          else None
-        val dv =
-          if (a.schema.fieldNames.contains("deletionVector") &&
-              a.getAs[AnyRef]("deletionVector") != null) {
-            val d = a.getAs[Row]("deletionVector")
-            val st = d.getAs[String]("storageType")
-            checkDvStorage(st)
-            def lf(n: String, dflt: Long): Long =
-              if (d.schema.fieldNames.contains(n) && !d.isNullAt(d.fieldIndex(n)))
-                d.getAs[Long](n)
-              else dflt
-            Some(DvDescriptor(
-              dvPathOf(st, d.getAs[String]("pathOrInlineDv")),
-              d.getAs[Long]("cardinality"), lf("offset", 1L), lf("sizeInBytes", 0L),
-              st, d.getAs[String]("pathOrInlineDv")))
-          } else None
-        def optLong(n: String): Option[Long] =
-          if (a.schema.fieldNames.contains(n) && !a.isNullAt(a.fieldIndex(n)))
-            Some(a.getAs[Long](n))
-          else None
-        live(path) = AddEntry(path, a.getAs[Long]("size"), stats, dv,
-          optLong("baseRowId"), optLong("defaultRowCommitVersion"))
+        val dv = Option(a.getAs[Row]("deletionVector")).map { d =>
+          val st = d.getAs[String]("storageType")
+          checkDvStorage(st)
+          DvDescriptor(dvPathOf(st, d.getAs[String]("pathOrInlineDv")),
+            d.getAs[Long]("cardinality"), optLong(d, "offset").getOrElse(1L),
+            optLong(d, "sizeInBytes").getOrElse(0L),
+            st, d.getAs[String]("pathOrInlineDv"))
+        }
+        live(path) = AddEntry(path, a.getAs[Long]("size"),
+          Option(a.getAs[String]("stats")), dv,
+          optLong(a, "baseRowId"), optLong(a, "defaultRowCommitVersion"),
+          Option(a.getAs[scala.collection.Map[String, String]]("partitionValues"))
+            .fold(Map.empty[String, String])(_.toMap))
       }
+      def readOnDriver(ps: Seq[Path], schema: StructType): Seq[Row] =
+        ps.flatMap(DeltaWrite.readParquetOnDriver(spark, _, schema))
       val paths = checkpoints(v)
       val sidecarFiles = mutable.Buffer[String]()
       if (paths.size == 1 && paths.head.getName.endsWith(".json")) {
@@ -699,13 +706,9 @@ object DeltaLog {
         withLogLines(fs, paths.head)(_.foreach(l =>
           processNode(mapper.readTree(l), Some(sidecarFiles))))
       } else {
-      val rows = spark.read.parquet(paths.map(_.toString): _*)
-      val cols = rows.columns.toSet
-      val wanted = Seq("add", "metaData", "protocol", "txn", "sidecar",
-        "domainMetadata").filter(cols)
-      rows.select(wanted.map(org.apache.spark.sql.functions.col): _*)
-        .collect() // checkpoint = table METADATA; size is O(#files), not data
-        .foreach { r =>
+      // checkpoint = table METADATA; size is O(#files), not data
+      val wanted = CheckpointColumns.fieldNames.toSeq
+      readOnDriver(paths, CheckpointColumns).foreach { r =>
           wanted.zipWithIndex.foreach {
             case ("add", i) if !r.isNullAt(i) =>
               processAdd(r.getStruct(i))
@@ -715,19 +718,14 @@ object DeltaLog {
               val m = r.getStruct(i)
               schemaString = m.getAs[String]("schemaString")
               partCols = m.getAs[scala.collection.Seq[String]]("partitionColumns").toSeq
-              if (m.schema.fieldNames.contains("configuration")) {
-                val c = m.getAs[scala.collection.Map[String, String]]("configuration")
-                if (c != null) config = c.toMap
-              }
+              val c = m.getAs[scala.collection.Map[String, String]]("configuration")
+              if (c != null) config = c.toMap
               mdId = Option(m.getAs[String]("id"))
             case ("protocol", i) if !r.isNullAt(i) =>
               val p = r.getStruct(i)
               checkProtocol(p.getAs[Int]("minReaderVersion"))
               def feats(field: String): Seq[String] =
-                if (p.schema.fieldNames.contains(field) &&
-                    !p.isNullAt(p.fieldIndex(field)))
-                  p.getAs[scala.collection.Seq[String]](field).toSeq
-                else Nil
+                Option(p.getAs[scala.collection.Seq[String]](field)).fold(Seq.empty[String])(_.toSeq)
               protocolInfo = TableProtocol(
                 p.getAs[Int]("minReaderVersion"),
                 p.getAs[Int]("minWriterVersion"),
@@ -737,8 +735,7 @@ object DeltaLog {
               txns(t.getAs[String]("appId")) = t.getAs[Long]("version")
             case ("domainMetadata", i) if !r.isNullAt(i) =>
               val dm = r.getStruct(i)
-              val removed = dm.schema.fieldNames.contains("removed") &&
-                !dm.isNullAt(dm.fieldIndex("removed")) &&
+              val removed = !dm.isNullAt(dm.fieldIndex("removed")) &&
                 dm.getAs[Boolean]("removed")
               if (removed) domains.remove(dm.getAs[String]("domain"))
               else domains(dm.getAs[String]("domain")) =
@@ -764,7 +761,8 @@ object DeltaLog {
             s"v2 checkpoint at version $v of $tablePath references a " +
               s"missing sidecar $p — refusing a partial live-file set")
         }
-        spark.read.parquet(paths: _*).select("add").collect().foreach { r =>
+        readOnDriver(paths.map(new Path(_)),
+          StructType(CheckpointColumns.filter(_.name == "add"))).foreach { r =>
           if (!r.isNullAt(0)) processAdd(r.getStruct(0))
         }
       }
@@ -814,17 +812,20 @@ object DeltaLog {
       txns.toMap, config, mdId, protocolInfo, domains.toMap)
   }
 
-  /** Read a Delta table as a DataFrame (optionally time-traveled). The
-    * scan is a plain distributed parquet read over the snapshot's live
-    * files — predicate pushdown / column pruning apply unchanged.
+  /** Read a Delta table as a DataFrame (optionally time-traveled): one
+    * parquet relation over the snapshot's own file index
+    * ([[scanFiles]]). Building it lists and stats nothing and launches
+    * no Spark job; at execution the index skips the files the pushed
+    * filters rule out ([[DataSkipping.mightMatch]]), and predicate
+    * pushdown / column pruning apply as to any parquet scan.
     *
-    * Column mapping (`delta.columnMapping.mode = name`, reader version
-    * 2): parquet files store PHYSICAL column names recorded in each
-    * schema field's `delta.columnMapping.physicalName` metadata; the
-    * scan reads the physical schema and projects back to logical names
-    * (a zero-cost rename in the plan — pruning/pushdown still operate
-    * on the physical scan). `id` mode (parquet field-id matching) is
-    * rejected explicitly rather than misread. */
+    * Column mapping (reader version 2): under `name` mode the parquet
+    * files store PHYSICAL column names (each schema field's
+    * `delta.columnMapping.physicalName`), under `id` mode their columns
+    * match by parquet field id (`delta.columnMapping.id`); either way
+    * the scan reads the physical schema and projects back to logical
+    * names (a zero-cost rename in the plan — pruning/pushdown still
+    * operate on the physical scan). */
   def read(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None,
       timestampAsOf: Option[java.sql.Timestamp] = None): DataFrame = {
@@ -833,11 +834,14 @@ object DeltaLog {
     val asOf = versionAsOf.orElse(
       timestampAsOf.map(versionAt(spark, tablePath, _)))
     val snap = snapshot(spark, tablePath, asOf)
-    scanFiles(spark, snap, snap.filePaths)
+    scanFiles(spark, snap, snap.files)
   }
 
-  /** Read with file-level data skipping: files whose `add.stats` range
-    * provably cannot satisfy `condition` are never opened, and the full
+  /** [[read]] with the file skipping done EAGERLY: `condition` is
+    * resolved against the index relation (analysis only, no job), the
+    * skipping evaluator drops the files whose stats or partition values
+    * provably cannot satisfy it, and the relation is built on the files
+    * it keeps — so the frame's `inputFiles` names only those. The full
     * predicate still filters the surviving rows (pruning is an I/O
     * optimization, not a correctness dependency — files without stats
     * always scan). At 100 TB this is the difference between opening the
@@ -846,49 +850,23 @@ object DeltaLog {
   def readWhere(spark: SparkSession, tablePath: String, condition: Column,
       versionAsOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(spark, tablePath, versionAsOf)
-    // Partition values become point ranges in each file's skipping stats,
-    // so partition predicates prune files exactly like clustered-column
-    // ranges do (files without any skippable info always survive).
-    val statted: Seq[(String, String)] = snap.files.flatMap { a =>
-      DataSkipping.withPartitionValues(a.stats, a.path, snap.schema,
-        snap.partitionColumns).map(a.path -> _)
-    }
-    val kept: Seq[AddEntry] =
-      if (statted.isEmpty) snap.files
-      else {
-        import org.apache.spark.sql.functions.{col => c, from_json}
-        // a LOCAL relation: the optimizer folds the stats filter over it
-        // in the driver, so a read launches no Spark job for it (the
-        // stats rows are bounded log metadata, already on the driver)
-        val statsDf = spark.createDataFrame(
-          java.util.Arrays.asList(
-            statted.map { case (p, s) => org.apache.spark.sql.Row(p, s) }: _*),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("path",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("stats",
-              org.apache.spark.sql.types.StringType))))
-        val withStats = statted.map(_._1).toSet
-        val keepPaths = statsDf
-          .withColumn("s", from_json(c("stats"),
-            DataSkipping.statsSchema(snap.schema)))
-          .where(DataSkipping.canMatch(condition, snap.schema.fieldNames.toSet))
-          .select("path").collect().map(_.getString(0)).toSet
-        snap.files.filter(a => !withStats(a.path) || keepPaths(a.path))
-      }
-    val pruned = snap.copy(files = kept)
-    // scanFiles keeps mapped tables honest here too: stats recorded
-    // under physical names simply fail to parse against the logical
-    // stats schema → safe() keeps the file (conservative, never wrong).
-    scanFiles(spark, pruned, pruned.filePaths).where(condition)
+    val resolved = scanFiles(spark, snap, Nil).where(condition)
+      .queryExecution.analyzed.collectFirst { case f: Filter => f.condition }.toSeq
+    val relation = fileRelation(spark, snap, Nil)
+    val physical = snap.schema.fieldNames.zip(relation.dataSchema.fieldNames).toMap
+    val kept = snap.files.filter(a => DeltaFileIndex.keeps(a, relation.partitionSchema,
+      DeltaFileIndex.partitionRow(a, relation.partitionSchema,
+        spark.sessionState.conf.sessionLocalTimeZone),
+      resolved, n => physical.getOrElse(n, n)))
+    scanFiles(spark, snap, kept).where(condition)
   }
 
-  /** Unmapped and NAME-mapped tables are writable (writers route frames
-    * through [[toPhysical]] so files hold physical names); any other
-    * mapping mode (id) is rejected — minting fresh column ids on write
-    * is out of scope, and a logical-named file in an id-mapped table
-    * would resolve to silent nulls. Every data-writing path calls this
-    * with its already-loaded snapshot. */
+  /** A table path as a DataFrame: a Delta table through its log
+    * ([[read]]), anything else as a plain parquet file or directory. */
+  def readTableOrParquet(spark: SparkSession, path: String): DataFrame =
+    if (isDeltaTable(spark, path)) read(spark, path)
+    else spark.read.parquet(path)
+
   /** Writer features this engine implements. The protocol requires a
     * writer to REFUSE a table whose `writerFeatures` names anything
     * else — e.g. writing a `rowTracking` table without maintaining row
@@ -920,6 +898,12 @@ object DeltaLog {
     // metadata intact (DeltaSourceSpec pins it end-to-end).
     "clusteredTable", "clustering")
 
+  /** Unmapped and NAME-mapped tables are writable (writers route frames
+    * through [[toPhysical]] so files hold physical names); any other
+    * mapping mode (id) is rejected — minting fresh column ids on write
+    * is out of scope, and a logical-named file in an id-mapped table
+    * would resolve to silent nulls. Every data-writing path calls this
+    * with its already-loaded snapshot. */
   private[sources] def checkWritable(snap: Snapshot): Unit = {
     val mode = snap.configuration.getOrElse("delta.columnMapping.mode", "none")
     if (mode != "none" && mode != "name") throw new UnsupportedOperationException(
@@ -972,7 +956,6 @@ object DeltaLog {
   private[sources] def fromPhysical(df: org.apache.spark.sql.DataFrame,
       schema: StructType,
       extra: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
     df.select(physicalSchema(schema).fields.zip(schema.fields).map {
       case (p, l) => col(s"`${p.name}`").as(l.name)
     }.toIndexedSeq ++ extra.map(c => col(s"`$c`")): _*)
@@ -989,7 +972,6 @@ object DeltaLog {
     * carries no mapping. */
   private[sources] def toPhysical(df: org.apache.spark.sql.DataFrame,
       schema: StructType): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.functions.col
     val m = schema.fields.zip(physicalSchema(schema).fields)
       .map { case (l, p) => l.name -> (p.name, l.metadata) }.toMap
     if (m.forall { case (l, (p, md)) =>
@@ -1007,22 +989,22 @@ object DeltaLog {
   }
 
   /** Reader versions 1-3 are in scope (2 adds column mapping, which
-    * read() handles in name mode; 3 adds deletion vectors, which
+    * scanFiles reads in name and id mode; 3 adds deletion vectors, which
     * scanFiles applies); higher versions are rejected rather than
     * misread. */
   private def checkProtocol(minReader: Int): Unit =
     if (minReader > 3) throw new UnsupportedOperationException(
       s"Delta reader protocol $minReader not supported (this reader implements versions 1-3)")
 
-  /** Reader features this engine actually implements. `timestampNtz`
-    * costs nothing extra (Spark's schema JSON and parquet reader handle
-    * TIMESTAMP_NTZ natively); `vacuumProtocolCheck` requires no read-path
-    * behavior by definition — it exists to gate vacuum implementations. */
   /** Whether `delta.feature.<name>=supported` enablement must declare
     * the feature on the READER side too (reader-writer features). */
   private[sources] def isReaderFeature(name: String): Boolean =
     SupportedReaderFeatures.contains(name)
 
+  /** Reader features this engine actually implements. `timestampNtz`
+    * costs nothing extra (Spark's schema JSON and parquet reader handle
+    * TIMESTAMP_NTZ natively); `vacuumProtocolCheck` requires no read-path
+    * behavior by definition — it exists to gate vacuum implementations. */
   private val SupportedReaderFeatures: Set[String] = Set(
     "columnMapping", "deletionVectors", "v2Checkpoint",
     "timestampNtz", "vacuumProtocolCheck",

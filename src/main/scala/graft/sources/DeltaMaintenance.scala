@@ -124,7 +124,8 @@ object DeltaMaintenance {
     val adds = Await.result(
       Future.sequence(found.toSeq.sortBy(_._1).map { case (rel, len) =>
         Future(DeltaLog.AddEntry(rel, len,
-          DataSkipping.statsJson(conf, new Path(table, rel))))
+          DataSkipping.statsJson(conf, new Path(table, rel)),
+          partitionValues = DeltaWrite.partitionValuesMap(rel)))
       }), 10.minutes)
     val actions = DeltaWrite.protocolAction() +:
       DeltaWrite.metaDataAction(schema, partCols) +:
@@ -209,7 +210,8 @@ object DeltaMaintenance {
     * entries reference the SOURCE snapshot's data files by absolute
     * path — zero data copy, so cloning a 100 TB table is one
     * metadata-scale commit (the protocol permits absolute `add` paths;
-    * [[DeltaLog.scanFiles]] reads per-origin file groups). The clone is
+    * the scan's file index reads each entry by its own absolute path and
+    * its logged partition values). The clone is
     * fully independent going forward: appends/DML/OPTIMIZE write new
     * files under the clone and only retire the clone's REFERENCES to
     * source files, and VACUUM's deletion walk is rooted at the clone's
@@ -344,9 +346,6 @@ object DeltaMaintenance {
     DeltaLog.checkWritable(snap) // compaction rewrites data files too
     val small = snap.files.filter(_.size < smallFileBytes)
     if (small.size < 2) return (0, snap.version)
-    val uris = small.map { a =>
-      new Path(tablePath, java.net.URLDecoder.decode(a.path, "UTF-8")).toString
-    }
     // One partition per ~targetSize of input: the rewrite is distributed,
     // only file metadata moves through the driver. Unpartitioned tables
     // COALESCE the scan (one job, no shuffle: bin-packing needs no row
@@ -354,7 +353,7 @@ object DeltaMaintenance {
     // columns so each output file holds one partition's rows.
     val totalBytes = small.map(_.size).sum
     val parts = math.max(1, (totalBytes / smallFileBytes).toInt)
-    val df = DeltaLog.scanFiles(spark, snap, uris)
+    val df = DeltaLog.scanFiles(spark, snap, small)
     val compacted =
       if (snap.partitionColumns.nonEmpty) df.repartition(parts,
         snap.partitionColumns.map(org.apache.spark.sql.functions.col): _*)

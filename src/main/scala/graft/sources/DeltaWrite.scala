@@ -127,7 +127,7 @@ object DeltaWrite {
     // schema — the generation metadata lives there, not on the
     // incoming frame.
     prior.foreach(p => DeltaConstraints.enforceStaged(
-      spark, tablePath, adds, p.schema, p.configuration))
+      spark, p.copy(partitionColumns = effPartitionBy), adds))
     val removes: Seq[String] =
       if (mode == SaveMode.Overwrite) prior.toSeq.flatMap(_.files.map(_.path))
       else Nil
@@ -316,9 +316,10 @@ object DeltaWrite {
   }
 
   /** Read one parquet file's `schema` columns on the driver through
-    * Spark's parquet reader (no Spark job) — for checkpoint metadata a
-    * writer consults, which is O(files), never table data. */
-  private def readParquetOnDriver(spark: SparkSession, file: Path,
+    * Spark's parquet reader (no Spark job) — for checkpoint metadata
+    * (log replay, a writer's prior manifest), which is O(files), never
+    * table data. Columns the file lacks read as null. */
+  private[sources] def readParquetOnDriver(spark: SparkSession, file: Path,
       schema: org.apache.spark.sql.types.StructType)
       : Seq[org.apache.spark.sql.Row] = {
     import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
@@ -341,11 +342,11 @@ object DeltaWrite {
     *
     * `parts > 1` writes the protocol's multi-part form
     * (`<v>.checkpoint.<i>.<n>.parquet`, 1-based): a 100 TB table's
-    * checkpoint is millions of `add` rows — one parquet file becomes the
-    * bootstrap bottleneck, while N parts let the reader's
-    * `spark.read.parquet(parts: _*)` parallelize the replay scan. Add
-    * entries are distributed round-robin; protocol + metaData ride in
-    * part 1 (replay order does not matter within a checkpoint).
+    * checkpoint is millions of `add` rows, and bounded parts keep each
+    * file a writer stages and a reader opens bounded too (replay reads
+    * the parts one after another on the driver). Add entries are
+    * distributed round-robin; protocol + metaData ride in part 1 (replay
+    * order does not matter within a checkpoint).
     *
     * Every row is already on the driver (the snapshot), so each part is
     * written there by [[writeParquetOnDriver]] — Spark's parquet writer
@@ -432,12 +433,10 @@ object DeltaWrite {
         snap.domainMetadata.toSeq.sortBy(_._1).map { case (dom, cfg) =>
           Row(null, null, null, null, Row(dom, cfg, false))
         }
-    // partitionValues recorded for real (protocol requirement): external
-    // readers bootstrap partition columns from the add entry, not from
-    // the hive path — an empty map would misread partitioned tables.
+    // partitionValues carried as logged (protocol requirement): readers
+    // bootstrap partition columns from the add entry, not from the path.
     val addRows = snap.files.map(a =>
-      Row(Row(a.path, a.size, false, 0L, a.stats.orNull,
-        partitionValuesMap(a.path),
+      Row(Row(a.path, a.size, false, 0L, a.stats.orNull, a.partitionValues,
         a.dv.map(d => Row(d.storageType, d.rawOrPath, if (d.inline) null else d.offset, d.sizeInBytes, d.cardinality)).orNull,
         a.baseRowId.map(Long.box).orNull,
         a.defaultRowCommitVersion.map(Long.box).orNull),
@@ -664,8 +663,7 @@ object DeltaWrite {
         case Some((name, sz)) => (name, sz)
         case None =>
           val rows = bucket.map(a =>
-            Row(Row(a.path, a.size, false, 0L, a.stats.orNull,
-              partitionValuesMap(a.path),
+            Row(Row(a.path, a.size, false, 0L, a.stats.orNull, a.partitionValues,
               a.dv.map(d => Row(d.storageType, d.rawOrPath, if (d.inline) null else d.offset, d.sizeInBytes, d.cardinality)).orNull,
               a.baseRowId.map(Long.box).orNull,
               a.defaultRowCommitVersion.map(Long.box).orNull)))
@@ -812,7 +810,8 @@ object DeltaWrite {
     import scala.concurrent.duration._
     Await.result(
       Future.sequence(moved.toSeq.map { case (relPath, target, len) =>
-        Future(DeltaLog.AddEntry(relPath, len, DataSkipping.statsJson(conf, target)))
+        Future(DeltaLog.AddEntry(relPath, len, DataSkipping.statsJson(conf, target),
+          partitionValues = partitionValuesMap(relPath)))
       }), 10.minutes)
   }
 
@@ -840,7 +839,11 @@ object DeltaWrite {
       dvNode.put("sizeInBytes", d.sizeInBytes).put("cardinality", d.cardinality)
       add.set[ObjectNode]("deletionVector", dvNode)
     }
-    add.set[ObjectNode]("partitionValues", partitionValuesOf(a.path))
+    val pv = add.putObject("partitionValues")
+    a.partitionValues.toSeq.sortBy(_._1).foreach {
+      case (k, null) => pv.putNull(k)
+      case (k, v) => pv.put(k, v)
+    }
     n.set[ObjectNode]("add", add)
     n
   }
@@ -903,8 +906,7 @@ object DeltaWrite {
         staged = writeDataFiles(df, tablePath,
           snap.map(_.partitionColumns).getOrElse(partitionBy),
           snap.filter(_.columnMappingMode != "none").map(_.schema))
-        snap.foreach(s => DeltaConstraints.enforceStaged(
-          spark, tablePath, staged, s.schema, s.configuration))
+        snap.foreach(s => DeltaConstraints.enforceStaged(spark, s, staged))
       }
       val actions =
         (if (exists) Seq.empty
@@ -933,19 +935,17 @@ object DeltaWrite {
     n
   }
 
-  /** Recover `col=value` partition values from a hive-style relative
-    * path, as the protocol requires them recorded on every `add`. */
-  private def partitionValuesOf(relPath: String): ObjectNode = {
-    val pv = mapper.createObjectNode()
-    partitionValuesMap(relPath).foreach { case (k, v) => pv.put(k, v) }
-    pv
-  }
-
-  private def partitionValuesMap(relPath: String): Map[String, String] =
+  /** The partition values of a file this engine (or CONVERT, over a
+    * hive layout) just named `col=value/…/part-….parquet`, as
+    * `add.partitionValues` records them: Spark's null directory
+    * (`__HIVE_DEFAULT_PARTITION__`) is a null value. Every later reader
+    * and writer takes them from the log entry, never from the path. */
+  private[sources] def partitionValuesMap(relPath: String): Map[String, String] =
     relPath.split("/").dropRight(1).flatMap(_.split("=", 2) match {
       case Array(k, v) => Some(
         java.net.URLDecoder.decode(k, "UTF-8") ->
-          java.net.URLDecoder.decode(v, "UTF-8"))
+          (if (v == "__HIVE_DEFAULT_PARTITION__") null
+           else java.net.URLDecoder.decode(v, "UTF-8")))
       case _ => None
     }).toMap
 

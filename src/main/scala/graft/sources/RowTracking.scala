@@ -153,17 +153,9 @@ object RowTracking {
   def readWithRowIds(spark: SparkSession, tablePath: String,
       versionAsOf: Option[Long] = None): DataFrame = {
     val snap = DeltaLog.snapshot(spark, tablePath, versionAsOf)
-    val scan = DeltaLog.scanFilesWithMeta(spark, snap, snap.filePaths)
-    val hconf = spark.sessionState.newHadoopConf()
-    def canon(p: String): String = {
-      val hp = new Path(p)
-      hp.getFileSystem(hconf).makeQualified(hp).toString
-    }
-    val fileIds: Seq[Row] = snap.files.map { a =>
-      val abs = new Path(snap.tablePath,
-        java.net.URLDecoder.decode(a.path, "UTF-8")).toString
-      Row(canon(abs),
-        a.baseRowId.map(Long.box).orNull,
+    val scan = DeltaLog.scanFilesWithMeta(spark, snap, snap.files)
+    val fileIds: Seq[Row] = DeltaLog.liveFiles(spark, snap).byUri.toSeq.map {
+      case (uri, a) => Row(uri, a.baseRowId.map(Long.box).orNull,
         a.defaultRowCommitVersion.map(Long.box).orNull)
     }
     val idsSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -165,9 +165,6 @@ final class UnityCatalogResolver(
       val info = client.getTableInfo(ref)
       val cred = client.generateTempCredentials(info.tableId)
       AzureCredentials.installSas(spark, cred.storageAccountName, cred.sasToken)
-      val path = locate(cred)
-      if (graft.sources.DeltaLog.isDeltaTable(spark, path))
-        graft.sources.DeltaLog.read(spark, path)
-      else spark.read.parquet(path)
+      DeltaLog.readTableOrParquet(spark, locate(cred))
     }
 }

@@ -21,7 +21,8 @@ import graft.sources.{DeltaCdf, DeltaChanges, DeltaLog}
   *
   * Offsets are Delta VERSIONS (`LongOffset`): a batch is the files
   * added by commits in `(start, end]`, read as one distributed parquet
-  * scan. Version granularity keeps the offset log tiny and replay
+  * scan over the snapshot's file index (the commits' own add
+  * entries). Version granularity keeps the offset log tiny and replay
   * deterministic — a restarted query re-reads exactly the committed
   * version range. Data-changing removes follow the change-feed
   * contract: fail the query unless `ignoreChanges` / `ignoreDeletes`
@@ -120,25 +121,28 @@ class DeltaStreamSource(
       // no longer exist; after OPTIMIZE+VACUUM replay would reference
       // vacuumed files; and under ignoreChanges replay would re-emit
       // rows that were deleted before the stream started.
-      case None => snapTo.filePaths
+      case None => snapTo.files
       case Some(s) =>
         val from = versionOf(s)
         if (to <= from) Nil
         else DeltaChanges.changedFiles(spark, tablePath, from,
           ignoreChanges, ignoreDeletes, toInclusive = Some(to)).addedFiles
     }
+    // Batches read their entries through the snapshot's file index
+    // (sizes and partition values from the log), in the source's
+    // schema. A plain batch IS that relation, flagged streaming — a scan
+    // boundary downstream filters can enter; deletion vectors and column
+    // mapping need the scan's filter and logical projection, so those
+    // batches re-enter the stream as computed frames. An empty tick
+    // builds no snapshot.
     if (files.isEmpty)
-      GraftStreamBridge.streamingParquetBatch(spark, schema, tablePath, Nil)
-    // DV or column-mapped tables must read through the snapshot-aware
-    // scan — a raw parquet read would RESURRECT vectored-out rows in
-    // the bootstrap batch and resolve a mapped table's physical columns
-    // to nulls. The plain path keeps the pushdown-friendly streaming
-    // relation (a scan boundary downstream filters can enter).
-    else if (snapTo.columnMappingMode == "none" &&
-        snapTo.files.forall(_.dv.isEmpty))
-      GraftStreamBridge.streamingParquetBatch(spark, schema, tablePath, files)
+      GraftStreamBridge.streamingFromBatch(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
+    else if (snapTo.columnMappingMode == "none" && files.forall(_.dv.isEmpty))
+      GraftStreamBridge.streamingRelation(spark,
+        DeltaLog.fileRelation(spark, snapTo.copy(schema = schema), files))
     else GraftStreamBridge.streamingFromBatch(
-      DeltaLog.readFiles(spark, snapTo, files)
+      DeltaLog.scanFiles(spark, snapTo, files)
         .select(schema.fieldNames.toIndexedSeq.map(
           org.apache.spark.sql.functions.col): _*))
   }
@@ -204,7 +208,9 @@ class DeltaStreamSink(
   *   - batch: `spark.read.format("graft-delta").load(path)` (options
   *     `versionAsOf` / `timestampAsOf` for time travel) through
   *     [[graft.sources.DeltaBatchRelation]] — pushed filters visible on
-  *     the scan node, DV/mapping/skipping underneath; and
+  *     the scan node, and underneath them the one Delta read path
+  *     (`DeltaLog.readWhere`: the snapshot's file index, deletion
+  *     vectors, column mapping, file skipping); and
   *     `df.write.format("graft-delta").mode(...).save(path)` (option
   *     `partitionBy` comma-separated) through [[DeltaWrite.write]];
   *   - streaming: `readStream`/`writeStream`. Source options: `path`

@@ -1,7 +1,6 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.execution.datasources.{DataSource, LogicalRelation}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 
 /** Bridge to the `private[sql]` pieces a V1 streaming Source needs (same
   * pattern as [[GraftColumnBridge]]): the micro-batch DataFrame a
@@ -38,26 +37,9 @@ object GraftStreamBridge {
       isStreaming = true)
   }
 
-  /** A batch DataFrame over explicit parquet files, flagged streaming.
-    * `basePath` keeps hive-style partition columns resolvable when the
-    * file list is a subset of the table tree. Empty file list → empty
-    * streaming batch with the right schema. */
-  def streamingParquetBatch(spark: SparkSession, schema: StructType,
-      basePath: String, files: Seq[String]): DataFrame = {
-    val cs = spark.asInstanceOf[classic.SparkSession]
-    if (files.isEmpty) {
-      cs.internalCreateDataFrame(
-        cs.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
-        schema, isStreaming = true)
-    } else {
-      val relation = DataSource(
-        sparkSession = cs,
-        className = "parquet",
-        paths = files,
-        userSpecifiedSchema = Some(schema),
-        options = Map("basePath" -> basePath)
-      ).resolveRelation(checkFilesExist = false)
-      classic.Dataset.ofRows(cs, LogicalRelation(relation, isStreaming = true))
-    }
-  }
+  /** A batch relation (a file scan) as a DataFrame flagged streaming. */
+  def streamingRelation(spark: SparkSession,
+      relation: org.apache.spark.sql.sources.BaseRelation): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],
+      LogicalRelation(relation, isStreaming = true))
 }

@@ -176,8 +176,13 @@ class DeltaSnapshotCacheSpec extends AnyFunSuite {
     DeltaWrite.write(Seq((5, 5.0)).toDF("id", "v"), t, SaveMode.Append)
     val (snap, jobs) = jobsDuring(DeltaLog.snapshot(spark, t))
     assert(jobs == 0)
-    val (ref, coldJobs) = jobsDuring(cold(t))
-    assert(coldJobs > 0, "the cold replay reads the checkpoint with Spark")
+    // the copy's replay bootstraps cold (from the checkpoint, read on
+    // the driver): the cold-replay counter moves by exactly one, which
+    // a cache answer would not do
+    val coldBefore = DeltaLog.coldReplays.get
+    val ref = cold(t)
+    assert(DeltaLog.coldReplays.get == coldBefore + 1,
+      "the copy's replay must be cold, not a cache answer")
     assertSame(snap, ref, "after commit 5")
     assert(ids(t) == Set(2, 3, 4, 5))
   }

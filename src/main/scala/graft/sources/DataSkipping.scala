@@ -211,18 +211,20 @@ object DataSkipping {
     def constant(a: AttributeReference, e: Expression): Option[Any] =
       if (!e.foldable || e.dataType != a.dataType) None
       else scala.util.Try(e.eval()).toOption.filter(_ != null)
-    // a null value, an unordered type or a missing bound keeps the file
+    // a null value, an unordered type or a missing bound keeps the file,
+    // and so do inverted bounds (min > max: string stats logged before
+    // the UTF-8 merge order was fixed can record them)
     def holds(a: AttributeReference, op: String, v: Any): Boolean =
       v == null || scala.util.Try {
         val s = stats(a.name, a.dataType)
         lazy val ord = TypeUtils.getInterpretedOrdering(a.dataType)
-        op match {
+        s.min.zip(s.max).exists { case (mn, mx) => ord.gt(mn, mx) } || (op match {
           case "=" => s.min.forall(ord.lteq(_, v)) && s.max.forall(ord.gteq(_, v))
           case "<" => s.min.forall(ord.lt(_, v))
           case "<=" => s.min.forall(ord.lteq(_, v))
           case ">" => s.max.forall(ord.gt(_, v))
           case ">=" => s.max.forall(ord.gteq(_, v))
-        }
+        })
       }.getOrElse(true)
     def compare(op: String, mirrored: String, l: Expression, r: Expression): Boolean =
       (l, r) match {

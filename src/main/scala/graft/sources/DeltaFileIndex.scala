@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference,
+  Cast, EvalMode, Expression, Literal, Predicate, PredicateHelper, SubqueryExpression}
 import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -13,9 +14,8 @@ import DeltaLog.AddEntry
   * it by (qualified path, length from `add.size`), so building a scan
   * lists and stats nothing. Partition values come from
   * `add.partitionValues`, typed by the snapshot schema — the file
-  * layout, hive directories or not, never matters. `listFiles` keeps
-  * the files the one skipping evaluator ([[DataSkipping.mightMatch]])
-  * cannot rule out for the scan's pushed filters, in driver memory.
+  * layout, hive directories or not, never matters. `listFiles` prunes
+  * in driver memory ([[DeltaFileIndex.pruner]]).
   *
   * `partitionSchema` holds the PHYSICAL partition fields (the names
   * `add.partitionValues` and the relation's filters use). */
@@ -34,17 +34,15 @@ private[sources] final class DeltaFileIndex(tablePath: String,
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val filters = partitionFilters ++ dataFilters
+    val prune = DeltaFileIndex.pruner(partitionSchema, timeZone,
+      partitionFilters ++ dataFilters)
     files.flatMap { case (a, status) =>
-      val values = DeltaFileIndex.partitionRow(a, partitionSchema, timeZone)
-      if (DeltaFileIndex.keeps(a, partitionSchema, values, filters, identity))
-        Some(PartitionDirectory(values, Seq(FileStatusWithMetadata(status))))
-      else None
+      prune(a).map(values => PartitionDirectory(values, Seq(FileStatusWithMetadata(status))))
     }
   }
 }
 
-private[sources] object DeltaFileIndex {
+private[sources] object DeltaFileIndex extends PredicateHelper {
 
   /** `a`'s partition values in `partitionSchema` order, cast from the
     * log's strings with the session time zone. A null value — or the
@@ -59,21 +57,38 @@ private[sources] object DeltaFileIndex {
         .orNull
     })
 
-  /** Whether `a`, whose typed partition values are `values`, might hold
-    * a row satisfying every one of `filters`; `physical` maps a filter's
-    * column name to the name the log records it under. A partition
-    * column's value is its min and max (a null value records nothing);
-    * any other column reads the entry's stats. */
-  def keeps(a: AddEntry, partitionSchema: StructType, values: InternalRow,
-      filters: Seq[Expression], physical: String => String): Boolean = {
-    def stats(name: String, dt: DataType): DataSkipping.ColumnStats =
-      partitionSchema.fieldNames.indexOf(physical(name)) match {
-        case -1 => DataSkipping.columnStats(a.parsedStats, physical(name), dt)
-        case i if values.isNullAt(i) => DataSkipping.ColumnStats()
-        case i =>
-          val v = values.get(i, dt)
-          DataSkipping.ColumnStats(Some(v), Some(v), Some(0L))
-      }
-    filters.forall(DataSkipping.mightMatch(_, stats))
+  /** Which entries a scan filtered by `filters` (resolved against the
+    * relation's PHYSICAL attributes) reads: an entry's typed partition
+    * row when it might hold a matching row, None when it cannot. A
+    * deterministic conjunct over partition columns alone is evaluated
+    * EXACTLY on that row, as Spark's own partitioned file indexes do —
+    * the scan drops such filters from the Filter above it, so this is
+    * the only place they run. Every other conjunct goes to the skipping
+    * evaluator ([[DataSkipping.mightMatch]]), which reads a partition
+    * column's value as its min and max and any other column's stats. */
+  def pruner(partitionSchema: StructType, timeZone: String,
+      filters: Seq[Expression]): AddEntry => Option[InternalRow] = {
+    val names = partitionSchema.fieldNames
+    val (exact, skipping) = filters.flatMap(splitConjunctivePredicates).partition(f =>
+      f.deterministic && !SubqueryExpression.hasSubquery(f) && f.references.nonEmpty &&
+        f.references.forall(r => names.contains(r.name)))
+    val onPartitions = Predicate.createInterpreted(
+      exact.reduceOption(And).getOrElse(Literal.TrueLiteral).transform {
+        case r: AttributeReference => BoundReference(names.indexOf(r.name), r.dataType, true)
+      })
+    a => {
+      val values = partitionRow(a, partitionSchema, timeZone)
+      def stats(name: String, dt: DataType) =
+        names.indexOf(name) match {
+          case -1 => DataSkipping.columnStats(a.parsedStats, name, dt)
+          case i if values.isNullAt(i) => DataSkipping.ColumnStats()
+          case i =>
+            val v = values.get(i, dt)
+            DataSkipping.ColumnStats(Some(v), Some(v), Some(0L))
+        }
+      if (onPartitions.eval(values) && skipping.forall(DataSkipping.mightMatch(_, stats)))
+        Some(values)
+      else None
+    }
   }
 }

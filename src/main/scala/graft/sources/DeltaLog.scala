@@ -7,8 +7,8 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.Filter
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.catalyst.planning.PhysicalOperation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{DataType, StructType}
@@ -143,8 +143,8 @@ object DeltaLog {
     * deletion vectors applied: [[scanFilesWithMeta]] without its
     * provenance columns. */
   private[graft] def scanFiles(spark: SparkSession, snap: Snapshot,
-      files: Seq[AddEntry]): DataFrame =
-    scanFilesWithMeta(spark, snap, files).select(
+      files: Seq[AddEntry], streaming: Boolean = false): DataFrame =
+    scanFilesWithMeta(spark, snap, files, streaming).select(
       snap.schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")): _*)
 
   /** The ONE way any table file is scanned (read, readWhere, DML, MERGE,
@@ -160,15 +160,20 @@ object DeltaLog {
     * carrying a deletion vector are filtered against it inside the task
     * that reads them ([[DvFilter]]) — positions never transit the
     * driver, and no join, shuffle or broadcast job is added; rows of
-    * other files pass the guard without touching the filter. */
+    * other files pass the guard without touching the filter. With
+    * `streaming` the relation is flagged streaming, as a streaming
+    * source's micro-batch must be. */
   private[sources] def scanFilesWithMeta(spark: SparkSession, snap: Snapshot,
-      files: Seq[AddEntry]): DataFrame = {
+      files: Seq[AddEntry], streaming: Boolean = false): DataFrame = {
     val relation = fileRelation(spark, snap, files)
     val logical = relation.dataSchema.fields.zip(snap.schema.fields).map {
       case (p, l) if p.name == l.name => col(s"`${l.name}`")
       case (p, l) => col(s"`${p.name}`").as(l.name)
     }.toIndexedSeq
-    val withMeta = spark.baseRelationToDataFrame(relation).select(logical ++ Seq(
+    val scan =
+      if (streaming) org.apache.spark.sql.GraftStreamBridge.streamingRelation(spark, relation)
+      else spark.baseRelationToDataFrame(relation)
+    val withMeta = scan.select(logical ++ Seq(
       col("_metadata.file_path").as("__file"),
       col("_metadata.row_index").as("__pos")): _*)
     lazy val conf = spark.sessionState.newHadoopConf()
@@ -192,7 +197,7 @@ object DeltaLog {
     * of their entries, in the table's PHYSICAL schema (identity when
     * unmapped; under id mode each field carries its `parquet.field.id`).
     * Its partition fields take their place in the schema's own order. */
-  private[graft] def fileRelation(spark: SparkSession, snap: Snapshot,
+  private def fileRelation(spark: SparkSession, snap: Snapshot,
       files: Seq[AddEntry]): HadoopFsRelation = {
     val mode = snap.columnMappingMode
     if (mode != "none" && mode != "name" && mode != "id")
@@ -838,26 +843,26 @@ object DeltaLog {
   }
 
   /** [[read]] with the file skipping done EAGERLY: `condition` is
-    * resolved against the index relation (analysis only, no job), the
-    * skipping evaluator drops the files whose stats or partition values
-    * provably cannot satisfy it, and the relation is built on the files
-    * it keeps — so the frame's `inputFiles` names only those. The full
-    * predicate still filters the surviving rows (pruning is an I/O
-    * optimization, not a correctness dependency — files without stats
-    * always scan). At 100 TB this is the difference between opening the
-    * three files whose [min,max] straddle a point predicate and opening
-    * the table. */
+    * resolved against the index relation's physical columns (analysis
+    * only, no job), the index's own pruning
+    * ([[DeltaFileIndex.pruner]]) drops the files whose partition values
+    * or stats provably cannot satisfy it, and the relation is built on
+    * the files it keeps — so the frame's `inputFiles` names only those.
+    * The full predicate still filters the surviving rows (stats pruning
+    * is an I/O optimization, not a correctness dependency — files
+    * without stats always scan). At 100 TB this is the difference
+    * between opening the three files whose [min,max] straddle a point
+    * predicate and opening the table. */
   def readWhere(spark: SparkSession, tablePath: String, condition: Column,
       versionAsOf: Option[Long] = None): DataFrame = {
     val snap = snapshot(spark, tablePath, versionAsOf)
-    val resolved = scanFiles(spark, snap, Nil).where(condition)
-      .queryExecution.analyzed.collectFirst { case f: Filter => f.condition }.toSeq
-    val relation = fileRelation(spark, snap, Nil)
-    val physical = snap.schema.fieldNames.zip(relation.dataSchema.fieldNames).toMap
-    val kept = snap.files.filter(a => DeltaFileIndex.keeps(a, relation.partitionSchema,
-      DeltaFileIndex.partitionRow(a, relation.partitionSchema,
-        spark.sessionState.conf.sessionLocalTimeZone),
-      resolved, n => physical.getOrElse(n, n)))
+    val kept = scanFiles(spark, snap, Nil).where(condition).queryExecution.analyzed match {
+      case PhysicalOperation(_, filters, LogicalRelation(r: HadoopFsRelation, _, _, _, _)) =>
+        val prune = DeltaFileIndex.pruner(r.partitionSchema,
+          spark.sessionState.conf.sessionLocalTimeZone, filters)
+        snap.files.filter(prune(_).isDefined)
+      case _ => snap.files
+    }
     scanFiles(spark, snap, kept).where(condition)
   }
 

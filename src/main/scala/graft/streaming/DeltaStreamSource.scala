@@ -128,23 +128,15 @@ class DeltaStreamSource(
         else DeltaChanges.changedFiles(spark, tablePath, from,
           ignoreChanges, ignoreDeletes, toInclusive = Some(to)).addedFiles
     }
-    // Batches read their entries through the snapshot's file index
-    // (sizes and partition values from the log), in the source's
-    // schema. A plain batch IS that relation, flagged streaming — a scan
-    // boundary downstream filters can enter; deletion vectors and column
-    // mapping need the scan's filter and logical projection, so those
-    // batches re-enter the stream as computed frames. An empty tick
-    // builds no snapshot.
+    // Batches are the table's one scan over the snapshot's file index
+    // (sizes and partition values from the log, deletion vectors and
+    // column mapping applied) in the source's schema, its relation
+    // flagged streaming — a scan boundary downstream filters can enter.
+    // An empty tick builds no snapshot.
     if (files.isEmpty)
       GraftStreamBridge.streamingFromBatch(spark.createDataFrame(
         java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema))
-    else if (snapTo.columnMappingMode == "none" && files.forall(_.dv.isEmpty))
-      GraftStreamBridge.streamingRelation(spark,
-        DeltaLog.fileRelation(spark, snapTo.copy(schema = schema), files))
-    else GraftStreamBridge.streamingFromBatch(
-      DeltaLog.scanFiles(spark, snapTo, files)
-        .select(schema.fieldNames.toIndexedSeq.map(
-          org.apache.spark.sql.functions.col): _*))
+    else DeltaLog.scanFiles(spark, snapTo.copy(schema = schema), files, streaming = true)
   }
 
   /** CDF micro-batch: the initial batch is the snapshot's live rows as

@@ -37,7 +37,8 @@ object GraftStreamBridge {
       isStreaming = true)
   }
 
-  /** A batch relation (a file scan) as a DataFrame flagged streaming. */
+  /** A batch relation (a Delta table's file scan) as a DataFrame flagged
+    * streaming: the plan of a streaming source's micro-batch. */
   def streamingRelation(spark: SparkSession,
       relation: org.apache.spark.sql.sources.BaseRelation): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession],

@@ -3,6 +3,10 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.node.ObjectNode
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -133,5 +137,40 @@ class DeltaFileIndexSpec extends AnyFunSuite {
     assert(DeltaLog.readWhere(spark, t, col("s") === astral).count() == 200)
     assert(DeltaLog.read(spark, t).where(col("s") > bmp).count() == 200)
     assert(DeltaLog.read(spark, t).where(col("s") < astral).count() == 200)
+  }
+
+  test("a file whose add.stats bounds are inverted (min > max) is kept") {
+    import spark.implicits._
+    val written = Files.createTempDirectory("graft-file-index").resolve("w")
+    DeltaWrite.write(Seq((1, "a"), (2, "m"), (3, "z")).toDF("id", "s").coalesce(1),
+      written.toString)
+    // a byte copy whose commit records min "z" and max "a" for s
+    val t = Files.createTempDirectory("graft-file-index").resolve("t")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val walk = Files.walk(written)
+    try walk.iterator().asScala.filter(Files.isRegularFile(_)).foreach { p =>
+      val rel = written.relativize(p).toString
+      val dst = t.resolve(rel)
+      Files.createDirectories(dst.getParent)
+      if (rel.endsWith(".crc")) ()
+      else if (rel.startsWith("_delta_log/") && rel.endsWith(".json"))
+        Files.write(dst, Files.readAllLines(p).asScala.map { line =>
+          val node = mapper.readTree(line)
+          Option(node.get("add")).foreach { add =>
+            val stats = mapper.readTree(add.get("stats").asText)
+            stats.get("minValues").asInstanceOf[ObjectNode].put("s", "z")
+            stats.get("maxValues").asInstanceOf[ObjectNode].put("s", "a")
+            add.asInstanceOf[ObjectNode].put("stats", mapper.writeValueAsString(stats))
+          }
+          mapper.writeValueAsString(node)
+        }.asJava)
+      else Files.copy(p, dst)
+    } finally walk.close()
+    val stats = DeltaLog.snapshot(spark, t.toString).files.flatMap(_.stats)
+    assert(stats.size == 1 && stats.head.contains("\"minValues\":{\"id\":1,\"s\":\"z\""),
+      stats.mkString)
+    assert(DeltaLog.readWhere(spark, t.toString, col("s") === "m")
+      .select("id").as[Int].collect().toSeq == Seq(2))
+    assert(DeltaLog.read(spark, t.toString).where(col("s") === "m").count() == 1)
   }
 }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.{DeltaLog, DeltaWrite}
+import graft.sources.{DeltaDml, DeltaDv, DeltaLog, DeltaMaintenance, DeltaWrite}
 
 /** Partition values come from `add.partitionValues`, never from the
   * file layout: a partitioned table whose files do not sit in hive
@@ -90,5 +90,47 @@ class DeltaPartitionValuesSpec extends AnyFunSuite {
       snap.files.map(a => a.path -> a.partitionValues).toSet)
     assert(DeltaLog.read(spark, copy.toString).as[(Int, Int)].collect().sorted.toSeq ==
       rows.sorted)
+  }
+
+  /** 30 rows (id, p) with p = id % 3, except p is null where id % 5 = 0,
+    * written partitioned on p. */
+  private def withNulls(): (String, Seq[(Int, Option[Int])]) = {
+    val t = tmpDir().resolve("t").toString
+    val rows = (0 until 30).map(i => (i, if (i % 5 == 0) None else Some(i % 3)))
+    DeltaWrite.write(rows.toDF("id", "p"), t, partitionBy = Seq("p"))
+    (t, rows)
+  }
+
+  test("partition predicates the stats cannot model still filter rows " +
+    "exactly: <>, NOT, arithmetic, LIKE over a cast, null partitions") {
+    val (t, rows) = withNulls()
+    def ids(df: org.apache.spark.sql.DataFrame): Seq[Int] =
+      df.select("id").as[Int].collect().sorted.toSeq
+    def want(f: Option[Int] => Boolean): Seq[Int] = rows.filter(r => f(r._2)).map(_._1).sorted
+    val cases: Seq[(org.apache.spark.sql.Column, Option[Int] => Boolean)] = Seq(
+      (col("p") =!= 1, _.exists(_ != 1)),
+      (!(col("p") === 1), _.exists(_ != 1)),
+      (col("p") === 1, _.contains(1)),
+      (col("p").isNotNull, _.isDefined),
+      (col("p").isNull, _.isEmpty),
+      (col("p") % 2 === 0, _.exists(_ % 2 == 0)),
+      (col("p").cast("string").like("2%"), _.contains(2)))
+    cases.foreach { case (c, f) =>
+      assert(ids(DeltaLog.read(spark, t).where(c)) == want(f), s"read().where($c)")
+      assert(ids(DeltaLog.readWhere(spark, t, c)) == want(f), s"readWhere($c)")
+    }
+  }
+
+  test("DELETE WHERE p <> 1 removes exactly the other partitions, " +
+    "copy-on-write and with deletion vectors") {
+    Seq(false, true).foreach { dv =>
+      val (t, rows) = withNulls()
+      if (dv) DeltaMaintenance.setTblProperties(spark, t, Map(DeltaDv.Property -> "true"))
+      val res = DeltaDml.delete(spark, t, col("p") =!= 1)
+      val hit = rows.count(_._2.exists(_ != 1))
+      assert(res.affectedRows == hit, s"dv=$dv")
+      assert(DeltaLog.read(spark, t).select("id").as[Int].collect().sorted.toSeq ==
+        rows.filterNot(_._2.exists(_ != 1)).map(_._1).sorted, s"dv=$dv")
+    }
   }
 }
